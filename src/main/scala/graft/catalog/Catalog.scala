@@ -1,7 +1,10 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.schema.{Collections, CollectionSpec}
 
@@ -40,10 +43,9 @@ object Catalog {
     existing.unionByName(newStreams(existing, incoming, spec))
 
   /** Just the genuinely-new streams of a batch, with ids assigned above the
-    * existing maximum — the incremental-dimension-append building block:
-    * the ingest hot path appends ONLY these rows (O(|new|) per batch)
-    * instead of rewriting the dimension (O(|dimension|), and it collected
-    * the whole table to the driver first).
+    * existing maximum — distributed, for bulk registration of frames that
+    * need not fit on the driver. The ingest hot path allocates the same
+    * ids on the driver instead ([[allocateStreams]]).
     */
   def newStreams(
       existing: DataFrame,
@@ -63,6 +65,39 @@ object Catalog {
       .assignSequential(fresh, keys, maxId.toLong, "stream_id")
       .withColumn("stream_id", col("stream_id").cast("int"))
       .select(existing.columns.toIndexedSeq.map(col): _*)
+  }
+
+  /** Driver-side twin of [[newStreams]] for the ingest micro-batch: from
+    * the collected dimension (`known`, rows in `spec.streamSchema` layout)
+    * and a batch's key tuples (`incoming`, `spec.uniqueColumns` order),
+    * the new dimension rows with the ids [[newStreams]] assigns — max id
+    * + 1, … in ascending key order. The order is Spark's own
+    * (catalyst's ordering over the key types), so strings compare as
+    * UTF-8 bytes, not as `String.compareTo`'s UTF-16 units. Runs no
+    * Spark job; the dimension is broadcast to resolve ids anyway, so
+    * collecting it adds no driver bound.
+    *
+    * Tuples with a NULL key are skipped: an equi-join never resolves
+    * them, and the anti-join would register them again on every batch.
+    * Non-key stream columns of a new row are NULL.
+    */
+  def allocateStreams(known: Seq[Row], incoming: Seq[Row], spec: CollectionSpec): Seq[Row] = {
+    val schema = spec.streamSchema
+    val keyIdx = spec.uniqueColumns.map(schema.fieldIndex)
+    val keySchema = StructType(keyIdx.map(schema.fields(_)))
+    val registered = known.map(r => Row.fromSeq(keyIdx.map(r.get))).toSet
+    val maxId = known.map(_.getInt(0)).maxOption.getOrElse(0)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(keySchema)
+    val fresh = incoming.distinct
+      .filterNot(r => r.anyNull || registered(r))
+      .sortBy(r => toCatalyst(r).asInstanceOf[InternalRow])(
+        InterpretedOrdering.forSchema(keySchema.map(_.dataType)))
+    fresh.zipWithIndex.map { case (k, i) =>
+      val values = new Array[Any](schema.length)
+      values(0) = maxId + i + 1
+      keyIdx.zipWithIndex.foreach { case (j, n) => values(j) = k.get(n) }
+      Row.fromSeq(values.toSeq)
+    }
   }
 
   /** Resolve stream ids for result rows by their property tuple (the

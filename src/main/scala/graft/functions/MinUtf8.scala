@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantics are EXACTLY the builtin's: the minimum under UTF8String's
   * binary comparison (the UTF8_BINARY collation — bytewise unsigned,
   * which for valid UTF-8 equals code-point order), nulls skipped, empty
-  * group → null. Pinned against `min(...)` itself in PiiScanFusedSpec.
+  * group → null. Pinned against `min(...)` itself in MinUtf8Spec.
   */
 case class MinUtf8Agg(
     child: Expression,

@@ -508,7 +508,9 @@ private[serve] final class LiveRelay(
   private var gate = Map.empty[(String, Long), Long]
 
   private def ts(r: Row): Long = r.getLong(r.schema.fieldIndex("timestamp"))
-  private def sid(r: Row): Long = r.getLong(r.schema.fieldIndex("stream_id"))
+  // the poller publishes the dimension's INT ids, wire subscriptions carry
+  // LONG ones: read through Number so both widths relay
+  private def sid(r: Row): Long = r.getAs[Number](r.schema.fieldIndex("stream_id")).longValue
 
   /** Stream subscribed + timestamp inside the window. */
   private def admit(rows: Seq[Row]): Seq[Row] =
@@ -518,7 +520,7 @@ private[serve] final class LiveRelay(
       !r.isNullAt(ti) && !r.isNullAt(si) && {
         val t = r.getLong(ti)
         t >= start && (stop == 0 || t <= stop) &&
-          streamLabels.contains(r.getLong(si))
+          streamLabels.contains(sid(r))
       }
     }
 

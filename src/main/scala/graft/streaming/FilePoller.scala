@@ -17,9 +17,22 @@ import graft.schema.CollectionSpec
   *   - `lasttimestamp` / `rejig_ts` window arithmetic → checkpointed file
   *     offsets (a file is consumed exactly once, restart-safe);
   *   - the poll timer → `Trigger.ProcessingTime("30 seconds")`;
-  *   - commit-then-announce → `foreachBatch` (epoch-idempotent ingest
-  *     append, then live fan-out, then the X3 push marker — the same
-  *     ordering as the reference's insert → export_live → export_push).
+  *   - commit-then-announce → `foreachBatch` over
+  *     [[IngestStream.ingestBatch]]: the epoch-idempotent data commit, then
+  *     live fan-out (`onLive`, the LiveBus), then the rollup-tier appends,
+  *     then the X3 push marker — the reference's insert → export_live →
+  *     export_push order, its rollups being continuous queries that run
+  *     outside that path. The marker comes last, after the tiers, so
+  *     "all data <= T delivered" holds for tier reads too.
+  *
+  * The consumers read the committed rows from the pin `ingestBatch` fills
+  * during the data write, and the marker's max timestamp is observed by
+  * that write, so a batch that registers new streams runs at most ten
+  * Spark jobs with one tier (StreamingSpec pins the budget): dimension
+  * read, distinct keys (map stage and result under AQE), dimension
+  * append, the dimension broadcast, the pin's fill (its own stage under
+  * AQE) and the data write, live collect, and the tier's aggregate and
+  * write.
   *
   * At scale the same query shape runs against an object-store landing
   * prefix with thousands of files per trigger; `maxFilesPerTrigger` caps
@@ -85,12 +98,12 @@ object FilePoller {
       rollupExtraCols: Seq[String] = Nil,
       rollupModeCols: Seq[String] = Nil,
       // X3: (collection name, bus) — a marker is published after each
-      // batch commits, carrying the batch's max timestamp
+      // batch's data and tiers commit, carrying the batch's max timestamp
       markers: Option[(String, Markers.MarkerBus)] = None,
       // NNTSC_LIVE over the wire: committed rows are collected and
-      // published as a LiveBatch BEFORE the push marker (the reference's
-      // insert → export_live → export_push order); WireServer relays them
-      // to subscribed sockets
+      // published as a LiveBatch right after the data commit, before the
+      // tier appends and the push marker; WireServer relays them to
+      // subscribed sockets
       liveBus: Option[(String, Markers.LiveBus)] = None,
       // live fan-out: receives the normalized, id-resolved rows that were
       // just committed (exporter.export_live analog)
@@ -109,33 +122,27 @@ object FilePoller {
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // pin the written rows: tiers + live fan-out + marker each act on
-        // this frame, and without the cache every consumer re-runs the
-        // whole ingest plan (source read, dimension reads, anti-join,
-        // normalize) — the double-evaluation class of bug again
-        val written = IngestStream.ingestBatch(
-          decoder(batch, epochId), spec, streamsPath, dataPath, normalize, Some(epochId))
-          .persist()
-        try {
-          rollupTiers.foreach { case (binsize, tierPath) =>
-            RollupStream.appendPartials(
-              written, binsize, rollupValueCol, tierPath, epochId,
-              rollupExtraCols, rollupModeCols)
-          }
-          onLive(written)
-          liveBus.foreach { case (collection, bus) =>
-            // collected on the driver: foreachBatch frames die with their
-            // batch, and the export fan-out is driver-side by construction
-            // (one socket per client) — same shape as the reference exporter
-            val rows = written.collect().toSeq
-            if (rows.nonEmpty) bus.publish(Markers.LiveBatch(collection, rows))
-          }
-          markers.foreach { case (collection, bus) =>
-            val mx = written.agg(max("timestamp")).collect()(0)
-            if (!mx.isNullAt(0))
-              bus.publish(Markers.Marker(collection, mx.getLong(0), epochId))
-          }
-        } finally written.unpersist()
+        IngestStream.ingestBatch(
+          decoder(batch, epochId), spec, streamsPath, dataPath, normalize, Some(epochId),
+          onCommit = { committed =>
+            val written = committed.rows
+            onLive(written)
+            liveBus.foreach { case (collection, bus) =>
+              // collected on the driver: foreachBatch frames die with their
+              // batch, and the export fan-out is driver-side by construction
+              // (one socket per client) — same shape as the reference exporter
+              val rows = written.collect().toSeq
+              if (rows.nonEmpty) bus.publish(Markers.LiveBatch(collection, rows))
+            }
+            rollupTiers.foreach { case (binsize, tierPath) =>
+              RollupStream.appendPartials(
+                written, binsize, rollupValueCol, tierPath, epochId,
+                rollupExtraCols, rollupModeCols)
+            }
+            for ((collection, bus) <- markers; t <- committed.maxTimestamp)
+              bus.publish(Markers.Marker(collection, t, epochId))
+          })
+        ()
       }
       .start()
   }

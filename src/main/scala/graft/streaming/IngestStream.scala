@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -11,14 +13,15 @@ import graft.schema.CollectionSpec
   * RabbitMQ consumer loop (S1, /root/reference/libnntsc/parsers/amp.py:181-273
   * + pikaqueue.py) and its transactional batch-commit contract (X9).
   *
-  * Shape: source stream → per-batch (foreachBatch):
-  *   1. resolve/register streams (X6, database.py:731-787): anti-join the
-  *      batch's property tuples against the streams dimension, allocate ids
-  *      for new tuples, APPEND only those rows (O(|new|) per batch;
-  *      `compactStreams` periodically folds the append files);
-  *   2. normalize rows (the per-collection A15-A17 reductions, applied by
+  * Shape: source stream → per-batch (foreachBatch, [[ingestBatch]]):
+  *   1. normalize rows (the per-collection A15-A17 reductions, applied by
   *      the caller's `normalize` function);
-  *   3. append to the partitioned data table.
+  *   2. resolve/register streams (X6, database.py:731-787) from the
+  *      normalized tuples: collect the streams dimension, allocate ids for
+  *      new tuples on the driver, APPEND only those rows (O(|new|) per
+  *      batch; `compactStreams` periodically folds the append files);
+  *   3. append to the partitioned data table, then hand the committed rows
+  *      to the caller's consumers.
   *
   * Exactly-once: checkpointed offsets + idempotent epoch-keyed appends
   * replace the reference's commit+ack (at-least-once with redelivery,
@@ -29,9 +32,9 @@ import graft.schema.CollectionSpec
   * at-least-once delivery to effective exactly-once. `commitfreq`-style
   * batching maps to the micro-batch trigger.
   *
-  * The streams dimension rewrite is convergent rather than idempotent: a
-  * replayed batch anti-joins against the already-registered tuples and
-  * registers nothing new, so replay cannot duplicate or re-id streams.
+  * The streams dimension append is convergent rather than idempotent: a
+  * replayed batch finds its tuples already registered and registers
+  * nothing new, so replay cannot duplicate or re-id streams.
   *
   * The RRD file scraper (S2, parsers/rrd.py:107-238) is the same shape with
   * a file source: `spark.readStream.schema(…).parquet/csv(dir)` +
@@ -139,11 +142,12 @@ object IngestStream {
       case None =>
         streamRootFiles(path).map(_.getPath)
     }
+    // the declared schema spares a footer-inference job per read; an
+    // empty dimension is a local relation, so collecting it runs no job
     if (paths.nonEmpty)
-      spark.read.parquet(paths: _*)
+      spark.read.schema(spec.streamSchema).parquet(paths: _*)
     else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spec.streamSchema)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), spec.streamSchema)
   }
 
   /** S1 message decoding — the reference's consumer parses AMP result
@@ -504,27 +508,6 @@ object IngestStream {
     * by parquet readers, so a plain name with a `__` prefix convention). */
   val EpochCol = "__epoch"
 
-  /** Append ONLY a batch's new streams to the dimension — O(|new|) per
-    * batch, fully distributed (no driver collect: the write appends new
-    * files without touching the existing ones, so reading `path` inside
-    * the same plan is safe — the old full-rewrite had to collect first
-    * precisely because it overwrote the files it was reading).
-    *
-    * Replay-safe by convergence: a replayed batch anti-joins against the
-    * already-appended tuples and produces nothing. One small file per
-    * stream-registering batch accumulates; `compactStreams` folds them.
-    */
-  private def appendStreams(fresh: DataFrame, path: String): Unit = {
-    // pin before the emptiness probe: isEmpty and the write would
-    // otherwise each run the anti-join + id assignment (two jobs per
-    // micro-batch on the hot path); the frame is O(|new|) — tiny
-    val pinned = fresh.persist()
-    try {
-      if (!pinned.isEmpty)
-        pinned.coalesce(1).write.mode("append").parquet(path)
-    } finally pinned.unpersist()
-  }
-
   /** Fold the dimension's per-batch append files into one generation —
     * periodic maintenance (run alongside `compactToLayout`), collect-free.
     * RENAME-FREE (see the generation-protocol scaladoc above readStreams):
@@ -622,6 +605,12 @@ object IngestStream {
       }
       .start()
 
+  /** A committed batch as its consumers see it: the written rows, pinned
+    * for the duration of the callback only, and their max timestamp (None
+    * for an empty batch), observed by the data write itself.
+    */
+  final case class Committed(rows: DataFrame, maxTimestamp: Option[Long])
+
   /** One transactional micro-batch (also callable on static frames for
     * backfill, where `epoch = None` falls back to a plain append).
     *
@@ -629,8 +618,19 @@ object IngestStream {
     * `__epoch=<id>/` and `partitionOverwriteMode=dynamic` replaces exactly
     * that partition on replay, leaving every other epoch untouched.
     *
-    * Returns the normalized, stream-id-resolved rows that were written
-    * (callers fan them out live / derive push markers).
+    * One pass: the batch is normalized once and registered from its
+    * NORMALIZED tuples (a normalizer may rewrite key columns, e.g.
+    * `Normalizers.external` fills a missing destination); the dimension is
+    * read once and collected; new ids are allocated on the driver
+    * ([[Catalog.allocateStreams]]) and appended in one write; rows resolve
+    * against the local dimension. The resolved frame is pinned before the
+    * data write, so the write fills the cache and `onCommit` — called
+    * after the data commit, inside the pin — reads it without re-running
+    * the ingest plan. The pin is released before returning.
+    *
+    * Returns the normalized, stream-id-resolved rows that were written,
+    * unpinned (a re-evaluation resolves to the same ids: the dimension it
+    * joins is the local one).
     */
   def ingestBatch(
       batch: DataFrame,
@@ -638,29 +638,39 @@ object IngestStream {
       streamsPath: String,
       dataPath: String,
       normalize: DataFrame => DataFrame,
-      epoch: Option[Long] = None): DataFrame = {
+      epoch: Option[Long] = None,
+      onCommit: Committed => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
-    val existing = readStreams(spark, streamsPath, spec)
-    // incremental registration: append only the anti-join's fresh rows
-    // (O(|new|)); the full-dimension collect+rewrite is gone from the hot
-    // path (it cost O(|dimension|) per micro-batch)
-    appendStreams(Catalog.newStreams(existing, batch, spec), streamsPath)
-    val streams = readStreams(spark, streamsPath, spec)
-    val resolved = Catalog.resolveStreamIds(normalize(batch), streams, spec)
+    val rows = normalize(batch)
+    val known = readStreams(spark, streamsPath, spec).collect().toSeq
+    val fresh = Catalog.allocateStreams(
+      known, rows.select(spec.uniqueColumns.map(col): _*).distinct().collect().toSeq, spec)
+    // one small file per registering batch; `compactStreams` folds them
+    if (fresh.nonEmpty)
+      spark.createDataFrame(fresh.asJava, spec.streamSchema)
+        .coalesce(1).write.mode("append").parquet(streamsPath)
+    val streams = spark.createDataFrame((known ++ fresh).asJava, spec.streamSchema)
+    val resolved = Catalog.resolveStreamIds(rows, streams, spec)
     val dataCols = spec.dataSchema.fieldNames.filter(resolved.columns.contains)
-    val out = resolved.select(dataCols.toIndexedSeq.map(col): _*)
-    epoch match {
-      case Some(id) =>
-        out
-          .withColumn(EpochCol, lit(id))
-          .write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(EpochCol)
-          .parquet(dataPath)
-      case None =>
-        out.write.mode("append").parquet(dataPath)
-    }
+    val out = resolved.select(dataCols.toIndexedSeq.map(col): _*).persist()
+    try {
+      val written = Observation()
+      val observed = out.observe(written, max("timestamp").as("mx"))
+      epoch match {
+        case Some(id) =>
+          observed
+            .withColumn(EpochCol, lit(id))
+            .write
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(EpochCol)
+            .parquet(dataPath)
+        case None =>
+          observed.write.mode("append").parquet(dataPath)
+      }
+      val mx = written.get("mx")
+      onCommit(Committed(out, Option(mx).map(_.asInstanceOf[Long])))
+    } finally out.unpersist()
     out
   }
 }

@@ -70,6 +70,34 @@ class CatalogSpec extends SparkSpec {
     assert(again === got)
   }
 
+  test("allocateStreams: driver ids equal newStreams' (known, new, duplicate, UTF-8 order)") {
+    val spec = Collections.ampExternal
+    val existing = Seq((1, "s1", "d1", "cmd"), (2, "b", "d", "cmd"))
+      .toDF("stream_id", "source", "destination", "command")
+    val incoming = Seq(
+      ("s1", "d1", "cmd"),  // known
+      ("Ａ", "d", "cmd"),    // U+FF21: first in UTF-8 byte order …
+      ("😀", "d", "cmd"),   // … though String.compareTo puts the surrogate pair first
+      ("Ａ", "d", "cmd"),    // duplicate within the batch
+      ("a", "d", "cmd"),
+      ("s1", "d2", "cmd"))
+      .toDF("source", "destination", "command")
+    assert("Ａ".compareTo("😀") > 0)
+    val distributed = Catalog.newStreams(existing, incoming, spec).collect().map(_.toSeq).toSet
+    val known = existing.collect().toSeq
+    val fresh = Catalog.allocateStreams(known, incoming.collect().toSeq, spec)
+    assert(fresh.map(_.toSeq).toSet === distributed)
+    assert(fresh.map(r => r.getString(1) -> r.getInt(0)) ===
+      Seq("a" -> 3, "s1" -> 4, "Ａ" -> 5, "😀" -> 6))
+    // a replay against the grown dimension registers nothing
+    assert(Catalog.allocateStreams(known ++ fresh, incoming.collect().toSeq, spec).isEmpty)
+    // an empty dimension allocates from 1, as newStreams does
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), spec.streamSchema)
+    assert(Catalog.allocateStreams(Nil, incoming.collect().toSeq, spec).map(_.toSeq).toSet ===
+      Catalog.newStreams(empty, incoming, spec).collect().map(_.toSeq).toSet)
+  }
+
   test("collectionsTable lists the registry with stable ids") {
     val ct = Catalog.collectionsTable(spark).collect()
     assert(ct.length === 14)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -99,6 +101,114 @@ class StreamingSpec extends SparkSpec {
       spec, s"$dir/streams", s"$dir/data", identity, epoch = Some(2L))
     assert(dim.count() === 4)
     assert(dim.select("stream_id").distinct().count() === 4)
+  }
+
+  test("ingest registers normalized tuples: a missing destination is one stream (s, s, cmd)") {
+    val dir = tmpDir()
+    val spec = Collections.ampExternal
+    def ingest(ts: Long, epoch: Long) = IngestStream.ingestBatch(
+      Seq(RawResult("s1", null, "cmd", ts, ts)).toDF(), spec,
+      s"$dir/streams", s"$dir/data", graft.ingest.Normalizers.external, Some(epoch))
+    def dim = IngestStream.readStreams(spark, s"$dir/streams", spec).collect().map(_.toSeq).toSeq
+    ingest(100L, 0L)
+    val first = dim
+    assert(first === Seq(Seq(1, "s1", "s1", "cmd")))
+    ingest(200L, 1L)
+    assert(dim === first) // the second batch resolves, registers nothing
+    val data = IngestStream.readData(spark, s"$dir/data")
+      .select("stream_id", "timestamp").collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(data.sorted.toSeq === Seq((1, 100L), (1, 200L)))
+  }
+
+  test("stream ids: a micro-batch allocates newStreams' ids; a replay registers nothing") {
+    val dir = tmpDir()
+    val spec = Collections.ampExternal
+    val b0 = Seq(RawResult("s1", "d1", "ping", 100L, 1L)).toDF()
+    val b1 = Seq(
+      RawResult("s1", "d1", "ping", 200L, 2L), // known
+      RawResult("Ａ", "d1", "ping", 200L, 3L),
+      RawResult("😀", "d1", "ping", 200L, 4L),
+      RawResult("Ａ", "d1", "ping", 210L, 5L), // duplicate tuple in the batch
+      RawResult("a", "d1", "ping", 200L, 6L)).toDF()
+    def ingest(b: org.apache.spark.sql.DataFrame, epoch: Long) =
+      IngestStream.ingestBatch(b, spec, s"$dir/streams", s"$dir/data", identity, Some(epoch))
+    def dim = IngestStream.readStreams(spark, s"$dir/streams", spec)
+    def rootFiles = new java.io.File(s"$dir/streams").listFiles()
+      .count(f => f.isFile && f.getName.endsWith(".parquet"))
+    ingest(b0, 0L)
+    val before = dim.collect().toSeq
+    val expected = graft.catalog.Catalog.newStreams(
+      spark.createDataFrame(before.asJava, spec.streamSchema), b1, spec)
+      .collect().map(_.toSeq).toSet
+    ingest(b1, 1L)
+    val after = dim.collect().map(_.toSeq).toSet
+    assert(after === before.map(_.toSeq).toSet ++ expected)
+    assert(after.map(r => r(1) -> r(0)) === Set("s1" -> 1, "a" -> 2, "Ａ" -> 3, "😀" -> 4))
+    val files = rootFiles
+    ingest(b1, 1L) // replay
+    assert(rootFiles === files)
+    assert(dim.collect().map(_.toSeq).toSet === after)
+    assert(IngestStream.readData(spark, s"$dir/data").count() === 6)
+  }
+
+  test("micro-batch contract: <= 10 jobs, no pins left, data before live, tiers before marker") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{FilePoller, Markers}
+    val dir = tmpDir()
+    val spec = Collections.ampExternal
+    val coll = "amp-external"
+    def committed(path: String, epoch: Long): Boolean =
+      Option(new java.io.File(s"$path/${IngestStream.EpochCol}=$epoch").listFiles)
+        .exists(_.exists(_.getName.endsWith(".parquet")))
+    val liveBus = new Markers.LiveBus
+    val markerBus = new Markers.MarkerBus
+    var live = Vector.empty[(Int, Boolean)]
+    var marks = Vector.empty[(Long, Boolean)]
+    liveBus.subscribe(coll) { b =>
+      live :+= ((b.rows.size, committed(s"$dir/data", live.size.toLong)))
+    }
+    markerBus.subscribe(coll) { m =>
+      marks :+= ((m.timestamp, committed(s"$dir/tier60", m.epoch)))
+    }
+    def poll(): Unit = FilePoller.start(
+      spark, s"$dir/in", Seq.empty[RawResult].toDF().schema, spec,
+      s"$dir/streams", s"$dir/data", s"$dir/ckpt",
+      trigger = Trigger.AvailableNow(),
+      rollupTiers = Seq(60L -> s"$dir/tier60"),
+      markers = Some(coll -> markerBus), liveBus = Some(coll -> liveBus))
+      .awaitTermination()
+
+    Seq(RawResult("s1", "d1", "ping", 100L, 1L)).toDF().write.mode("append").parquet(s"$dir/in")
+    poll()
+    // batch 1 mixes a known stream with two new ones; count its jobs
+    Seq(RawResult("s1", "d1", "ping", 160L, 2L), RawResult("s2", "d1", "ping", 170L, 3L),
+      RawResult("s3", "d1", "ping", 180L, 4L))
+      .toDF().write.mode("append").parquet(s"$dir/in")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("graft.spec.sentinel") != null) sentinel.countDown()
+        else if (j.properties.getProperty("streaming.sql.batchId") == "1") jobs.incrementAndGet()
+    }
+    // other suites in this JVM may leave pins of their own: compare sets
+    val pinsBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      poll()
+      // listener events are async and ordered: once the sentinel job is
+      // seen, every job of the batch has been counted
+      sc.setLocalProperty("graft.spec.sentinel", "1")
+      try spark.range(1).collect() finally sc.setLocalProperty("graft.spec.sentinel", null)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 10, s"${jobs.get} jobs in the micro-batch")
+    assert(sc.getPersistentRDDs.keySet === pinsBefore)
+    assert(live === Vector((1, true), (3, true)))
+    assert(marks === Vector((100L, true), (180L, true)))
+    assert(IngestStream.readStreams(spark, s"$dir/streams", spec).count() === 3)
   }
 
   test("rollup stream: windowed partials with watermark (X4)") {

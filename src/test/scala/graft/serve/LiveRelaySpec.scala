@@ -3,7 +3,7 @@ package graft.serve
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Markers
@@ -166,6 +166,29 @@ class LiveRelaySpec extends AnyFunSuite {
     assert(seam.head._1 === Wire.Live &&
       seam.head._2.contains(""""timestamp":1100"""))
     assert(seam.exists { case (t, b) => t === Wire.Push && b.contains("1200") })
+  }
+
+  test("INT stream ids (the poller's dimension type) relay like LONG ones") {
+    val intSchema = StructType(Seq(
+      StructField("stream_id", IntegerType), StructField("timestamp", LongType),
+      StructField("value", DoubleType)))
+    def intRow(sid: Int, ts: Long) =
+      new GenericRowWithSchema(Array[Any](sid, ts, 1.0), intSchema)
+    val sink = new ByteArrayOutputStream()
+    val relay = new LiveRelay(
+      "amp-external", Map("a" -> Seq(1L), "b" -> Seq(2L)),
+      Seq("value"), start = 0L, stop = 0L, new DataOutputStream(sink))
+    // buffered during backfill, released at the seam …
+    relay.onBatch(Markers.LiveBatch("amp-external", Seq(intRow(1, 1100L), intRow(3, 1100L))))
+    relay.finish(Map.empty)
+    // … and passed straight through once live
+    relay.onBatch(Markers.LiveBatch("amp-external", Seq(intRow(2, 1200L))))
+    val out = frames(sink)
+    assert(out.map(_._1) === Seq(Wire.Live, Wire.Live))
+    assert(out(0)._2.contains(""""label":"a"""") && out(0)._2.contains(""""stream_id":1"""))
+    assert(out(1)._2.contains(""""label":"b"""") && out(1)._2.contains(""""stream_id":2"""))
+    assert(!out.exists(_._2.contains(""""stream_id":3"""))) // not subscribed
+    assert(relay.unsubscribe(Seq(1L)) === 1L)
   }
 
   test("unsubscribe mid-backfill drops the stream's buffered rows at the seam") {
