@@ -1,7237 +1,48 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.core.{OracleParity, Tables}
-import graft.ingest.Normalize
-import graft.pipeline.{Bpe, Dedup, Importance, Multimodal, Packing, Similarity, Splits, TextAnalysis}
-import graft.query.{AggSpec, Frequency, QueryEngine, TimeSeriesOps}
-import graft.rollup.Rollup
+import graft.gates._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each `queries` entry exercises one operator family from SURVEY.md §2 on
-  * the driver's parquet corpus; `oracleSql` holds the equivalent DuckDB SQL
-  * so results are hash-compared. Column names and float handling follow
-  * `graft.core.OracleParity`.
+  * The gate registry: each [[graft.gates.Gate]] exercises one operator
+  * family from SURVEY.md §2 on the driver's parquet corpus and carries the
+  * equivalent DuckDB SQL, so results are hash-compared. Gates live in one
+  * module per family; `queries` and `oracleSql` are views of `gates`.
   */
 object SparkEntry {
 
   /** Query window covering the events table (Jan 2024, epoch seconds). */
-  private[graft] val Start = 1704067200L // 2024-01-01T00:00:00Z
-  private[graft] val Stop  = 1706745600L // 2024-02-01T00:00:00Z
+  private[graft] val Start = SeriesGates.Start
+  private[graft] val Stop = SeriesGates.Stop
 
-  /** Standard label map: streams grouped by user_id % 3 → g0/g1/g2
-    * (explicit id lists, as NNTSC clients pass them; the oracle mirrors it
-    * with a CASE expression — dbselect.py:615-630). Memoized per data dir —
-    * label resolution is a client-side constant, not a per-query job.
-    */
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[Long]]]()
-
-  /** One BPE training per corpus dir (the labelsCache pattern): the three
-    * BPE gates share byte-identical training parameters, and re-running
-    * the word-count aggregation + driver merge loop inside each TIMED
-    * bench query would charge two redundant trainings per pass to the
-    * encode/budget lines. Keyed by dir — the corpora are immutable.
-    */
-  private val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-
-  private[graft] def bpeMergesFor(spark: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergesCache.computeIfAbsent(
-      dir,
-      _ => Bpe.trainMerges(Tables.documents(spark, dir), "text",
-        vocabCap = 2048, maxMerges = 48, minPairCount = 2L))
-
-  private val wordPieceVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  private[graft] def wordPieceVocabFor(spark: SparkSession, dir: String): Seq[String] =
-    wordPieceVocabCache.computeIfAbsent(
-      dir,
-      _ => graft.pipeline.WordPiece.train(Tables.documents(spark, dir), "text",
-        vocabCap = 2048, maxMerges = 48, minPairCount = 2L))
-
-  private val unigramVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
-
-  private[graft] def unigramVocabFor(
-      spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
-    unigramVocabCache.computeIfAbsent(
-      dir,
-      _ => graft.pipeline.Unigram.train(Tables.documents(spark, dir), "text"))
-
+  /** Standard label map, memoized per data dir (see SeriesGates). */
   private[graft] def labelsFor(spark: SparkSession, dir: String): Map[String, Seq[Long]] =
-    labelsCache.computeIfAbsent(
-      dir,
-      _ =>
-        Tables
-          .tsEvents(spark, dir)
-          .select("stream_id")
-          .distinct()
-          .collect()
-          .map(_.getLong(0))
-          .toSeq
-          .groupBy(id => s"g${id % 3}")
-          .view
-          .mapValues(_.sorted)
-          .toMap)
+    SeriesGates.labelsFor(spark, dir)
 
-  /** Gate-shape pivot: the driver's pandas comparator sorts rows on raw
-    * cell values and crashes on ArrayType cells (r9: `TypeError: unhashable
-    * type: 'numpy.ndarray'`), so any gated query carrying a smoke grid
-    * replaces the array with 20 scalar columns `smoke_01..smoke_20`
-    * (slot i == grid position i; NULL array → all-NULL slots via
-    * try_element_at). The library API keeps the array shape — this pivot
-    * exists only in the gate lambdas, mirrored in their oracle SQL.
-    */
-  private def pivotSmokeGrid(df: DataFrame, arrCol: String): DataFrame = {
-    val cols = df.columns.toSeq.flatMap {
-      case c if c == arrCol =>
-        (1 to 20).map(i =>
-          try_element_at(col(arrCol), lit(i)).as(f"smoke_$i%02d"))
-      case c => Seq(col(c))
-    }
-    df.select(cols: _*)
+  val gates: Seq[Gate] = distinctNames(Seq(
+    TpchGates.gates, SeriesGates.gates, TokenizerGates.gates, TextGates.gates,
+    DedupGates.gates, SelectionGates.gates, EmbeddingGates.gates, MediaGates.gates,
+    AvGates.gates).flatten)
+
+  /** `gates`, rejecting a name declared twice (a Map would keep the last). */
+  private[graft] def distinctNames(gates: Seq[Gate]): Seq[Gate] = {
+    val dups = gates.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate gate names: ${dups.toSeq.sorted.mkString(", ")}")
+    gates
   }
 
-  /** DuckDB side of `labelsFor` + `Tables.tsEvents` — the width-pinning
-    * casts mirror the adapter's (Tables.tsEvents), so both engines keep
-    * the (BIGINT ids, DOUBLE value) contract under corpus-schema drift.
-    */
-  private val OracleEvents =
-    """SELECT CASE WHEN user_id % 3 = 0 THEN 'g0'
-      |            WHEN user_id % 3 = 1 THEN 'g1'
-      |            ELSE 'g2' END AS nntsclabel,
-      |       CAST(user_id AS BIGINT) AS stream_id,
-      |       CAST(floor(epoch(ts)) AS BIGINT) AS "timestamp",
-      |       CAST(event_id AS BIGINT) AS event_id, event_type,
-      |       CAST(value AS DOUBLE) AS value, props
-      |FROM events""".stripMargin
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.query).toMap
 
-  /** Shared by q_decontaminate and q_decontaminate_hybrid — the hybrid
-    * path is output-identical to the exact form by construction.
+  /** Every gate's DuckDB SQL for the corpus at `dir`. Oracles that inline a
+    * trained model train it here if no query on `dir` has yet.
     */
-  private val DecontaminateOracle: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-      |), tr AS (
-      |  SELECT doc_id, unnest(g) AS s FROM t WHERE doc_id % 10 <> 0
-      |), be AS (
-      |  SELECT doc_id AS bid, unnest(g) AS s FROM t WHERE doc_id % 10 = 0
-      |)
-      |SELECT tr.doc_id, count(DISTINCT s) AS n_ngrams, count(DISTINCT bid) AS n_bench_docs
-      |FROM tr JOIN be USING (s)
-      |GROUP BY tr.doc_id
-      |ORDER BY tr.doc_id""".stripMargin
-
-  private def oracleEventsWindow: String =
-    s"""SELECT * FROM ($OracleEvents) WHERE "timestamp" BETWEEN $Start AND $Stop"""
+  def oracleSql(spark: SparkSession, dir: String): Map[String, String] =
+    gates.map(g => g.name -> g.oracle(spark, dir)).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_bins")(spark, "/root/testdata/sf0.001")
-
-  /** IVF quantizer cache: trained once per data dir (training is fully
-    * deterministic — seeded init + fixed Lloyd iterations), reused by the
-    * query AND inlined into the q_ann_ivf oracle SQL at dump time (Verify
-    * runs every query before dumping `oracleSql`, same JVM). The "last
-    * trained" pointer is what the oracle reads — Verify runs one dir.
-    */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]()
-  @volatile private var ivfLastTrained: Option[Seq[Seq[Double]]] = None
-
-  private def ivfCentroidsFor(s: SparkSession, dir: String): Seq[Seq[Double]] = {
-    val c = ivfCache.computeIfAbsent(
-      dir,
-      d => Similarity.ivfCentroids(Tables.embeddings(s, d), "vec_id", "embedding"))
-    ivfLastTrained = Some(c)
-    c
-  }
-
-  /** PCA model cache: trained once per data dir (deterministic — exact
-    * integer covariance partials + sign-fixed Jacobi), components
-    * quantized to longs so the q_embed_pca_proj oracle can inline the
-    * SAME integers (the ivfLastTrained convention).
-    */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Long]]]()
-  @volatile private var pcaLastTrained: Option[Seq[Seq[Long]]] = None
-
-  private def pcaComponentsFor(s: SparkSession, dir: String): Seq[Seq[Long]] = {
-    val c = pcaCache.computeIfAbsent(
-      dir,
-      d => Similarity.quantizeComponents(
-        Similarity.pcaTrain(Tables.embeddings(s, d), "embedding", 64, r = 4).components))
-    pcaLastTrained = Some(c)
-    c
-  }
-
-  /** Persisted-IVF-index cache: built once per data dir into a temp
-    * directory (train once, query many — the 100 TB usage shape).
-    */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ivfIndexFor(s: SparkSession, dir: String): String =
-    ivfIndexCache.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
-      Similarity.ivfWriteIndexWith(
-        Tables.embeddings(s, d), ivfCentroidsFor(s, d), "vec_id", "embedding", p)
-      p
-    })
-
-  /** PQ model cache: trained once per data dir (deterministic init + fixed
-    * Lloyd rounds); the trained codebooks — and, for the ADC gate, the
-    * driver-folded query lookup tables — are inlined into the oracles at
-    * dump time (the ivfLastTrained convention).
-    */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.pipeline.Pq.PqModel]()
-  @volatile private var pqLastTrained: Option[graft.pipeline.Pq.PqModel] = None
-  @volatile private var pqLastQueries: Option[Seq[graft.pipeline.Pq.AdcQuery]] = None
-
-  private def pqModelFor(s: SparkSession, dir: String): graft.pipeline.Pq.PqModel = {
-    val m = pqCache.computeIfAbsent(
-      dir,
-      d => graft.pipeline.Pq.pqTrain(Tables.embeddings(s, d), "vec_id", "embedding"))
-    pqLastTrained = Some(m)
-    m
-  }
-
-  // ---------------------------------------------------------------------
-  // Queries
-  // ---------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- TPC-H-style analytics (bench headliners) --------------------
-    "q1_pricing" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-      li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          OracleParity.decSum(col("l_quantity")).as("sum_qty"),
-          OracleParity.decSum(col("l_extendedprice")).as("sum_base_price"),
-          OracleParity.decOut(
-            sum(OracleParity.dec(col("l_extendedprice")) *
-              (OracleParity.dec(lit(1.0)) - OracleParity.dec(col("l_discount"))))
-          ).as("sum_disc_price"),
-          OracleParity.exactAvg(col("l_quantity")).as("avg_qty"),
-          OracleParity.exactAvg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---- TPC-H Q6-style forecasting-revenue scan-aggregate ------------
-    "q6_forecast" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(
-          col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
-            col("l_discount").between(0.03, 0.07) &&
-            col("l_quantity") < 24)
-        .agg(
-          OracleParity.decOut(
-            sum(OracleParity.dec(col("l_extendedprice")) * OracleParity.dec(col("l_discount")))
-          ).as("revenue"),
-          count(lit(1)).as("n_rows"))
-    }),
-
-    // ---- TPC-H Q5-style local-supplier revenue (5-way join) -----------
-    // Partial aggregation pushed BELOW the wide join: the group key
-    // (region, nation) is a function of the ORDER alone, so lineitem
-    // folds to one compact (orderkey, rev, n) row per order — map-side
-    // combined — before the only big shuffle, instead of shuffling every
-    // item row into an items⋈orders SMJ (~4× the bytes; the difference
-    // between "shuffle 100 TB of items" and "shuffle the order keys" at
-    // scale). Decimal partial sums are exact, so the two-level sum is
-    // bit-identical to the single-pass one and the oracle is unchanged.
-    // Supplier stays a 1:1 FK broadcast probe on the item side
-    // (enrichment only — it feeds neither measures nor keys).
-    "q5_region_revenue" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val su = Tables.supplier(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      val perOrder = l
-        .join(broadcast(su), l("l_suppkey") === su("s_suppkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(
-          sum(OracleParity.dec(col("l_extendedprice")) *
-            (OracleParity.dec(lit(1.0)) - OracleParity.dec(col("l_discount"))))
-            .as("__rev"),
-          count(lit(1)).as("__n"))
-      val orderGeo = o
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .select(col("o_orderkey"), col("r_name"), col("n_name"))
-      perOrder
-        .join(orderGeo, perOrder("l_orderkey") === orderGeo("o_orderkey"))
-        .groupBy("r_name", "n_name")
-        .agg(
-          OracleParity.decOut(sum(col("__rev"))).as("revenue"),
-          sum(col("__n")).as("n_items"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // ---- NNTSC raw history: P1 projection + P2 time range + P3 streams
-    //      + J1 broadcast label join (dbselect.py:390-532)
-    "q_raw_select" -> ((s, dir) => {
-      val labels = labelsFor(s, dir).view.filterKeys(Set("g0", "g1")).toMap
-      // no rounding: raw passthrough doubles are bit-identical in both engines
-      QueryEngine
-        .selectData(
-          Tables.tsEvents(s, dir), labels,
-          Seq("event_id", "event_type", "value"),
-          Start + 7 * 86400, Start + 14 * 86400)
-        .orderBy("nntsclabel", "timestamp", "event_id")
-    }),
-
-    // ---- Binned aggregation: A1 std aggs + A8 binning + A9 bin
-    //      timestamps + A10/A11 grouping & renaming (dbselect.py:208-387)
-    "q_agg_bins" -> ((s, dir) => {
-      val aggs = Seq(
-        AggSpec("value", "avg"), AggSpec("value", "max"), AggSpec("value", "min"),
-        AggSpec("value", "sum"), AggSpec("value", "count"), AggSpec("value", "stddev"))
-      QueryEngine.selectAggregatedData(
-        Tables.tsEvents(s, dir), labelsFor(s, dir), aggs,
-        Start, Stop, binsize = 21600, parity = true)
-    }),
-
-    // ---- A10 groupcols + A11 renaming: extra group column, agg on a
-    //      column that is also grouped → `col_func` naming
-    "q_groupcols" -> ((s, dir) => {
-      QueryEngine.selectAggregatedData(
-        Tables.tsEvents(s, dir), labelsFor(s, dir),
-        Seq(AggSpec("value", "avg"), AggSpec("event_type", "count")),
-        Start, Stop, binsize = 7 * 86400, groupcols = Seq("event_type"),
-        parity = true)
-    }),
-
-    // ---- A2 `most` (mode) aggregation, deterministic tie-break
-    "q_most" -> ((s, dir) => {
-      QueryEngine.selectAggregatedData(
-        Tables.tsEvents(s, dir), labelsFor(s, dir),
-        Seq(AggSpec("value", "count"), AggSpec("event_type", "most")),
-        Start, Stop, binsize = 7 * 86400)
-    }),
-
-    // ---- A3 `most_array` + A6 `arraysize` (dbselect.py:824-829): mode
-    // and max-length over an array-valued column, here an AS-path-like
-    // digit array derived from the props payload. The winning array is
-    // emitted '|'-joined (string, engine-neutral) because the driver's
-    // comparator cannot sort ArrayType columns; arraysize is cast to long
-    // (Spark size() is INT, DuckDB len() is BIGINT).
-    "q_most_array" -> ((s, dir) => {
-      val withPath = Tables.tsEvents(s, dir)
-        .withColumn(
-          "path",
-          array_remove(split(regexp_replace(col("props"), "[^0-9]", ""), ""), ""))
-      QueryEngine
-        .selectAggregatedData(
-          withPath, labelsFor(s, dir),
-          Seq(
-            AggSpec("path", "most_array"), AggSpec("path", "arraysize"),
-            AggSpec("value", "count")),
-          Start, Stop, binsize = 7 * 86400)
-        .select(
-          col("nntsclabel"), col("binstart"),
-          concat_ws("|", col("path_most_array")).as("path_most_array"),
-          col("path_arraysize").cast("long").as("path_arraysize"),
-          col("value"), col("timestamp"))
-    }),
-
-    // ---- traceroute_pathlen shape (amp_traceroute_pathlen.py:61-157):
-    // fractional path-length adjustment over hop arrays with trailing
-    // no-response hops, then per-(label, bin) mode. Hop arrays are derived
-    // from the props digits ('0' = unanswered hop), exercising the real
-    // AmpTraceroutePathlen operators end-to-end.
-    "q_pathlen" -> ((s, dir) => {
-      import graft.ingest.AmpTraceroutePathlen
-      val withPath = QueryEngine
-        .attachLabels(
-          QueryEngine.filterTime(Tables.tsEvents(s, dir), Start, Stop),
-          labelsFor(s, dir))
-        .withColumn("__digits", regexp_replace(col("props"), "[^0-9]", ""))
-        .withColumn(
-          "path",
-          transform(
-            array_remove(split(col("__digits"), ""), ""),
-            c => when(c === "0", lit(null)).otherwise(c)))
-        .withColumn(
-          "path_length",
-          AmpTraceroutePathlen.ipPathLength(col("path"), size(col("path"))))
-        .withColumn("binstart", col("timestamp") - col("timestamp") % (7 * 86400))
-      AmpTraceroutePathlen
-        .reduce(withPath, Seq("nntsclabel", "binstart"), "path_length")
-        .orderBy("nntsclabel", "binstart")
-    }),
-
-    // ---- A4 `smoke` (ntile-20 sketch) + W1 ntile window.
-    // The library API returns the sketch as an ordered array (A5 consumes it
-    // that way); for the oracle gate the array is pivoted into 20 scalar
-    // double columns (smoke_01..smoke_20) because the driver's pandas
-    // comparator cannot sort ArrayType columns. ntile buckets are contiguous
-    // 1..min(n,20), so position i == bucket i; exact doubles, no
-    // cross-engine stringification.
-    "q_smoke" -> ((s, dir) => {
-      val arr = QueryEngine.selectAggregatedData(
-        Tables.tsEvents(s, dir), labelsFor(s, dir),
-        Seq(AggSpec("value", "smoke"), AggSpec("value", "count")),
-        Start, Stop, binsize = 7 * 86400, parity = true)
-      val buckets = (1 to 20).map(i =>
-        try_element_at(col("value_smoke"), lit(i)).as(f"smoke_$i%02d"))
-      arr.select(
-        Seq(col("nntsclabel"), col("binstart")) ++ buckets ++
-          Seq(col("value_count"), col("timestamp")): _*)
-    }),
-
-    // ---- A5 `smokearray` (dbselect.py:824-829 array form of the smoke
-    // sketch): per-row ping arrays (digits of props, as the smokeping
-    // pings column) flattened then ntile-20 sketched; output pivoted to
-    // scalar columns like q_smoke.
-    "q_smokearray" -> ((s, dir) => {
-      val withArr = Tables.tsEvents(s, dir).withColumn(
-        "pings",
-        transform(
-          array_remove(split(regexp_replace(col("props"), "[^0-9]", ""), ""), ""),
-          c => c.cast("int")))
-      val arr = QueryEngine.selectAggregatedData(
-        withArr, labelsFor(s, dir),
-        Seq(AggSpec("pings", "smokearray"), AggSpec("value", "count")),
-        Start, Stop, binsize = 7 * 86400, parity = true)
-      val buckets = (1 to 20).map(i =>
-        try_element_at(col("pings"), lit(i)).as(f"pings_$i%02d"))
-      arr.select(
-        Seq(col("nntsclabel"), col("binstart")) ++ buckets ++
-          Seq(col("value"), col("timestamp")): _*)
-    }),
-
-    // ---- A12 matrix (whole-period single bin) + A9 min_timestamp
-    "q_matrix" -> ((s, dir) => {
-      QueryEngine.selectMatrixData(
-        Tables.tsEvents(s, dir), labelsFor(s, dir),
-        Seq(
-          AggSpec("value", "avg"), AggSpec("value", "max"),
-          AggSpec("value", "count")),
-        Start, Stop, parity = true)
-    }),
-
-    // ---- A12 matrix served FROM the rollup tier (influx.py:384-517):
-    //      partial→matrix math over 1-h pre-aggregates; the oracle
-    //      recomputes from raw rows over the same [Start, Stop) bins
-    "q_matrix_tier" -> ((s, dir) => {
-      val tier = Rollup.build(Tables.tsEvents(s, dir), 3600, "value")
-      Rollup.matrixFromTier(
-        tier, labelsFor(s, dir),
-        Seq(
-          AggSpec("value", "avg"), AggSpec("value", "sum"),
-          AggSpec("value", "min"), AggSpec("value", "max"),
-          AggSpec("value", "count"), AggSpec("value", "stddev")),
-        Start, Stop)
-    }),
-
-    // ---- A12/A13 MULTI-COLUMN + MODE tier: the reference's CQs roll up
-    //      a column LIST per collection (influx.py:158-173) and the
-    //      matrix merges `most` from per-bin rollup counts
-    //      (influx.py:492-511) — here exact per-value count maps, so the
-    //      tier-served mode equals the raw mostByGroup answer and the
-    //      oracle recomputes everything from raw rows over the same bins
-    "q_matrix_tier_multi" -> ((s, dir) => {
-      val tier = Rollup.buildMulti(
-        Tables.tsEvents(s, dir), 3600,
-        Seq("value", "event_id"), Seq("event_type"))
-      Rollup.matrixFromTier(
-        tier, labelsFor(s, dir),
-        Seq(
-          AggSpec("value", "avg"), AggSpec("value", "count"),
-          AggSpec("event_id", "avg"), AggSpec("event_id", "max"),
-          AggSpec("event_type", "most")),
-        Start, Stop, primaryCol = "value")
-    }),
-
-    // ---- A4/A12 SMOKE served FROM the rollup tier: the reference's
-    //      Influx path computes a percentile grid (5..95 step 5 + max,
-    //      influx.py:663-668) and packs it post-query (:694-735); here
-    //      the tier stores the bin grids count-weighted as exact decimals
-    //      and the matrix merge is order-free. Exact ntile-20 over raw
-    //      (q_smoke) stays canonical — this gates the documented grid
-    //      twin, like A7's engine-wide ntile decision. Gate shape: the
-    //      grid is pivoted to smoke_01..smoke_20 scalars (the driver's
-    //      comparator cannot sort ArrayType cells); the library API
-    //      (Rollup.matrixFromTier) keeps the array.
-    "q_matrix_tier_smoke" -> ((s, dir) => {
-      val tier = Rollup.buildMulti(
-        Tables.tsEvents(s, dir), 3600, Seq("value"), smokeCols = Seq("value"))
-      pivotSmokeGrid(Rollup.matrixFromTier(
-        tier, labelsFor(s, dir),
-        Seq(
-          AggSpec("value", "smoke"), AggSpec("value", "avg"),
-          AggSpec("value", "count")),
-        Start, Stop, primaryCol = "value"), "value_smoke")
-    }),
-
-    // ---- A8 binned history served FROM the tier (beyond-reference
-    //      serving economy: the reference's Influx backend re-aggregates
-    //      RAW points for graph history, influx.py:574-575 — here a
-    //      6-h-bin graph folds 1-h tier partials per bin, raw untouched;
-    //      Service.aggFrame routes, this gates the fold math: stats +
-    //      mode maps + smoke grids all re-grouped onto the coarser grid)
-    "q_agg_tier_bins" -> ((s, dir) => {
-      val tier = Rollup.buildMulti(
-        Tables.tsEvents(s, dir), 3600,
-        Seq("value"), Seq("event_type"), Seq("value"))
-      pivotSmokeGrid(Rollup.aggregatedFromTier(
-        tier, labelsFor(s, dir),
-        Seq(
-          AggSpec("value", "avg"), AggSpec("value", "count"),
-          AggSpec("value", "stddev"), AggSpec("event_type", "most"),
-          AggSpec("value", "smoke")),
-        Start, Stop, binsize = 21600, primaryCol = "value"), "value_smoke")
-    }),
-
-    // ---- A7/A13 byte-parity smoke mode, gated (r9 verdict): the tier
-    //      built with Influx percentile() semantics — nearest-rank,
-    //      1-based index floor(n·p + 0.5), a sparse bin leaves its
-    //      low-percentile slots NULL (influx.py:694-722) — and served
-    //      with the sparse clamp. A 600 s tier under a 6 h request grid
-    //      keeps most tier bins at n 1..3 (sf0.01), so this exercises for
-    //      real: per-slot denominators (Σ(cnt | slot populated), the r9
-    //      advice fix — a shared Σcnt would bias every merged percentile
-    //      low), the 100/n-stepped clamp on the merged window count, and
-    //      the reference's non-None pack (NULL slots drop). The default
-    //      interpolated grid (q_matrix_tier_smoke) stays canonical.
-    "q_tier_smoke_nr" -> ((s, dir) => {
-      val tier = Rollup.buildMulti(
-        Tables.tsEvents(s, dir), 600, Seq("value"), smokeCols = Seq("value"),
-        smokeNearestRank = true)
-      pivotSmokeGrid(Rollup.aggregatedFromTier(
-        tier, labelsFor(s, dir),
-        Seq(
-          AggSpec("value", "avg"), AggSpec("value", "count"),
-          AggSpec("value", "smoke")),
-        Start, Stop, binsize = 21600, primaryCol = "value",
-        sparseClamp = true, smokeNearestRank = true), "value_smoke")
-    }),
-
-    // ---- REAL WordPiece encode (the BERT tokenizer's apply): greedy
-    //      longest-match-first against a fixed inline vocab, `##`
-    //      continuations, whole-word [UNK] on miss (single-char coverage
-    //      omits 'q', so q-bearing corpus words take the UNK path). The
-    //      oracle replays the greedy loop as 24 unrolled list-op layers
-    //      over the distinct-word state. Same word stream as BPE
-    //      (shared Bpe.words tokenizer) -----------------------------------
-    "q_tokenize_wordpiece" -> ((s, dir) => {
-      import graft.functions.WordPieceEncode
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          WordPieceEncode(col("text"), WordPieceEncode.GateVocab).as("__w"))
-        .select(
-          col("doc_id"),
-          col("__w.n_words").as("n_words"),
-          col("__w.n_tokens").as("n_tokens"),
-          col("__w.n_unk").as("n_unk"),
-          md5(col("__w.segmented")).as("seg_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Winnowing document fingerprints (Schleimer et al. 2003, the
-    //      MOSS algorithm): rightmost-minimum selection over a w=4
-    //      window of trigram md5-60 hashes — positioned fingerprints
-    //      with the guaranteed-detection property (any shared run of
-    //      n+w−1 = 6 words shares a fingerprint). One fused map-only
-    //      pass (monotonic deque); the oracle replays window selection
-    //      relationally (arg_min(pos, [h, -pos]) per window) -------------
-    "q_winnow" -> ((s, dir) => {
-      import graft.functions.WinnowFingerprint
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          WinnowFingerprint(col("text"), 3, 4).as("__f"))
-        .select(
-          col("doc_id"),
-          col("__f.n_grams").as("n_grams"),
-          col("__f.n_fp").as("n_fp"),
-          md5(col("__f.fp_stream")).as("fp_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- REAL Unigram-LM encode (Kudo 2018 / SentencePiece): Viterbi
-    //      segmentation maximizing total INTEGER piece score — the third
-    //      tokenizer family (BPE replays merges, WordPiece is greedy,
-    //      unigram is globally optimal; spec pins a case where greedy
-    //      and Viterbi differ). The oracle unrolls the forward pass +
-    //      backtrack as 2x24 list-op layers over the distinct-word
-    //      state. Same word stream as the other tokenizers -------------
-    "q_tokenize_unigram" -> ((s, dir) => {
-      import graft.functions.UnigramEncode
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          UnigramEncode(col("text"), UnigramEncode.GateVocab).as("__u"))
-        .select(
-          col("doc_id"),
-          col("__u.n_words").as("n_words"),
-          col("__u.n_tokens").as("n_tokens"),
-          col("__u.n_unk").as("n_unk"),
-          md5(col("__u.segmented")).as("seg_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- REAL Unigram-LM TRAINING (Kudo 2018 Viterbi-EM + prune): the
-    //      gate pins the TRAINED VOCAB TABLE itself (rank, piece,
-    //      quantized integer score). The oracle RE-TRAINS in SQL: seed
-    //      substring counts, then per EM round the Viterbi forward +
-    //      backtrack unrolled as 2x24 layers with the vocab carried as
-    //      a list column from the previous round's CTE, then the prune
-    //      and final rescore — nothing inlined from the Spark run ------
-    "q_unigram_vocab" -> ((s, dir) => {
-      import s.implicits._
-      unigramVocabFor(s, dir)
-        .zipWithIndex
-        .map { case ((p, score, _), i) => (i + 1L, p, score) }
-        .toDF("vrank", "piece", "score")
-        .orderBy("vrank")
-    }),
-
-    // ---- REAL WordPiece TRAINING (Schuster & Nakajima 2012 / BERT):
-    //      the BPE merge loop with the LIKELIHOOD argmax — pair score
-    //      c(xy)/(c(x)·c(y)), IEEE-double ratios of exact longs, ties
-    //      (score, count, x, y) — and ##-marked symbol state. The gate
-    //      pins the trained vocab (alphabet + merges in learned order);
-    //      the oracle re-trains with unrolled layers (symbol counts +
-    //      pair counts + ratio argmax per layer) ------------------------
-    "q_wordpiece_vocab" -> ((s, dir) => {
-      import s.implicits._
-      wordPieceVocabFor(s, dir)
-        .zipWithIndex
-        .map { case (e, i) => (i + 1L, e) }
-        .toDF("vrank", "entry")
-        .orderBy("vrank")
-    }),
-
-    // ---- the TRAINED model feeding the production encode expression
-    //      (train → apply end-to-end, the BPE q_tokenize_bpe pattern):
-    //      the oracle RE-TRAINS and then RE-ENCODES with one more
-    //      unrolled Viterbi whose vocab flows from the re-trained CTE --
-    "q_tokenize_unigram_trained" -> ((s, dir) => {
-      import graft.functions.UnigramEncode
-      val vocab = unigramVocabFor(s, dir).map(v => (v._1, v._2))
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          UnigramEncode(col("text"), vocab).as("__u"))
-        .select(
-          col("doc_id"),
-          col("__u.n_words").as("n_words"),
-          col("__u.n_tokens").as("n_tokens"),
-          col("__u.n_unk").as("n_unk"),
-          md5(col("__u.segmented")).as("seg_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Winnowing candidate pairs (the MOSS detector end-to-end):
-    //      docs sharing >= 2 selected fingerprint hashes, hot cut at
-    //      df > 500 (the boilerplate fingerprints — same lever as
-    //      q_dedup_ngram), overlap over kept-fingerprint set sizes.
-    //      Rides the shared inverted-list pair engine: the fingerprint
-    //      index is ~w x smaller than the shingle miners' ----------------
-    "q_winnow_pairs" -> ((s, dir) => {
-      Dedup.winnowPairs(Tables.documents(s, dir), "doc_id", "text",
-          n = 3, w = 4, minShared = 2L, maxDf = Some(500L))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- Exact dedup on documents: md5 grouping (LLM-pipeline op)
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir), "text", "doc_id").orderBy("canonical_id")
-    }),
-
-    // ---- Text analysis: token counts, quality ratios ------------------
-    // (relational explode + codegen aggregation — the higher-order-lambda
-    // column form re-tokenizes per consumer and runs interpreted)
-    // ---- REAL BPE tokenizer, trained on the corpus and replayed by the
-    //      oracle: q_bpe_merges pins the TRAINED MERGE TABLE itself
-    //      (rank + pair per iteration — the oracle re-trains in SQL with
-    //      unrolled layers, nothing inlined from the Spark run);
-    //      q_tokenize_bpe pins the corpus ENCODE (token counts + the
-    //      md5 of every document's segmented stream). Training is one
-    //      word-count aggregation + a driver loop over the top-2048
-    //      vocab (the Pq codebook pattern); encode is a fused map-only
-    //      reference-object expression ---------------------------------
-    "q_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      bpeMergesFor(s, dir)
-        .zipWithIndex
-        .map { case ((x, y), i) => (i + 1, x, y) }
-        .toDF("mrank", "left_tok", "right_tok")
-        .orderBy("mrank")
-    }),
-
-    "q_tokenize_bpe" -> ((s, dir) => {
-      import graft.functions.BpeEncode
-      val merges = bpeMergesFor(s, dir)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), BpeEncode(col("text"), merges).as("__b"))
-        .select(
-          col("doc_id"),
-          col("__b.n_words").as("n_words"),
-          col("__b.n_tokens").as("n_tokens"),
-          md5(col("__b.segmented")).as("seg_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- token-budget sampling by the REAL tokenizer's counts: the
-    //      sampler takes BpeEncode's n_tokens instead of the whitespace
-    //      estimate (samplers optionally accept a tokenizer); the oracle
-    //      re-trains BPE and feeds the replayed per-doc counts into the
-    //      same budget window ------------------------------------------
-    "q_token_budget_bpe" -> ((s, dir) => {
-      import graft.functions.BpeEncode
-      val merges = bpeMergesFor(s, dir)
-      val docs = Tables.documents(s, dir)
-        .withColumn("bpe_tokens",
-          BpeEncode(col("text"), merges).getField("n_tokens"))
-      Splits.sampleByTokenBudgetPerGroup(docs, "doc_id", "source", "text",
-          budgetTokens = 2000L, salt = "tbb", md5Family = true,
-          tokensCol = Some("bpe_tokens"))
-        .select(col("doc_id"), col("source"), col("tokens"), col("tokens_before"))
-        .orderBy("doc_id")
-    }),
-
-    "q_text_stats" -> ((s, dir) => {
-      TextAnalysis.docStats(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Language ID heuristic ---------------------------------------
-    "q_text_langid" -> ((s, dir) => {
-      TextAnalysis.docLangId(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Document fingerprint (normalized content hash) ---------------
-    "q_text_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- C4-style line-quality filter (fused single-pass expression) --
-    // The synthetic docs are single-line, so the gate derives a multi-line
-    // corpus with literal (engine-portable) replaces: one common token
-    // becomes the line separator, another grows terminal punctuation.
-    // Both punct modes gated; counts exact, clean text compared via md5.
-    "q_filter_lines" -> ((s, dir) => {
-      import graft.functions.FilterLines
-      val multi = replace(
-        replace(col("text"), lit(" merge "), lit("\n")), lit("scan"), lit("scan."))
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          FilterLines(multi, 3, Seq("slow", "dup"), requireTerminalPunct = false).as("__a"),
-          FilterLines(multi, 3, Seq("slow", "dup"), requireTerminalPunct = true).as("__b"))
-        .select(
-          col("doc_id"),
-          col("__a.n_lines").as("n_lines"),
-          col("__a.n_kept").as("n_kept"),
-          md5(col("__a.clean_text")).as("clean_md5"),
-          col("__b.n_kept").as("n_kept_punct"),
-          md5(col("__b.clean_text")).as("clean_punct_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Unicode NFC normalization (canonical-composition cleaning
-    //      pass; utf8proc and java.text.Normalizer both implement
-    //      UAX #15, so the output is byte-identical). The ASCII corpus
-    //      is decomposed in-query (every 'e' grows a combining acute,
-    //      U+0301) so the fold is exercised; NFC over the RAW text must
-    //      be the identity ------------------------------------------
-    "q_nfc" -> ((s, dir) => {
-      import graft.functions.NfcNormalize
-      val accented = replace(col("text"), lit("e"), lit("e\u0301"))
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          md5(NfcNormalize(accented)).as("norm_md5"),
-          (NfcNormalize(accented) =!= accented).as("changed"),
-          (NfcNormalize(col("text")) === col("text")).as("raw_identity"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Per-doc token-distribution Shannon entropy (the gibberish /
-    //      keyword-stuffing quality signal): ONE fused map-only pass
-    //      (open-addressing count map per doc, no explode/shuffle) vs
-    //      the oracle's explode → per-token count → join + agg. Exact
-    //      via the PlatformLn recipe: per-term q9(ln(c/n)) quantized
-    //      BEFORE the sum, so the sum is an exact integer ---------------
-    "q_text_entropy" -> ((s, dir) => {
-      import graft.functions.TokenEntropy
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TokenEntropy(col("text")).as("__e"))
-        .select(
-          col("doc_id"),
-          col("__e.n_tokens").as("n_tokens"),
-          col("__e.n_distinct").as("n_distinct"),
-          col("__e.entropy").as("entropy"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- HTML → text extraction (C4/CCNet boilerplate strip). The
-    //      corpus is wrapped in deterministic markup IN-QUERY (both
-    //      engines build the identical string): title/style/comment/
-    //      attribute tags, entity-encoded body (sequential literal
-    //      replaces — 'a'→'&lt;i&gt;' decodes to literal '<i>' AFTER tag
-    //      stripping, pinning the pass order), an UNCLOSED <script> every
-    //      13th doc (falls through the block pass, loses only its tag),
-    //      and a bare '1<2' every 11th (the tag pass eats to the next
-    //      '>'). One fused map-only expression vs the oracle's
-    //      regexp_replace + replace chain ------------------------------
-    "q_html_extract" -> ((s, dir) => {
-      import graft.functions.HtmlExtract
-      val html = concat(
-        lit("<html><head><title>doc "), col("doc_id"),
-        lit("</title><style>p{margin:"), col("doc_id") % 7,
-        lit("px}</style></head><body><!-- id "), col("doc_id"),
-        lit(" --><h1 class=\"t\">"), col("source"),
-        lit("</h1><p data-k=\"v\">"),
-        expr("replace(replace(text, 'a', '&lt;i&gt;'), 'e', '&amp;')"),
-        lit("</p>"),
-        when(col("doc_id") % 13 === 0, lit("<script>var x=unclosed"))
-          .otherwise(lit("<script type=\"text/javascript\">var id=1;</script>")),
-        when(col("doc_id") % 11 === 0, lit(" 1<2 ")).otherwise(lit("")),
-        lit("</body></html>"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), HtmlExtract(html).as("clean"))
-        .select(
-          col("doc_id"),
-          md5(col("clean")).as("clean_md5"),
-          length(col("clean")).cast("long").as("n_chars_clean"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- URL parsing + canonicalization (the FIRST pass of a web
-    //      pipeline: URL-level dedup + registered-domain extraction).
-    //      Dirty URLs are built in-query (both engines construct the
-    //      identical string): mixed-case scheme/host, default and
-    //      explicit ports, tracking params, unsorted params, fragments,
-    //      an empty path, a single-label host, a co.uk-style suffix and
-    //      a malformed row every 9th doc (null struct). One fused
-    //      map-only expression vs the oracle's regexp_extract + list-op
-    //      replay of the same contract ---------------------------------
-    "q_url_normalize" -> ((s, dir) => {
-      import graft.functions.UrlParts
-      Tables.documents(s, dir)
-        .select(col("doc_id"), UrlParts(expr(UrlGateCase)).as("__u"))
-        .select(
-          col("doc_id"),
-          col("__u.scheme").as("scheme"),
-          col("__u.host").as("host"),
-          col("__u.port").as("port"),
-          col("__u.reg_domain").as("reg_domain"),
-          col("__u.n_params").as("n_params"),
-          col("__u.url_norm").as("url_norm"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- URL-level dedup (the web pipeline's FIRST dedup pass, riding
-    //      url_parts): the gate's collisions are CREATED by
-    //      canonicalization — case/port/tracking/param-order/fragment
-    //      variants of one canonical URL (arms 0 and 1 normalize
-    //      identically), malformed rows dropped. Map-side-combined
-    //      groupBy on the SHORT canonical string — corpus text never
-    //      shuffles ------------------------------------------------------
-    "q_url_dedup" -> ((s, dir) => {
-      import graft.functions.UrlParts
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          UrlParts(expr(UrlDedupCase)).getField("url_norm").as("url_norm"))
-        .filter(col("url_norm").isNotNull)
-        .groupBy("url_norm")
-        .agg(
-          min("doc_id").as("canonical_id"),
-          count(lit(1)).as("n_dupes"))
-        .orderBy("canonical_id")
-    }),
-
-    // ---- Multi-pattern dictionary scan (Aho–Corasick): one pass over
-    //      the text regardless of dictionary size. The dictionary is
-    //      chosen to exercise the automaton's hard paths ON REAL DATA:
-    //      "a" is a suffix of "a a" (fail-link output fold), "a a" is
-    //      self-overlapping with period 2 ("a a a" occurs in the corpus
-    //      → overlapping count > non-overlapping), and "scan slow" spans
-    //      a word boundary. Oracle counts overlapping occurrences by
-    //      brute-force position scan — O(len·|dict|), fine at sf0.01 ----
-    "q_dict_scan" -> ((s, dir) => {
-      import graft.functions.DictScan
-      val dict = Seq("a", "a a", "scan slow", "table", "agg")
-      // second dictionary without the ubiquitous "a": first_term varies
-      // per document instead of collapsing to one champion
-      val dict2 = Seq("scan slow", "table", "agg", "window", "merge")
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          DictScan(col("text"), dict).as("__d"),
-          DictScan(col("text"), dict2).as("__e"))
-        .select(
-          col("doc_id"),
-          col("__d.n_terms_present").as("n_terms_present"),
-          col("__d.n_hits").as("n_hits"),
-          col("__d.first_term").as("first_term"),
-          col("__e.n_terms_present").as("n2_present"),
-          col("__e.n_hits").as("n2_hits"),
-          col("__e.first_term").as("first_term2"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Corpus-GLOBAL line dedup (C4 semantic: first copy survives) --
-    //      same derived multi-line corpus as q_filter_lines; clean text
-    //      compared via md5 (the FilterLines gate convention) -----------
-    "q_line_dedup" -> ((s, dir) => {
-      import graft.pipeline.Lines
-      val multi = Tables.documents(s, dir).select(
-        col("doc_id"),
-        replace(col("text"), lit(" merge "), lit("\n")).as("text"))
-      Lines.dedupLines(multi, "doc_id", "text")
-        .select(
-          col("doc_id"), col("n_lines"), col("n_kept"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Paragraph-granularity dedup (MassiveText repeated-paragraph
-    //      rule): same corpus-first machinery, sep = blank line. The
-    //      derived corpus turns " sort " into a paragraph break and
-    //      " merge " into a line break, so paragraphs are multi-line ----
-    "q_para_dedup" -> ((s, dir) => {
-      import graft.pipeline.Lines
-      val multi = Tables.documents(s, dir).select(
-        col("doc_id"),
-        replace(
-          replace(col("text"), lit(" sort "), lit("\n\n")),
-          lit(" merge "), lit("\n")).as("text"))
-      Lines.dedupLines(multi, "doc_id", "text", minChars = 1, sep = "\n\n")
-        .select(
-          col("doc_id"), col("n_lines").as("n_paras"),
-          col("n_kept"), md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Boilerplate-line removal (every copy of a hot line dropped) --
-    "q_line_boilerplate" -> ((s, dir) => {
-      import graft.pipeline.Lines
-      val multi = Tables.documents(s, dir).select(
-        col("doc_id"),
-        replace(col("text"), lit(" merge "), lit("\n")).as("text"))
-      Lines.boilerplateLines(multi, "doc_id", "text", maxOccurrences = 3)
-        .select(
-          col("doc_id"), col("n_lines"), col("n_kept"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Composed corpus-cleaning pipeline: ONE TextProfile pass per
-    //      document drives lang-id + quality scoring, fused fingerprint
-    //      drives exact dedup — the whole training-data cleaning flow as
-    //      one declarative plan (filter -> canonicalize), hash-checked
-    "q_pipeline_clean" -> ((s, dir) => {
-      import graft.functions.TextProfile
-      val docs = Tables.documents(s, dir)
-      // groupBy(doc_id) is an AGGREGATION BARRIER, not a dedup: filters
-      // on derived columns cannot be alias-substituted through it, so the
-      // profile is evaluated ONCE per document — a plain projection let
-      // PushDownPredicates inline text_profile into every reference
-      // (101 evals/row measured; EntrySpec asserts the count stays 1)
-      val p = docs.groupBy(col("doc_id")).agg(
-        first(TextProfile(col("text"))).as("__p"),
-        first(TextAnalysis.fingerprint(col("text"))).as("fp"))
-      p.select(
-          col("doc_id"), col("fp"),
-          TextAnalysis.langPredOf(col("__p")).as("lang_pred"),
-          TextAnalysis.qualityOf(col("__p")).as("quality"))
-        .filter(col("lang_pred") === "en" && col("quality") >= 0.5)
-        .groupBy("fp")
-        .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
-        .select("doc_id", "fp", "n_copies")
-        .orderBy("doc_id")
-    }),
-
-    // ---- n-gram Jaccard near-dup pairs (inverted-index blocking) ------
-    "q_dedup_ngram" -> ((s, dir) => {
-      // hot-shingle safety ON by default: a shingle in >500 docs is
-      // boilerplate, not signal, and contributes O(df^2) candidate pairs
-      // (a single-key shuffle bomb at 100 TB); the oracle mirrors the cut
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text", 3, 0.2,
-        maxDf = Some(500L), maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- n-gram containment pairs (asymmetric near-superset measure:
-    //      C(sub→super) = |sub∩super| / |sub| — catches truncation dups
-    //      and whole-doc quoting that Jaccard dilutes away) -------------
-    "q_containment" -> ((s, dir) => {
-      Dedup.containmentPairs(Tables.documents(s, dir), "doc_id", "text", 3, 0.5,
-        maxDf = Some(500L), maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_sub", "id_super")
-    }),
-
-    // ---- Duplicated-span coverage (token-level substring-dedup measure;
-    //      Lee et al. 2022 — linear even on a saturated gram vocabulary,
-    //      the scalable complement to the pair miners) ------------------
-    "q_dup_span" -> ((s, dir) => {
-      Dedup.dupSpanCoverage(Tables.documents(s, dir), "doc_id", "text", 3)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Duplicated-span removal (the cut the coverage measures) ------
-    "q_dup_span_clean" -> ((s, dir) => {
-      Dedup.dupSpanClean(Tables.documents(s, dir), "doc_id", "text", 3)
-        .orderBy("doc_id")
-    }),
-
-    // ---- MinHash+LSH near-dup pairs (hash-checked via the md5 hash
-    //      family — DuckDB recomputes every hash; xxhash64 stays the
-    //      production default in Dedup.minhashLshPairs, and DedupSpec
-    //      bridges the two families' pair sets)
-    "q_dedup_minhash" -> ((s, dir) => {
-      Dedup.minhashLshPairsMd5(Tables.documents(s, dir), "doc_id", "text",
-        maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- Incremental near-dup probe: the batch (doc_id % 10 = 0)
-    //      probes the standing corpus's persisted signature index —
-    //      new×corpus and new×new pairs only, corpus×corpus never
-    //      regenerated -----------------------------------------------
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val probe = Dedup.minhashSignaturesMd5(
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text", 3, 64)
-      val index = Dedup.minhashSignaturesMd5(
-        docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", 3, 64)
-      Dedup.minhashLshPairsAgainst(probe, index, "doc_id",
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- Cross-source overlap matrix: per-source MinHash UNION
-    //      sketches (min over member signatures = minhash of the union),
-    //      pairwise position-match fraction = estimated Jaccard between
-    //      full source shingle populations -----------------------------
-    "q_source_overlap" -> ((s, dir) => {
-      Dedup.groupOverlapMatrix(Tables.documents(s, dir), "source", "text")
-        .orderBy("source_a", "source_b")
-    }),
-
-    // ---- SimHash fingerprints (md5-based, engine-reproducible) --------
-    "q_simhash" -> ((s, dir) => {
-      Dedup.simhash(Tables.documents(s, dir), "doc_id", "text").orderBy("doc_id")
-    }),
-
-    // ---- SimHash near-dup pairs (quarter-blocking + exact hamming) ----
-    "q_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text", maxHamming = 3,
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- Near-dup components (large-star/small-star transitive closure
-    //      over the SimHash pairs; oracle = recursive-CTE reachability) --
-    "q_dedup_cluster" -> ((s, dir) => {
-      Dedup.connectedComponents(
-          Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text", maxHamming = 3))
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Cluster dedup: one canonical doc per near-dup component ------
-    "q_dedup_canonical" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dedupByComponents(
-          docs, "doc_id",
-          Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3))
-        .select("doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Score-preferring cluster dedup: keep the LONGEST member of
-    //      each near-dup component (ties → min id), not the min id — the
-    //      keep-the-best-copy policy production pipelines run ------------
-    "q_dedup_best" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.canonicalByScore(
-          docs, "doc_id",
-          Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3),
-          "n_chars")
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Deterministic train/val/test hash split (md5 oracle family;
-    //      xxhash64 is the production default, bridged in SplitsSpec).
-    //      Weights chosen with binary-exact cumulative cuts (.75/.875) so
-    //      both engines' CASE thresholds are the same doubles -----------
-    "q_split_hash" -> ((s, dir) => {
-      Splits.hashSplitMd5(Tables.documents(s, dir), "doc_id",
-          Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125), salt = "s1")
-        .select("doc_id", "split")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Leakage-safe split: near-dup components pinned to one split --
-    "q_split_leakage" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Splits.leakageSafeSplitMd5(
-          docs, "doc_id",
-          Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3),
-          Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125), salt = "s1")
-        .select("doc_id", "split")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Heavy hitters: global top-k vocabulary terms -----------------
-    "q_top_terms" -> ((s, dir) => {
-      TextAnalysis.topTerms(Tables.documents(s, dir), "text", 50)
-    }),
-
-    // ---- Corpus card: per-source dataset-documentation summary -------
-    "q_corpus_card" -> ((s, dir) => {
-      TextAnalysis.corpusCard(Tables.documents(s, dir), "source", "text", "lang")
-        .orderBy("source")
-    }),
-
-    // ---- Per-group heavy hitters: top-5 terms per source via the
-    //      k-bounded string top-k aggregate (≤ k entries per group per
-    //      partition cross the shuffle — never a vocabulary window sort)
-    "q_top_terms_by_source" -> ((s, dir) => {
-      TextAnalysis.topTermsByGroup(Tables.documents(s, dir), "source", "text", 5)
-        .orderBy("source", "rank")
-    }),
-
-    // ---- Deterministic stratified sampling (md5 oracle family) --------
-    "q_sample_stratified" -> ((s, dir) => {
-      Splits.stratifiedSampleMd5(Tables.documents(s, dir), "doc_id", "lang",
-          Seq("en" -> 0.5, "de" -> 0.25, "zh" -> 0.125), salt = "s2")
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Sequence packing into token-budget bins (global prefix sum) --
-    "q_pack_sequences" -> ((s, dir) => {
-      Packing.packSequences(Tables.documents(s, dir), "doc_id", "text", 512L)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Packed training rows: bin members concatenated in id order ---
-    "q_pack_text" -> ((s, dir) => {
-      Packing.packedText(Tables.documents(s, dir), "doc_id", "text", 512L)
-        .orderBy("bin")
-    }),
-
-    // ---- Repetition quality stats (Gopher-style, word 2-grams) --------
-    "q_text_repetition" -> ((s, dir) => {
-      TextAnalysis.repetitionStats(Tables.documents(s, dir), "doc_id", "text", 2)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Benchmark decontamination: training docs sharing any 3-gram
-    //      with the benchmark slice (doc_id % 10 == 0 stands in for the
-    //      eval suite). Gate counts distinct xxhash64 shingle hashes; the
-    //      oracle counts distinct shingle STRINGS — equal because hashing
-    //      is injective on the corpus (same convention as q_dedup_ngram)
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.decontaminate(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", 3,
-          maxMatches = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("doc_id")
-    }),
-
-    // ---- Span-level decontamination: token coverage of bench-shared
-    //      3-grams per training doc (the Lee et al. span machinery
-    //      pointed across corpora; broadcast bench gram set, doc-local
-    //      interval union) --------------------------------------------
-    "q_cont_span" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.contaminatedSpanCoverage(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", 3)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Span-level decontamination, removal form: cut the leaked
-    //      spans, keep the documents -----------------------------------
-    "q_cont_span_clean" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.contaminatedSpanClean(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", 3)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Bloom-filter decontamination: the probabilistic map-only twin
-    //      of q_decontaminate — bench 3-grams OR-folded into one 2^20-bit
-    //      bitmap (BitmapOrAggregate), corpus probed statelessly
-    //      (BloomNgramHitCount, md5 oracle family; xxhash64 production
-    //      twin bridged in BloomSpec). The oracle SIMULATES the bloom
-    //      exactly: a gram hits iff all k=4 double-hash positions are in
-    //      the bench position set — false positives and all --------------
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.decontaminateBloom(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", 3, mBits = 1 << 20, kHashes = 4, md5Family = true)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Hybrid decontamination: bloom prefilter -> exact join on the
-    //      flagged slice. Output (and ORACLE) identical to
-    //      q_decontaminate — the bloom never misses, so the prefilter is
-    //      lossless; the exact stage removes its false positives -------
-    "q_decontaminate_hybrid" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.decontaminateHybrid(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", 3,
-          maxMatches = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("doc_id")
-    }),
-
-    // ---- PII scan + redaction. The corpus is PII-free by construction
-    //      (a GOOD corpus property this gate would catch regressing), so
-    //      the scan runs on a contact line derived deterministically from
-    //      events row ids — giving every pattern true positives whose
-    //      counts and redacted text hash-check regex parity across
-    //      engines; aggregated per event_type to keep the output small
-    "q_pii_scan" -> ((s, dir) => {
-      // tsEvents (not raw load): it sets the nanos-parquet conf; stream_id
-      // is the raw table's user_id
-      val ev = Tables.tsEvents(s, dir)
-      val line = concat(
-        lit("uid "), col("stream_id"),
-        lit(" mail u"), col("stream_id"), lit("@example.com ip 10.0."),
-        col("stream_id") % 256, lit("."), col("event_id") % 256,
-        lit(" tel +64"), lit(4000000) + col("event_id") % 1000000,
-        lit(" acct "), lit(9000000) + col("event_id"),
-        lit(" "), col("props"))
-      TextAnalysis.piiScan(
-          ev.select(col("event_type"), line.as("text")), "event_type", "text")
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum("n_emails").as("emails"),
-          sum("n_ipv4").as("ipv4s"),
-          sum("n_phones").as("phones"),
-          sum("n_idnums").as("idnums"),
-          // min over a STRING: the builtin's var-length buffer forced the
-          // whole 6-function aggregate to SortAggregate (both levels
-          // sorting their full input). MinUtf8 is the typed-imperative
-          // twin — same binary-collation minimum (spec-pinned against
-          // min() itself), but the operator becomes ObjectHashAggregate:
-          // no sort on either level (guide: expressions and codegen)
-          graft.functions.MinUtf8(col("redacted")).as("redacted_min"))
-        .orderBy("event_type")
-    }),
-
-    // ---- Rare-word (OOV) ratio: the exact-arithmetic perplexity-proxy
-    //      quality signal — corpus document frequencies joined back onto
-    //      token occurrences ------------------------------------------
-    "q_rare_words" -> ((s, dir) => {
-      TextAnalysis.rareWordStats(Tables.documents(s, dir), "doc_id", "text", 300L)
-        .orderBy("doc_id")
-    }),
-
-    // ---- TF-IDF per-doc top-k terms: exact-integer (tf·1e6) div df
-    //      score (keyword extraction / doc characterization) ----------
-    "q_tfidf" -> ((s, dir) => {
-      TextAnalysis.tfidfTopTerms(Tables.documents(s, dir), "doc_id", "text", 3)
-        .orderBy("doc_id", "rank")
-    }),
-
-    // ---- Bigram-LM familiarity: avg corpus MLE conditional probability
-    //      of each doc's bigrams (perplexity-proxy quality filter; exact
-    //      long/long divisions quantized to 1e-12 longs -> order-free
-    //      integer sums; ln cross-entropy twin spec-pinned) ------------
-    "q_lm_score" -> ((s, dir) => {
-      TextAnalysis.lmFamiliarity(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // ---- LM cross-entropy (textbook log form): avg ln p(w2|w1) per
-    //      doc. Gate-able because the ln is the PLATFORM libm
-    //      (PlatformLn — Spark's builtin log() is StrictMath/fdlibm,
-    //      which disagrees with the oracle's glibc ln on ~6% of inputs;
-    //      Math.log on 0.06%, 1 ulp) and the 1e-9 quantum absorbs the
-    //      residue. Terms quantized BEFORE the integer sum, like
-    //      q_lm_score ---------------------------------------------------
-    "q_lm_xent" -> ((s, dir) => {
-      TextAnalysis.lmFamiliarity(Tables.documents(s, dir), "doc_id", "text",
-          logForm = true)
-        .orderBy("doc_id")
-    }),
-
-    // ---- DSIR-style importance weighting (data selection): hashed
-    //      unigram+bigram buckets, target-vs-raw Laplace bucket models,
-    //      per-doc Σ count·(q12(p_t)−q12(p_r)) — exact integer sums,
-    //      md5 bucket family for the oracle (xxhash64 prod twin
-    //      spec-pinned); model ≤ 4096 rows -> broadcast lookup ---------
-    "q_importance" -> ((s, dir) => {
-      Importance.importanceWeight(Tables.documents(s, dir), "doc_id", "text",
-          org.apache.spark.sql.functions.col("source") === "src0",
-          buckets = 4096, md5Family = true)
-        .orderBy("doc_id")
-    }),
-
-    // ---- DSIR's actual log-ratio form: Σ count·(ln p_t − ln p_r) —
-    //      platform-libm ln + 1e-9 quantum (the PlatformLn recipe) ------
-    "q_importance_log" -> ((s, dir) => {
-      Importance.importanceWeight(Tables.documents(s, dir), "doc_id", "text",
-          org.apache.spark.sql.functions.col("source") === "src0",
-          buckets = 4096, logForm = true, md5Family = true)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Fused importance scoring of a HELD-OUT slice against a
-    //      standing model (the incremental/streaming seat): model
-    //      trained on even doc_ids in-JVM (dense 4096-long array,
-    //      unseen buckets pre-smoothed), odd doc_ids scored by ONE
-    //      map-only expression — exercises the unseen-bucket default
-    //      the relational form never hits --------------------------
-    "q_importance_score" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val even = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0)
-      val model = Importance.trainModel(even, "doc_id", "text",
-        org.apache.spark.sql.functions.col("source") === "src0",
-        buckets = 4096, md5Family = true)
-      Importance.scoreWith(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1),
-          "doc_id", "text", model, md5Family = true)
-        .orderBy("doc_id")
-    }),
-
-    // ---- BM25 lexical retrieval: top-15 docs for a bag-of-words probe
-    //      query (rational-idf gate form; binary-exact k1/b so constant
-    //      folding agrees; per-term contributions quantized to 1e-9
-    //      longs -> order-independent integer score sums; log-idf
-    //      production twin spec-pinned in TextAnalysisSpec) ------------
-    "q_bm25" -> ((s, dir) => {
-      TextAnalysis.bm25TopK(
-        Tables.documents(s, dir), "doc_id", "text",
-        Seq("spark", "join", "window", "vector"), topK = 15)
-    }),
-
-    // ---- BM25, textbook log-idf form: idf = ln(1 + rational). Same
-    //      platform-libm + quantized-integer-sum recipe as q_lm_xent ----
-    "q_bm25_log" -> ((s, dir) => {
-      TextAnalysis.bm25TopK(
-        Tables.documents(s, dir), "doc_id", "text",
-        Seq("spark", "join", "window", "vector"), topK = 15, idfLog = true)
-    }),
-
-    // ---- Adaptive quality cut: docs at/above the corpus-mean BPE token
-    //      count (integer metric -> exact cross-engine mean; the
-    //      approx-quantile production variant is spec-covered)
-    "q_quality_cut" -> ((s, dir) => {
-      TextAnalysis.cutByMeanOf(
-          TextAnalysis.docStats(Tables.documents(s, dir), "doc_id", "text"),
-          "n_bpe_tokens")
-        .select("doc_id", "n_bpe_tokens", "quality")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Adaptive quality cut, EXACT-quantile form: keep the top
-    //      (1-q) fraction by global (metric, id) rank — the same
-    //      two-phase prefix scan as q_rank_norm, so no single-task sort;
-    //      floor(q·n) is one double op on both engines ------------------
-    "q_quality_cut_quantile" -> ((s, dir) => {
-      Splits.cutByQuantileExact(
-          TextAnalysis.docStats(Tables.documents(s, dir), "doc_id", "text")
-            .select("doc_id", "n_bpe_tokens"),
-          "doc_id", "n_bpe_tokens", q = 0.8)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Per-GROUP exact-quantile cut: each source keeps ITS OWN top
-    //      20% by (metric, id) rank — one corpus prefix scan on the
-    //      length-prefixed (group, metric, id) key, groups-sized offsets,
-    //      no per-group sort (the percentile-sketch per-group form stays
-    //      spec-covered; this is its exact oracle-checkable twin) --------
-    "q_quality_cut_pergroup" -> ((s, dir) => {
-      val stats = TextAnalysis.docStats(Tables.documents(s, dir), "doc_id", "text")
-        .select("doc_id", "n_bpe_tokens")
-        .join(Tables.documents(s, dir).select("doc_id", "source"), "doc_id")
-      Splits.cutByQuantileExactPerGroup(
-          stats, "doc_id", "source", "n_bpe_tokens", q = 0.8)
-        .select("doc_id", "source", "n_bpe_tokens")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Rank normalization: metric -> [0,1] by global position in
-    //      (metric, id) order, via the two-phase distributed scan (the
-    //      quantile-normalize step before cross-source score mixing) ---
-    "q_rank_norm" -> ((s, dir) => {
-      Splits.rankNormalize(
-          Tables.documents(s, dir).select("doc_id", "n_chars"),
-          "doc_id", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Quality-weighted sampling: per-decile keep rates over the
-    //      rank-normalized metric (upsample-the-best mixture move;
-    //      rankNormalize ∘ md5 keep-hash composition) ------------------
-    "q_quality_sample" -> ((s, dir) => {
-      Splits.qualityWeightedSampleMd5(
-          Tables.documents(s, dir).select("doc_id", "n_chars"),
-          "doc_id", "n_chars",
-          Seq(0.05, 0.1, 0.15, 0.2, 0.3, 0.4, 0.5, 0.7, 0.9, 1.0),
-          salt = "qs")
-        .select("doc_id", "n_chars", "pct_rank")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Deterministic corpus shuffle: global training-order positions
-    //      by hash-of-id, via the two-phase parallel prefix scan (md5
-    //      oracle family; xxhash64 production twin bridged in SplitsSpec)
-    "q_shuffle_order" -> ((s, dir) => {
-      Splits.shuffleOrderMd5(Tables.documents(s, dir), "doc_id", salt = "s3")
-        .select("doc_id", "pos")
-        .orderBy("pos")
-    }),
-
-    // ---- Data-mixture resampling: cut each source to hit the target
-    //      token-mass proportions (exact long token sums -> rates; md5
-    //      oracle family) ---------------------------------------------
-    "q_mixture_sample" -> ((s, dir) => {
-      Splits.mixtureSampleMd5(Tables.documents(s, dir), "doc_id", "source", "text",
-          Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2), salt = "mx")
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Deterministic replication (UP-sampling): per-stratum rates
-    //      above 1 emit floor(rate) copies + a hash-drawn extra, each
-    //      tagged with its 0-based epoch — map-only, no shuffle --------
-    "q_replicate" -> ((s, dir) => {
-      Splits.replicateSampleMd5(Tables.documents(s, dir), "doc_id", "source",
-          Seq("src0" -> 2.5, "src1" -> 1.0, "src2" -> 0.25), salt = "rep")
-        .select("doc_id", "source", "epoch")
-        .orderBy("doc_id", "epoch")
-    }),
-
-    // ---- Exact-size deterministic sample: the n hash-smallest ids,
-    //      via the distributed prefix scan (no driver-merge top-k) ----
-    "q_sample_exact" -> ((s, dir) => {
-      Splits.sampleExactMd5(
-          Tables.documents(s, dir).select("doc_id", "source"),
-          "doc_id", n = 100L, salt = "se1")
-        .select("doc_id", "source", "pos")
-        .orderBy("pos")
-    }),
-
-    // ---- Deterministic per-group cap (the web-pipeline "domain cap"):
-    //      keep at most k docs per source by (salt, id) hash order ----
-    "q_domain_cap" -> ((s, dir) => {
-      Splits.capPerGroupMd5(
-          Tables.documents(s, dir).select("doc_id", "source"),
-          "doc_id", "source", k = 10, salt = "dc")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Epoch-aware shuffle: training-order positions over an
-    //      UP-sampled corpus — hash covers (id, epoch) so replicas
-    //      scatter independently instead of landing adjacent ----------
-    "q_shuffle_epochs" -> ((s, dir) => {
-      val up = Splits.replicateSampleMd5(Tables.documents(s, dir), "doc_id", "source",
-        Seq("src0" -> 2.5, "src1" -> 1.0, "src2" -> 0.25), salt = "rep")
-      Splits.shuffleOrderEpochsMd5(up, "doc_id", "epoch", salt = "se")
-        .select("doc_id", "epoch", "pos")
-        .orderBy("pos")
-    }),
-
-    // ---- Mixture UP-sampling: token-budget-derived rates — sources
-    //      over their target thin (keep-hash), sources under it
-    //      replicate (deterministic epochs); exact long token totals ->
-    //      bit-identical rates on both engines ------------------------
-    "q_mixture_up" -> ((s, dir) => {
-      Splits.mixtureResampleMd5(Tables.documents(s, dir), "doc_id", "source", "text",
-          Seq("src0" -> 0.6, "src1" -> 0.3, "src2" -> 0.1),
-          budgetFactor = 1.0, salt = "mu")
-        .select("doc_id", "source", "epoch")
-        .orderBy("doc_id", "epoch")
-    }),
-
-    // ---- Temperature-flattened mixture (p^α multilingual sampling,
-    //      α = 1/2): targets DERIVED from token mass as exact integer
-    //      sqrt — large sources down-weighted toward small ones; rates
-    //      bit-identical on both engines (isqrt is exact, rate is the
-    //      same short IEEE expression as q_mixture_sample) -------------
-    "q_mixture_temp" -> ((s, dir) => {
-      Splits.temperatureSampleMd5(Tables.documents(s, dir), "doc_id", "source", "text",
-          salt = "tp")
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Token-budget sampling per source: documents taken in hash
-    //      order until each source's cumulative tokens reach the budget
-    //      (boundary-straddling doc included — the packing bin rule).
-    //      One corpus prefix scan on the (group, hash, id) key ----------
-    "q_mixture_token_budget" -> ((s, dir) => {
-      Splits.sampleByTokenBudgetPerGroup(
-          Tables.documents(s, dir).select("doc_id", "source", "text"),
-          "doc_id", "source", "text", budgetTokens = 500L,
-          salt = "tb", md5Family = true)
-        .select("doc_id", "source", "tokens", "tokens_before")
-        .orderBy("doc_id")
-    }),
-
-    // ---- General-α temperature flattening, α = 1/4: weight =
-    //      isqrt(isqrt(t)) — exact BIGINT on both engines, so the
-    //      quarter-power family carries oracle evidence (the pow()-double
-    //      general form remains spec-pinned) -----------------------------
-    "q_mixture_temp_a25" -> ((s, dir) => {
-      Splits.temperatureSampleQuarters(Tables.documents(s, dir),
-          "doc_id", "source", "text", quarters = 1, salt = "tq", md5Family = true)
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // ---- Length-bucketed batching (group_by_length): bucket =
-    //      floor(log2(tokens)) via exact binary-string length, hash-order
-    //      numbering within bucket, batches of 8 ------------------------
-    "q_length_batches" -> ((s, dir) => {
-      Splits.lengthBucketBatches(
-          Tables.documents(s, dir).select("doc_id", "text"),
-          "doc_id", "text", batchSize = 8, salt = "lb", md5Family = true)
-        .orderBy("doc_id")
-    }),
-
-    // ---- Context-window chunking: overlapping token shards, map-only --
-    "q_chunk_docs" -> ((s, dir) => {
-      Packing.chunkDocs(Tables.documents(s, dir), "doc_id", "text", 32, 24)
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // ---- Brute-force cosine top-k (ANN baseline) ----------------------
-    "q_sim_topk" -> ((s, dir) => {
-      Similarity.bruteForceTopK(
-          Tables.embeddings(s, dir), "vec_id", "embedding", (0L until 10L), 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- Embedding covariance (the distributed half of PCA): ONE
-    //      fixed-buffer aggregate pass over quantized vectors — exact
-    //      integer partials, so the 2080-entry matrix is bit-identical on
-    //      any engine; eigendecomposition/projection are driver/map-side
-    //      and spec-checked (PcaSpec) ----------------------------------
-    "q_embed_pca_cov" -> ((s, dir) => {
-      Similarity.covarianceFrame(Tables.embeddings(s, dir), "embedding", 64)
-        .orderBy("i", "j")
-    }),
-
-    // ---- PCA projection (the map-side half after q_embed_pca_cov's
-    //      distributed covariance + driver Jacobi): quantized vectors ×
-    //      quantized trained components -> exact BIGINT coordinates; the
-    //      trained matrix is inlined into the oracle (ivf convention).
-    //      Gate pivots the proj array to scalars (comparator contract) --
-    "q_embed_pca_proj" -> ((s, dir) => {
-      val proj = Similarity.pcaProjectQuantized(
-        Tables.embeddings(s, dir), "vec_id", "embedding", pcaComponentsFor(s, dir))
-      proj.select(
-          col("vec_id") +:
-            (0 until 4).map(j => element_at(col("proj"), j + 1).as(s"pc_${j + 1}")): _*)
-        .orderBy("vec_id")
-    }),
-
-    // ---- JL signed random projection (training-free dim reduction):
-    //      64 -> 16 dims, md5-family ±1 signs, quantized inputs -> exact
-    //      integer coordinates; the oracle re-derives the SIGN MATRIX
-    //      from md5() itself, so the derivation is cross-checked. Gate
-    //      pivots the proj array to scalar columns (array outputs crash
-    //      the driver comparator) --------------------------------------
-    "q_embed_rp" -> ((s, dir) => {
-      val rp = Similarity.randomProjection(
-        Tables.embeddings(s, dir), "vec_id", "embedding", 64, 16)
-      rp.select(
-          col("vec_id") +:
-            (0 until 16).map(j => element_at(col("proj"), j + 1).as(f"rp_$j%02d")): _*)
-        .orderBy("vec_id")
-    }),
-
-    // ---- Embedding near-dup pairs (label-blocked cosine) --------------
-    "q_embed_dup" -> ((s, dir) => {
-      Similarity.embeddingDupPairs(
-          Tables.embeddings(s, dir), "vec_id", "embedding", "label", 0.3,
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- LSH-bucketed ANN (rows-only; recall vs brute force in specs) -
-    "q_ann_lsh" -> ((s, dir) => {
-      Similarity.lshTopK(
-          Tables.embeddings(s, dir), "vec_id", "embedding", (0L until 10L), 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- K-means cluster assignment (the clustering surface itself):
-    //      map-only NearestCells pass; trained centroids inlined into the
-    //      oracle (q_ann_ivf convention, tie toward the higher cell) ----
-    "q_cluster_assign" -> ((s, dir) => {
-      Similarity.clusterAssignWith(
-          Tables.embeddings(s, dir), ivfCentroidsFor(s, dir), "vec_id", "embedding")
-        .orderBy("vec_id")
-    }),
-
-    // ---- SemDeDup-style semantic dedup: k-means cell blocking + cosine
-    //      pairs + components; one survivor per semantic cluster
-    //      (centroids inlined into the oracle, q_ann_ivf convention) ----
-    "q_semantic_dedup" -> ((s, dir) => {
-      Similarity.semanticDedupWith(
-          Tables.embeddings(s, dir), ivfCentroidsFor(s, dir),
-          "vec_id", "embedding", 0.3)
-        .select("vec_id")
-        .orderBy("vec_id")
-    }),
-
-    // ---- IVF ANN (hash-checked: the deterministically-trained centroid
-    //      matrix is inlined into the oracle SQL; recall 0.83 @ 25% scan
-    //      vs brute force in SimilaritySpec)
-    "q_ann_ivf" -> ((s, dir) => {
-      Similarity.ivfTopKWith(
-          Tables.embeddings(s, dir), ivfCentroidsFor(s, dir),
-          "vec_id", "embedding", (0L until 10L), 5, nprobe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- IVF ANN over the PERSISTED index (train once / query many;
-    //      probe join dynamic-partition-prunes to the probed cell dirs;
-    //      same oracle as q_ann_ivf — identical results by construction)
-    "q_ann_ivf_index" -> ((s, dir) => {
-      Similarity.ivfQueryIndex(s, ivfIndexFor(s, dir), (0L until 10L), 5, nprobe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- Product quantization encode: the corpus re-expressed as m
-    //      small codes per vector (32× smaller resident index) — map-only
-    //      NearestCells argmin per coordinate block; trained codebooks
-    //      inlined into the oracle (q_ann_ivf convention) ----
-    "q_pq_encode" -> ((s, dir) => {
-      graft.pipeline.Pq
-        .pqEncode(Tables.embeddings(s, dir), "vec_id", "embedding", pqModelFor(s, dir))
-        .select(
-          col("vec_id"),
-          // the driver's comparator row-sorts raw cells: arrays stringify
-          // (the q_most_array convention)
-          concat_ws("|", col("codes").cast("array<string>")).as("codes"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- PQ ANN via ADC: join-free scan — queries ride as literal
-    //      lookup tables over the code column, top-k through the
-    //      k-bounded pairs aggregate; codebooks AND query LUTs inlined
-    //      into the oracle ----
-    "q_ann_pq" -> ((s, dir) => {
-      val model = pqModelFor(s, dir)
-      val qs = graft.pipeline.Pq.adcQueries(
-        Tables.embeddings(s, dir), "vec_id", "embedding", model, (0L until 10L))
-      pqLastQueries = Some(qs)
-      graft.pipeline.Pq
-        .pqTopKAdc(
-          graft.pipeline.Pq.pqEncode(Tables.embeddings(s, dir), "vec_id", "embedding", model),
-          "vec_id", model, qs, 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- A13 rollup build + partial→final merge (matrix pipeline) -----
-    "q_rollup_merge" -> ((s, dir) => {
-      val ro = Rollup.build(Tables.tsEvents(s, dir), 3600, "value")
-      Rollup.merge(ro, labelsFor(s, dir), Start, Stop, "value")
-    }),
-
-    // ---- W3 frequency inference over a binned history ----------------
-    "q_freq" -> ((s, dir) => {
-      val binned = QueryEngine.selectAggregatedData(
-        Tables.tsEvents(s, dir), labelsFor(s, dir),
-        Seq(AggSpec("value", "count")), Start, Stop, binsize = 600,
-        ordered = false) // infer() re-partitions by label immediately
-      Frequency.infer(binned, 600)
-    }),
-
-    // ---- U3 missing-label anti-join (labels with no data → empty) -----
-    "q_missing_labels" -> ((s, dir) => {
-      val labels = labelsFor(s, dir) + ("ghost" -> Seq(10000000L))
-      QueryEngine.missingLabels(
-        Tables.tsEvents(s, dir), labels, Start, Start + 86400)
-    }),
-
-    // ---- A15 ingest-time aggregation: int-truncating median, loss -----
-    "q_ingest_median" -> ((s, dir) => {
-      val ev = QueryEngine
-        .filterTime(Tables.tsEvents(s, dir), Start, Stop)
-        .withColumn("v", col("value").cast("int"))
-        .withColumn("binstart", col("timestamp") - (col("timestamp") % 21600))
-      ev.groupBy("stream_id", "binstart")
-        .agg(
-          Normalize.medianInt(col("v")).as("median"),
-          count(col("v")).as("results"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("loss"))
-        .withColumn("lossrate", col("loss").cast("double") / col("results"))
-        .orderBy("stream_id", "binstart")
-    }),
-
-    // ---- F-series scalar functions: JSON props, unit conv, safe rate --
-    "q_scalar_funcs" -> ((s, dir) => {
-      val k = get_json_object(col("props"), "$.k").cast("long")
-      QueryEngine
-        .filterTime(Tables.tsEvents(s, dir), Start, Stop)
-        .select(
-          col("stream_id"), col("timestamp"), col("event_id"),
-          k.as("k"),
-          (col("value") * 1000).as("value_ms"),
-          Normalize.safeRate(col("value"), k).as("rate"))
-        .orderBy("event_id")
-    }),
-
-    // ---- TPC-H Q3-style shipping-priority join (bench headliner) ------
-    "q3_shipping" -> ((s, dir) => {
-      val cutoff = lit("1998-06-01").cast("timestamp")
-      val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, dir).filter(col("o_orderdate") < cutoff)
-      val l = Tables.lineitem(s, dir).filter(col("l_shipdate") > cutoff)
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy(col("l_orderkey"),
-          col("o_orderdate").cast("timestamp_ltz").cast("long").as("od_epoch"),
-          col("o_orderpriority"))
-        .agg(
-          OracleParity.decOut(
-            sum(OracleParity.dec(col("l_extendedprice")) *
-              (OracleParity.dec(lit(1.0)) - OracleParity.dec(col("l_discount"))))
-          ).as("revenue"))
-        .orderBy(desc("revenue"), col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // ---- TPC-H Q18 shape: big-big shuffle join gated by a semi join on
-    //      an aggregate (large-volume orders). lineitem⋈orders shuffle on
-    //      orderkey; the HAVING set re-joins as a broadcast-able semi
-    //      side; customer broadcasts.
-    "q18_big_orders" -> ((s, dir) => {
-      // the HAVING aggregate IS the output aggregate: sum_qty per final
-      // group (keyed by o_orderkey) equals the per-order sum already
-      // computed for the > 250 gate — so lineitem is scanned ONCE, the
-      // tiny gated order set broadcasts into orders/customer, and the
-      // round-2 semi-join + second scan + re-aggregation disappear
-      val l = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir).select("c_custkey", "c_name")
-      val big = l.groupBy("l_orderkey")
-        .agg(OracleParity.decSum(col("l_quantity")).as("sum_qty"))
-        .filter(col("sum_qty") > 250)
-      broadcast(big)
-        .join(o, big("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .select(
-          col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate").cast("timestamp_ltz").cast("long").as("od_epoch"),
-          OracleParity.decOut(col("o_totalprice").cast("decimal(18,6)")).as("o_totalprice"),
-          col("sum_qty"))
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-        .limit(100)
-    }),
-
-    // ---- J2-style dimension left joins (broadcast dims) ---------------
-    "q_dims_join" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir)
-      val p = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
-      val su = Tables.supplier(s, dir).select(col("s_suppkey"), col("s_name"))
-      l.join(broadcast(p), l("l_partkey") === p("p_partkey"), "left_outer")
-        .join(broadcast(su), l("l_suppkey") === su("s_suppkey"), "left_outer")
-        .groupBy("p_brand", "s_name")
-        .agg(
-          count(lit(1)).as("n_items"),
-          OracleParity.decSum(col("l_extendedprice")).as("sum_price"))
-        .orderBy("p_brand", "s_name")
-    }),
-
-    // ---- Multimodal: binary payload column + typed metadata -----------
-    // payloads carry REAL PNG/JPEG container headers (built byte-exactly by
-    // the fixture; the oracle reconstructs the same blob) — extractMeta's
-    // ImageHeader expression parses format/dimensions/color from the bytes
-    "q_multimodal_meta" -> ((s, dir) => {
-      Multimodal.extractMeta(Multimodal.mediaTableEncoded(Tables.documents(s, dir)))
-        .withColumn("n_bytes", col("n_bytes").cast("long"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL pixel decode: binary PPM (P6) needs no codec — exact
-    //      per-channel sums + a defined 2x2 nearest-neighbor thumbnail
-    //      from byte-exact synthetic rasters (ASCII md5 hex chars, so the
-    //      oracle rebuilds the raster from the same fields). Raw-text and
-    //      truncated rows decode to NULL (format guard) -----------------
-    "q_multimodal_pixels" -> ((s, dir) => {
-      import graft.functions.PpmDecode
-      Multimodal.mediaTablePpm(Tables.documents(s, dir))
-        .select(col("media_id"), PpmDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL PNG pixel decode: from-scratch Inflater + unfilter kernel
-    //      against javax.imageio as the INDEPENDENT encoder. PNG is
-    //      lossless with spec-mandated decode output, so the gate is
-    //      exact-hash like the P6 path: the raster is ASCII md5 hex, the
-    //      oracle recomputes sums/thumb POSITIONALLY from the same
-    //      fields, and the two implementations meet only at the raster
-    //      definition. Raw-text and truncated rows decode to NULL -------
-    "q_multimodal_png" -> ((s, dir) => {
-      import graft.functions.PngDecode
-      Multimodal.mediaTablePng(s, Tables.documents(s, dir))
-        .select(col("media_id"), PngDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.color_type").as("color_type"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.sum_a").as("sum_a"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL PNG decode, NON-truecolor color types: palette (3,
-    //      PLTE lookup), grayscale (0), gray+alpha (4) — the variants
-    //      that dominate real web-scraped corpora. Same exact-hash
-    //      pattern as q_multimodal_png: javax.imageio is the independent
-    //      encoder, the raster samples (palette INDICES / gray bytes /
-    //      gray+alpha pairs) are ASCII md5 hex, the 256-entry palette is
-    //      a deterministic formula both engines compute, and the oracle
-    //      recomputes sums/thumb POSITIONALLY. Raw-text and
-    //      truncated-inside-IDAT rows decode to NULL ------------------
-    "q_multimodal_png_palette" -> ((s, dir) => {
-      import graft.functions.PngDecode
-      Multimodal.mediaTablePngPalette(s, Tables.documents(s, dir))
-        .select(col("media_id"), PngDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.color_type").as("color_type"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.sum_a").as("sum_a"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL GIF pixel decode (from-scratch variable-code LZW +
-    //      container walk on core JDK; both scan orders — every third
-    //      row INTERLACED, and the JDK GIF writer's interlacer is the
-    //      independent implementation the 4-pass deinterlace is pinned
-    //      against; sequential rows additionally triangulate against the
-    //      JDK reader in GifDecodeSpec). px chars are palette INDICES
-    //      into the shared 256-entry paletteEntry colormap, so the
-    //      oracle recomputes sums + thumb positionally --------------------
-    "q_multimodal_gif" -> ((s, dir) => {
-      import graft.functions.GifDecode
-      Multimodal.mediaTableGif(s, Tables.documents(s, dir))
-        .select(col("media_id"), GifDecode(col("payload")).as("__g"))
-        .select(
-          col("media_id"),
-          col("__g.width").as("width"),
-          col("__g.height").as("height"),
-          col("__g.gct_size").as("gct_size"),
-          col("__g.n_px").as("n_px"),
-          col("__g.sum_r").as("sum_r"),
-          col("__g.sum_g").as("sum_g"),
-          col("__g.sum_b").as("sum_b"),
-          col("__g.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- ANIMATED GIF frame sampling (the video-pipeline shape over
-    //      real multi-frame GIFs from ImageIO's sequence writer): every
-    //      2nd composited canvas contributes exact palette-expanded
-    //      sums; thumb of the last sampled canvas. Sub-frame placement,
-    //      transparency and disposal are spec-pinned on hand-built
-    //      payloads (the JDK writes full frames) ------------------------
-    "q_multimodal_gif_anim" -> ((s, dir) => {
-      import graft.functions.GifFrames
-      Multimodal.mediaTableGifAnim(s, Tables.documents(s, dir))
-        .select(col("media_id"), GifFrames(col("payload"), 2).as("__g"))
-        .select(
-          col("media_id"),
-          col("__g.width").as("width"),
-          col("__g.height").as("height"),
-          col("__g.n_frames").as("n_frames"),
-          col("__g.n_sampled").as("n_sampled"),
-          col("__g.sum_r").as("sum_r"),
-          col("__g.sum_g").as("sum_g"),
-          col("__g.sum_b").as("sum_b"),
-          col("__g.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- 8-bit PALETTE BMP decode: the color-table variant (BGRx
-    //      quads, biClrUsed-0 = full 256-entry table, strict index
-    //      bound) over real javax.imageio bpp=8 DIBs; px chars are
-    //      palette indices into the shared formula colormap, so the
-    //      oracle recomputes positionally like the GIF gate -------------
-    "q_multimodal_bmp_palette" -> ((s, dir) => {
-      import graft.functions.BmpDecode
-      Multimodal.mediaTableBmpPalette(s, Tables.documents(s, dir))
-        .select(col("media_id"), BmpDecode(col("payload")).as("__b"))
-        .select(
-          col("media_id"),
-          col("__b.width").as("width"),
-          col("__b.height").as("height"),
-          col("__b.n_px").as("n_px"),
-          col("__b.sum_r").as("sum_r"),
-          col("__b.sum_g").as("sum_g"),
-          col("__b.sum_b").as("sum_b"),
-          col("__b.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL BMP pixel decode (Windows DIB, 24-bit BI_RGB): the
-    //      bottom-up row order, the 4-byte row padding and the BGR
-    //      sample order are the traps — a flipped decode passes the
-    //      sums and fails the POSITIONED thumb; an unpadded walk
-    //      desyncs every row after the first -----------------------------
-    "q_multimodal_bmp" -> ((s, dir) => {
-      import graft.functions.BmpDecode
-      Multimodal.mediaTableBmp(s, Tables.documents(s, dir))
-        .select(col("media_id"), BmpDecode(col("payload")).as("__b"))
-        .select(
-          col("media_id"),
-          col("__b.width").as("width"),
-          col("__b.height").as("height"),
-          col("__b.n_px").as("n_px"),
-          col("__b.sum_r").as("sum_r"),
-          col("__b.sum_g").as("sum_g"),
-          col("__b.sum_b").as("sum_b"),
-          col("__b.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL GIF ENCODE (the write path): palette-exact P6 in,
-    //      from-scratch LZW-compressed GIF out, pinned through the
-    //      decode-of-encode composition (GifDecodeSpec additionally
-    //      decodes this encoder's output with javax.imageio to break
-    //      own-decoder circularity). A poisoned non-palette pixel every
-    //      7th row → null (exact reverse lookup, never quantization) ----
-    "q_multimodal_gif_write" -> ((s, dir) => {
-      import graft.functions.{GifDecode, GifEncode}
-      Multimodal.mediaTablePpmPalette(s, Tables.documents(s, dir))
-        .select(col("media_id"),
-          GifDecode(GifEncode(col("payload"))).as("__g"))
-        .select(
-          col("media_id"),
-          col("__g.width").as("width"),
-          col("__g.height").as("height"),
-          col("__g.n_px").as("n_px"),
-          col("__g.sum_r").as("sum_r"),
-          col("__g.sum_g").as("sum_g"),
-          col("__g.sum_b").as("sum_b"),
-          col("__g.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL PNG ENCODE (the write path): P6 in, from-scratch PNG out
-    //      (filter-0 scanlines + Deflater + chunk CRCs), pinned through
-    //      the decode-of-encode composition — the encoded BYTES are
-    //      zlib-version-specific by nature, the decoded statistics are
-    //      exact (PngEncodeSpec additionally decodes this encoder's
-    //      output with javax.imageio to break own-decoder circularity) --
-    "q_multimodal_png_write" -> ((s, dir) => {
-      import graft.functions.{PngDecode, PngEncode}
-      Multimodal.mediaTablePpm(Tables.documents(s, dir))
-        .select(col("media_id"),
-          PngDecode(PngEncode(col("payload"))).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.color_type").as("color_type"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- JPEG: tolerance-band gate (the q_sketches pattern). JPEG
-    //      decode output is IMPLEMENTATION-DEFINED (IDCT rounding,
-    //      chroma upsampling) so cross-engine exact-hash parity is
-    //      impossible by the codec's nature; the gate pins exact
-    //      geometry plus in-band booleans — |mean channel error| <= 3.0
-    //      (measured <= ~1.0; a shifted raster measures ~29, a channel
-    //      swap flips rows across the population) and worst channel
-    //      MAE <= 48 (sf10-measured max 40.4 across 285,714 images —
-    //      the band carries tail headroom; uniform-noise output
-    //      measures ~85). Decode runs the FROM-SCRATCH baseline kernel
-    //      (JpegDecode: Huffman + dequant + IDCT + bilinear chroma
-    //      upsample) as one fused map-only expression; the encode side
-    //      stays ImageIO, so the gate is a true cross-codec check ------
-    "q_multimodal_jpeg" -> ((s, dir) => {
-      // booleans ride as int 1/0/NULL: the driver's pandas comparator
-      // maps numeric NULL→NaN cleanly, but a NULLABLE BOOLEAN column
-      // lands as object-dtype None on one side only
-      Multimodal.decodeJpegFused(
-          Multimodal.mediaTableJpeg(s, Tables.documents(s, dir)),
-          meanTolerance = 3.0, maeTolerance = 48.0)
-        .withColumn("in_band_r", col("in_band_r").cast("int"))
-        .withColumn("in_band_g", col("in_band_g").cast("int"))
-        .withColumn("in_band_b", col("in_band_b").cast("int"))
-        .withColumn("in_band_mae", col("in_band_mae").cast("int"))
-        .orderBy("media_id")
-    }),
-
-    // ---- JPEG EXIF metadata walk (APP1 "Exif\0\0" -> TIFF IFD0, BOTH
-    //      byte orders): orientation / datetime / make / model — the
-    //      header-parse operator that decides rotation before decode.
-    //      Payloads carry byte-exact hand-assembled APP1 segments whose
-    //      fields derive from document columns, so the oracle recomputes
-    //      them with no byte introspection -------------------------------
-    "q_multimodal_exif" -> ((s, dir) => {
-      import graft.functions.JpegExif
-      Multimodal.mediaTableExif(s, Tables.documents(s, dir))
-        .select(col("media_id"), JpegExif(col("payload")).as("__e"))
-        .select(
-          col("media_id"),
-          col("__e.orientation").as("orientation"),
-          col("__e.datetime").as("datetime"),
-          col("__e.make").as("make"),
-          col("__e.model").as("model"))
-        .orderBy("media_id")
-    }),
-
-    // ---- EXIF-orientation-APPLIED decode: JpegExif's tag walk COMPOSED
-    //      with the pixel kernel — the raster is viewed UPRIGHT before
-    //      any positional statistic, the operator an image-dedup
-    //      pipeline runs on phone-photo corpora. Geometry (swapped for
-    //      orientations 5..8) and the orientation are exact; the
-    //      POSITIONED thumb and whole-raster MAE are in-band booleans
-    //      over smooth gradient rasters, where skipping or misapplying
-    //      the rotation lands ~90-190 counts off (the q_multimodal_jpeg
-    //      band pattern, made positional). No-EXIF rows pass through as
-    //      orientation 1; raw text is the null mix --------------------
-    "q_multimodal_oriented" -> ((s, dir) => {
-      import graft.functions.JpegOrientedBands
-      Multimodal.mediaTableJpegOriented(s, Tables.documents(s, dir))
-        .select(
-          col("media_id"),
-          JpegOrientedBands(col("payload"), col("expected_px"),
-            thumbTol = 12, maeTol = 8.0).as("__j"))
-        .select(
-          col("media_id"),
-          col("__j.width").as("width"),
-          col("__j.height").as("height"),
-          col("__j.orientation").as("orientation"),
-          col("__j.n_px").as("n_px"),
-          col("__j.thumb_ok").cast("int").as("thumb_ok"),
-          col("__j.in_band_mae").cast("int").as("in_band_mae"))
-        .orderBy("media_id")
-    }),
-
-    // ---- PROGRESSIVE JPEG (SOF2, T.81 Annex G): the same tolerance
-    //      gate over REAL multi-scan progressive streams (the JDK
-    //      writer's progressive mode — spectral selection + successive
-    //      approximation), decoded by the same from-scratch kernel's
-    //      Annex-G path: coefficients accumulate across scans (DC
-    //      first/refine, AC first/refine with EOB runs + correction
-    //      bits) and complete at EOI ------------------------------------
-    "q_multimodal_jpeg_prog" -> ((s, dir) => {
-      Multimodal.decodeJpegFused(
-          Multimodal.mediaTableJpeg(s, Tables.documents(s, dir), progressive = true),
-          meanTolerance = 3.0, maeTolerance = 48.0)
-        .withColumn("in_band_r", col("in_band_r").cast("int"))
-        .withColumn("in_band_g", col("in_band_g").cast("int"))
-        .withColumn("in_band_b", col("in_band_b").cast("int"))
-        .withColumn("in_band_mae", col("in_band_mae").cast("int"))
-        .orderBy("media_id")
-    }),
-
-    // ---- Audio (WAV/RIFF) container metadata: the AudioHeader walk over
-    //      byte-exact synthetic containers ------------------------------
-    "q_multimodal_audio" -> ((s, dir) => {
-      Multimodal
-        .extractAudioMeta(Multimodal.mediaTableEncodedAudio(Tables.documents(s, dir)))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL image resize (binary in, binary out): P6 -> 4x3 P6 via
-    //      the defined nearest-neighbor grid; output md5-pinned AND
-    //      re-decoded (composition: resize's output is itself a valid
-    //      media payload). Null rows (raw text / truncated) pass through
-    //      as null ------------------------------------------------------
-    "q_multimodal_resize" -> ((s, dir) => {
-      import graft.functions.{PpmDecode, PpmResize}
-      Multimodal.mediaTablePpm(Tables.documents(s, dir))
-        .select(
-          col("media_id"),
-          PpmResize(col("payload"), 4, 3).as("__r"))
-        .select(
-          col("media_id"),
-          md5(col("__r")).as("resized_md5"),
-          PpmDecode(col("__r")).getField("width").as("rw"),
-          PpmDecode(col("__r")).getField("sum_r").as("rsum_r"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL sample decode: PCM WAV needs no codec — per-channel
-    //      signed sums + peaks over the same byte-exact containers the
-    //      AudioHeader gate parses (data chunk = the document bytes, so
-    //      the oracle recomputes samples from text positions). Even docs
-    //      are 16-bit mono (LE signed), odd are 8-bit stereo (unsigned,
-    //      128 midpoint); raw-text rows decode to NULL ------------------
-    "q_multimodal_pcm" -> ((s, dir) => {
-      import graft.functions.PcmDecode
-      Multimodal.mediaTableEncodedAudio(Tables.documents(s, dir))
-        .select(col("media_id"), PcmDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.channels").as("channels"),
-          col("__d.bits").as("bits"),
-          col("__d.n_frames").as("n_frames"),
-          col("__d.sum_c0").as("sum_c0"),
-          col("__d.peak_c0").as("peak_c0"),
-          col("__d.sum_c1").as("sum_c1"),
-          col("__d.peak_c1").as("peak_c1"))
-        .orderBy("media_id")
-    }),
-
-    // ---- PERCEPTUAL IMAGE HASH (dHash): the image-dedup primitive —
-    //      per-cell area-mean grayscale, one bit per adjacent-cell
-    //      comparison, integer-exact throughout (cross-multiplied
-    //      means, no division) so the hash itself is oracle-gatable.
-    //      Gate grid 3x2 over the MIXED-FORMAT table (r18 #1): fmt
-    //      cycles P6 / PNG (both interlace orders) / GIF (palette-
-    //      expanded through the shared formula colormap) / BMP / flat
-    //      DC-only JPEG (decodes exactly to a uniform raster — dhash 0
-    //      by definition, geometry pinned) / lossless WebP / baseline
-    //      TIFF (byte order + compression cycling). Images below the
-    //      grid, raw
-    //      text and truncated containers are the null mix. Tagged JPEG
-    //      hashes with EXIF orientation APPLIED — spec-pinned
-    //      (tag-only-rotated photos hash identically), as is P6 == PNG
-    //      == BMP hash equality on the same raster ---------------------
-    "q_image_dhash" -> ((s, dir) => {
-      import graft.functions.ImageDHash
-      Multimodal.mediaTableDhashMixed(s, Tables.documents(s, dir))
-        .select(col("media_id"), ImageDHash(col("payload"), 3, 2).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.format").as("format"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.dhash").as("dhash"))
-        .orderBy("media_id")
-    }),
-
-    // ---- IMAGE NEAR-DUP PAIRS over the perceptual dHash: 16-bit
-    //      quarter blocking (pigeonhole: hamming <= 3 of 64 bits agrees
-    //      on >= 1 quarter) + exact popcount verify — the simhashPairs
-    //      inverted-list shape on the image hash, now over the MIXED
-    //      formats a crawl contains (P6/PNG/GIF/BMP/WebP/TIFF cycling
-    //      on doc_id//4; JPEG stays out — a lossy hash is not
-    //      oracle-re-minable and exact flat payloads are all-uniform,
-    //      which would degenerate the mine to an all-pairs clique).
-    //      The table plants one near-dup per doc (RGB: one channel of
-    //      one pixel +1; GIF: one palette index +1 — either way <= 2
-    //      dHash bits move, so blocking MUST find the pair); the oracle
-    //      re-mines the pairs from scratch: per-format gray, per-cell
-    //      sums, bits, band keys, the band self-join, hamming filter --
-    "q_image_dhash_dup" -> ((s, dir) => {
-      Dedup.imageDhashPairs(
-          Multimodal.mediaTableImagePairs(s, Tables.documents(s, dir)),
-          "media_id", "payload", maxHamming = 2,
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- CMYK / YCCK JPEG (Adobe APP14): 4-component decode with the
-    //      transform-dependent RGB contract. The payloads are flat
-    //      DC-only streams, which a JPEG decodes EXACTLY (nothing for
-    //      quantization to lose) — so this lossy-container gate is
-    //      HASH-EXACT: the oracle recomputes the converted RGB straight
-    //      from the md5-derived component values. Cycles Adobe-CMYK /
-    //      YCCK / plain (no marker); raw text is the null mix ---------
-    "q_multimodal_cmyk" -> ((s, dir) => {
-      import graft.functions.JpegDecode
-      Multimodal.mediaTableCmyk(s, Tables.documents(s, dir))
-        .select(col("media_id"), JpegDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.n_comp").as("n_comp"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- FLAC decode, FROM SCRATCH: STREAMINFO walk, frame headers
-    //      with verified CRC-8/CRC-16, constant/verbatim/fixed/LPC
-    //      subframes, Rice residual partitions (both methods + raw
-    //      escapes), all four stereo decorrelations. Samples derive
-    //      from text bytes exactly like the PCM gate, and FLAC is
-    //      LOSSLESS — so this codec gate is HASH-EXACT, no tolerance
-    //      band. Raw-text rows and CRC-corrupted rows are the null mix -
-    "q_multimodal_flac" -> ((s, dir) => {
-      import graft.functions.FlacDecode
-      Multimodal.mediaTableFlac(s, Tables.documents(s, dir))
-        .select(col("media_id"), FlacDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.channels").as("channels"),
-          col("__d.bits").as("bits"),
-          col("__d.n_frames").as("n_frames"),
-          col("__d.sum_c0").as("sum_c0"),
-          col("__d.peak_c0").as("peak_c0"),
-          col("__d.sum_c1").as("sum_c1"),
-          col("__d.peak_c1").as("peak_c1"))
-        .orderBy("media_id")
-    }),
-
-    // ---- MIXED-FORMAT audio sniff: AudioDecode dispatches each payload
-    //      by magic (RIFF/WAVE -> PcmDecode, fLaC -> FlacDecode,
-    //      FORM/AIFF -> AiffDecode) and folds real per-channel sample
-    //      statistics into one schema — the crawled-corpus audio
-    //      operator, where no codec column exists. All three kernels
-    //      are LOSSLESS, so unlike the image sniff this mixed gate is
-    //      hash-exact end to end; raw text and format-appropriate
-    //      corruptions are the null mix ------------------------------
-    "q_multimodal_audio_mixed" -> ((s, dir) => {
-      import graft.functions.AudioDecode
-      Multimodal.mediaTableAudioMixed(s, Tables.documents(s, dir))
-        .select(col("media_id"), AudioDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.format").as("format"),
-          col("__d.channels").as("channels"),
-          col("__d.bits").as("bits"),
-          col("__d.n_frames").as("n_frames"),
-          col("__d.sum_c0").as("sum_c0"),
-          col("__d.peak_c0").as("peak_c0"),
-          col("__d.sum_c1").as("sum_c1"),
-          col("__d.peak_c1").as("peak_c1"))
-        .orderBy("media_id")
-    }),
-
-    // ---- PERCEPTUAL AUDIO FINGERPRINT: the audio sibling of dHash —
-    //      the decoded sample stream's amplitude envelope in nWin floor
-    //      windows, one bit per adjacent-window mean comparison
-    //      (cross-multiplied, integer-exact → the fingerprint itself is
-    //      oracle-gatable). Gate windows 9 (8 bits) over the mixed
-    //      WAV/FLAC table — short clips (nf < 9), raw text and corrupt
-    //      streams are the null mix; both codecs fingerprint the SAME
-    //      derivation so the oracle is codec-blind ---------------------
-    "q_audio_fp" -> ((s, dir) => {
-      import graft.functions.AudioFingerprint
-      Multimodal.mediaTableAudioMixed(s, Tables.documents(s, dir))
-        .select(col("media_id"), AudioFingerprint(col("payload"), 9).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.format").as("format"),
-          col("__d.n_frames").as("n_frames"),
-          col("__d.fp").as("fp"))
-        .orderBy("media_id")
-    }),
-
-    // ---- AUDIO NEAR-DUP PAIRS over the 65-window / 64-bit production
-    //      fingerprint: the shared 16-bit quarter-block miner
-    //      (pigeonhole + exact popcount). The table plants CROSS-CODEC
-    //      near-dups — base clip as PCM WAV, one-sample-bumped copy as
-    //      FLAC (one envelope window moves → <= 2 bits) — so the gate
-    //      pins both the miner and the lossless cross-codec invariance;
-    //      the oracle re-mines from the sample derivation: windows,
-    //      bits, band keys, self-join, hamming filter ------------------
-    "q_audio_fp_dup" -> ((s, dir) => {
-      Dedup.audioFpPairs(
-          Multimodal.mediaTableAudioPairs(s, Tables.documents(s, dir)),
-          "media_id", "payload", maxHamming = 2,
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- LOSSLESS WebP (VP8L), decoded from scratch: LSB-first
-    //      bitstream, canonical prefix codes (simple + code-length-coded
-    //      with repeats), color cache, LZ77 plain backward references,
-    //      and all four transforms (14 predictor modes, color,
-    //      subtract-green, color-indexing with bundling). The generator
-    //      is graft's own VP8L ENCODER (no JDK WebP writer exists) —
-    //      arms cycle every decoder feature; VP8L is lossless, so the
-    //      gate is HASH-EXACT on sums, alpha and the positioned thumb.
-    //      Raw text and truncated payloads are the null mix ------------
-    "q_multimodal_webp" -> ((s, dir) => {
-      import graft.functions.WebpDecode
-      Multimodal.mediaTableWebp(s, Tables.documents(s, dir))
-        .select(col("media_id"), WebpDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.sum_a").as("sum_a"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- Baseline TIFF, decoded from scratch: both byte orders, the
-    //      tag directory with inline/offset values, strip-split pixel
-    //      data under none/LZW/Deflate/PackBits compression (plus the
-    //      horizontal predictor on the LZW/Deflate arms), and all four
-    //      photometrics incl. WHITE-IS-ZERO inversion and the 16-bit
-    //      SHORT palette. Every arm is lossless, so the gate is
-    //      HASH-EXACT on sums and the positioned thumb; predictor,
-    //      byte order and strip split change bytes but not pixels, so
-    //      the oracle needs only (photometric, px). Raw text and
-    //      payloads truncated inside the strip data are the null mix --
-    "q_multimodal_tiff" -> ((s, dir) => {
-      import graft.functions.TiffDecode
-      Multimodal.mediaTableTiff(s, Tables.documents(s, dir))
-        .select(col("media_id"), TiffDecode(col("payload")).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.n_px").as("n_px"),
-          col("__d.sum_r").as("sum_r"),
-          col("__d.sum_g").as("sum_g"),
-          col("__d.sum_b").as("sum_b"),
-          col("__d.thumb_hex").as("thumb_hex"))
-        .orderBy("media_id")
-    }),
-
-    // ---- VIDEO FRAME SIGNATURES: frame sampling composed with the
-    //      dHash primitive — every 2nd frame's luma dHash on a 9x7 grid
-    //      (56 bits: the signature long stays BIGINT-exact in the
-    //      oracle), EXPLODED to scalar rows (media_id, k, sig). The
-    //      oracle recomputes each sampled frame's hash positionally
-    //      from the clip derivation — per-cell luma sums, floor cells,
-    //      cross-multiplied means, bit packing -------------------------
-    "q_video_sigs" -> ((s, dir) => {
-      import graft.functions.VideoFrameSigs
-      Multimodal.mediaTableVideoPairs(Tables.documents(s, dir))
-        .select(col("media_id"), VideoFrameSigs(col("payload"), 2, 9, 7).as("__v"))
-        .select(
-          col("media_id"),
-          col("__v.format").as("format"),
-          col("__v.width").as("width"),
-          col("__v.height").as("height"),
-          col("__v.n_frames").as("n_frames"),
-          col("__v.n_sampled").as("n_sampled"),
-          posexplode_outer(col("__v.sigs")).as(Seq("k", "sig")))
-        .withColumn("k", col("k").cast("long"))
-        .orderBy("media_id", "k")
-    }),
-
-    // ---- VIDEO NEAR-DUP PAIRS on shared sampled-frame hashes: the
-    //      inverted-list shape (explode signatures -> equi-join on the
-    //      hash value, never all-pairs) over the production 9x8 grid.
-    //      The table plants one cross-clip shared frame per doc (clip B
-    //      reuses clip A's frame 0); the oracle re-mines from the frame
-    //      derivation, joining videos on the full 64-bit signature ----
-    "q_video_sig_dup" -> ((s, dir) => {
-      Dedup.videoFrameSigPairs(
-          Multimodal.mediaTableVideoPairs(Tables.documents(s, dir)),
-          "media_id", "payload", step = 2, gw = 9, gh = 8,
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- REAL video frame-sampling: YUV4MPEG2 (raw YUV) needs no
-    //      codec — every 2nd frame's luma plane folded to exact sums
-    //      over byte-exact 3-frame C444 clips; raw-text rows and a C420
-    //      header (subsampled geometry, out of scope by design) are the
-    //      null-guard mix ----------------------------------------------
-    "q_multimodal_frames" -> ((s, dir) => {
-      import graft.functions.Y4mSample
-      Multimodal.mediaTableY4m(Tables.documents(s, dir))
-        .select(col("media_id"), Y4mSample(col("payload"), 2).as("__d"))
-        .select(
-          col("media_id"),
-          col("__d.width").as("width"),
-          col("__d.height").as("height"),
-          col("__d.n_frames").as("n_frames"),
-          col("__d.n_sampled").as("n_sampled"),
-          col("__d.y_sum").as("y_sum"),
-          col("__d.y_peak").as("y_peak"))
-        .orderBy("media_id")
-    }),
-
-    // ---- Video (MP4/ISO-BMFF) container metadata: the VideoHeader box
-    //      walk over byte-exact synthetic containers -------------------
-    "q_multimodal_video" -> ((s, dir) => {
-      Multimodal
-        .extractVideoMeta(Multimodal.mediaTableEncodedVideo(Tables.documents(s, dir)))
-        .orderBy("media_id")
-    }),
-
-    // ---- Arrow-batched multimodal feature extraction (the mapInPandas
-    //      execution shape on real Arrow buffers). Hash-gated: the
-    //      payloads are reconstructed deterministically from document
-    //      fields (the q_multimodal_meta convention), so the oracle
-    //      rebuilds the identical blob in DuckDB and derives the byte
-    //      statistics from its hex form. Exact parity with the per-row
-    //      form is additionally asserted in MultimodalSpec.
-    "q_multimodal_bytestats" -> ((s, dir) => {
-      Multimodal
-        .extractFeaturesArrow(s, Multimodal.mediaTableEncoded(Tables.documents(s, dir)))
-        .toDF()
-        .orderBy("media_id")
-    }),
-
-    // ---- DECODE-BACKED features over a MIXED-FORMAT corpus: the
-    //      MediaDecode sniff dispatches each payload to its from-scratch
-    //      kernel (P6/TIFF/PNG/GIF/BMP/JPEG/WebP) and folds real channel
-    //      sums + the positioned thumb into the shared schema — the
-    //      operator a crawled corpus needs, where no format column
-    //      exists. JPEG sums are implementation-defined, so the hash
-    //      gate nulls them (q_multimodal_jpeg band-judges that codec);
-    //      raw text and truncated containers are the null rows ---------
-    "q_multimodal_features" -> ((s, dir) => {
-      Multimodal
-        .decodedFeatures(Multimodal.mediaTableMixed(s, Tables.documents(s, dir)))
-        .orderBy("media_id")
-    }),
-
-    // ---- Embedding near-dup with a DERIVED block key: sign-bit LSH bucket
-    //      + 2-probe, exact-cosine verify — the 100 TB path where no label
-    //      column exists to block on. Fully oracle-checked: the md5-derived
-    //      hyperplanes are engine-reproducible, DuckDB recomputes the
-    //      buckets and probe set.
-    "q_embed_dup_lsh" -> ((s, dir) => {
-      Similarity
-        .embeddingDupPairsLsh(
-          Tables.embeddings(s, dir), "vec_id", "embedding", 0.3,
-          planes = 8, dims = 64, probes = 2,
-          maxCandidates = Some(Dedup.defaultVolumeBudget(s)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- Approximate sketches for 100 TB interactive profiling: HLL
-    //      distinct + KLL-style quantiles per label (rows-only check —
-    //      sketch internals differ across engines by construction).
-    //      Quantiles are emitted as scalar p50/p95/p99 columns: the driver's
-    //      pandas comparator cannot sort ArrayType output.
-    // sketch internals differ across engines by construction, so the
-    // oracle check is TOLERANCE-BANDED through the exact-hash gate: the
-    // exact columns (n, nd_exact) hash-compare directly, and each sketch
-    // estimate is emitted as an in-band BOOLEAN (HLL within its 1%-config
-    // x5 margin; approx percentiles inside exact +/-1%-rank bands) that
-    // the oracle pins to TRUE — a sketch drifting out of bounds flips the
-    // boolean and fails the hash, so no output cell goes unverified.
-    "q_sketches" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = QueryEngine
-        .attachLabels(
-          QueryEngine.filterTime(Tables.tsEvents(s, dir), Start, Stop),
-          labelsFor(s, dir))
-        .select(col("nntsclabel"), col("value"))
-      // Exact distinct via TWO-LEVEL aggregation, NOT countDistinct in the
-      // same agg as the sketches: mixing a distinct aggregate with the
-      // object-buffer sketch aggregates (HLL, percentile_approx) makes
-      // Catalyst's distinct rewrite drag both sketch buffers through the
-      // Expand + sort path — measured 17.9 s vs 0.3 + 1 s split apart at
-      // sf0.1. Two-level (group by (label, value), then count groups) is
-      // also the shape that survives skewed labels at 100 TB: the first
-      // level map-side-combines per value, no single hot distinct set.
-      val byValue = ev.groupBy("nntsclabel", "value").agg(count(lit(1)).as("__c"))
-      // count(value), not count(*): a NULL-value group must not count as a
-      // distinct value — countDistinct and the oracle's count(DISTINCT
-      // value) both ignore NULLs, and counting the NULL group here would
-      // shift nd_exact (and the hll band around it) off by one.
-      val exact = byValue.groupBy("nntsclabel")
-        .agg(sum("__c").as("n"), count(col("value")).as("nd_exact"))
-      val approxAggs = ev
-        .groupBy("nntsclabel")
-        .agg(
-          approx_count_distinct(col("value"), 0.01).as("__hll"),
-          percentile_approx(col("value"), array(lit(0.5), lit(0.95), lit(0.99)), lit(10000))
-            .as("__pcts"))
-      val sketches = exact.join(approxAggs, "nntsclabel")
-      // Exactness bands as DISCRETE order statistics from one ranked
-      // pass: a distributed sort per label instead of the exact
-      // `percentile` buffer it replaces (whose per-group value map took
-      // 17.8 s at sf0.1 vs ~2 s for this). percentile_approx's rank
-      // error (1/accuracy = 1e-4) is far inside the ±0.01-quantile
-      // bands, so the in-band booleans the oracle asserts stay TRUE.
-      // (Band-checking is a verification query: the 3-label window sort
-      // is one task per label — fine here; a production-scale rank needs
-      // range partitioning, which the gate's tiny label count defeats.)
-      // __n as a WINDOW count over the SAME per-label partitioning the
-      // rank already establishes (r20, guide §2.4 shared exchange): the
-      // r19 shape computed it as a separate groupBy pass over ev — a
-      // whole extra scan + label-attach join — and broadcast it back in.
-      // The count window reuses the rank window's exchange and sort
-      // (unbounded frame, no added order), so q_sketches drops from 4
-      // full passes over events to 3.
-      val rn = row_number().over(
-        Window.partitionBy("nntsclabel").orderBy("value"))
-      def bandAt(q: Double) = max(when(
-        col("rn") === greatest(lit(1L), ceil(col("__n") * lit(q)).cast("long")),
-        col("value")))
-      val bands = ev
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy("nntsclabel")))
-        .withColumn("rn", rn)
-        .groupBy("nntsclabel")
-        .agg(
-          bandAt(0.49).as("__b49"), bandAt(0.51).as("__b51"),
-          bandAt(0.94).as("__b94"), bandAt(0.96).as("__b96"),
-          bandAt(0.98).as("__b98"), bandAt(1.0).as("__b100"))
-      sketches.join(bands, "nntsclabel")
-        .select(
-          col("nntsclabel"), col("n"), col("nd_exact"),
-          (abs(col("__hll") - col("nd_exact")) <= col("nd_exact") * 0.05)
-            .as("hll_within_5pct"),
-          try_element_at(col("__pcts"), lit(1))
-            .between(col("__b49"), col("__b51")).as("p50_in_band"),
-          try_element_at(col("__pcts"), lit(2))
-            .between(col("__b94"), col("__b96")).as("p95_in_band"),
-          try_element_at(col("__pcts"), lit(3))
-            .between(col("__b98"), col("__b100")).as("p99_in_band"))
-        .orderBy("nntsclabel")
-    }),
-
-    // ---- As-of join: each click aligned with the latest prior purchase
-    //      of the same stream (union + carry-forward window, one shuffle)
-    "q_asof_join" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = QueryEngine.filterTime(Tables.tsEvents(s, dir), Start, Stop)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("stream_id", "timestamp", "event_id", "value")
-      // dedupe purchases to one per (stream, ts) — keep max event_id — so
-      // the as-of match is well-defined in both engines
-      val wDedup = Window.partitionBy("stream_id", "timestamp").orderBy(desc("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .withColumn("__rn", row_number().over(wDedup))
-        .filter(col("__rn") === 1)
-        .select("stream_id", "timestamp", "value")
-      TimeSeriesOps.asofJoin(
-          clicks, purchases.withColumnRenamed("value", "purchase_value"),
-          Seq("stream_id"), "timestamp", Seq("purchase_value"))
-        .orderBy("stream_id", "timestamp", "event_id")
-    }),
-
-    // ---- Same as-of semantics through the CUSTOM PHYSICAL OPERATOR
-    //      (rung (c): AsOfJoinNode + strategy + sort-merge AsOfJoinExec);
-    //      shares q_asof_join's oracle SQL — both must hash-match it.
-    "q_asof_native" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = QueryEngine.filterTime(Tables.tsEvents(s, dir), Start, Stop)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("stream_id", "timestamp", "event_id", "value")
-      val wDedup = Window.partitionBy("stream_id", "timestamp").orderBy(desc("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .withColumn("__rn", row_number().over(wDedup))
-        .filter(col("__rn") === 1)
-        .select("stream_id", "timestamp", "value")
-      TimeSeriesOps.asofJoinNative(
-          clicks, purchases.withColumnRenamed("value", "purchase_value"),
-          Seq("stream_id"), "timestamp", Seq("purchase_value"))
-        .orderBy("stream_id", "timestamp", "event_id")
-    }),
-
-    // ---- Rolling z-score anomaly detection (the netevmon-style event
-    //      detector as a relational operator): per-stream 20-row
-    //      trailing baseline, quantized exact window sums, |z| >= 2.5.
-    //      sqrt is IEEE correctly-rounded, so even the z values are
-    //      bit-reproducible cross-engine ------------------------------
-    "q_anomaly" -> ((s, dir) => {
-      TimeSeriesOps.rollingZScore(
-          Tables.tsEvents(s, dir)
-            .select("stream_id", "timestamp", "event_id", "value"),
-          "stream_id", "timestamp", "event_id", "value",
-          windowRows = 20, minN = 10, threshold = 2.5)
-        .orderBy("stream_id", "timestamp", "event_id")
-    }),
-
-    // ---- Plateau detection: maximal runs at/above a level, >= minRun
-    //      rows, via the gaps-and-islands row_number identity ----------
-    "q_plateau" -> ((s, dir) => {
-      TimeSeriesOps.plateaus(
-          Tables.tsEvents(s, dir)
-            .select("stream_id", "timestamp", "event_id", "value"),
-          "stream_id", "timestamp", "event_id", "value",
-          level = 100.0, minRun = 2)
-        .orderBy("stream_id", "t_start")
-    }),
-
-    // ---- CUSUM changepoint detection: the sequential recursion as a
-    //      relational prefix scan (g = S − running-min S); EXACT integer
-    //      arithmetic end to end — no float reduction anywhere ---------
-    "q_cusum" -> ((s, dir) => {
-      TimeSeriesOps.cusum(
-          Tables.tsEvents(s, dir)
-            .select("stream_id", "timestamp", "event_id", "value"),
-          "stream_id", "timestamp", "event_id", "value",
-          k = 60.0, h = 500.0)
-        .orderBy("stream_id", "timestamp", "event_id")
-    }),
-
-    // ---- Fixed-point Holt-Winters forecast-deviation detector: the
-    //      one genuinely-sequential recursion, made oracle-gatable by
-    //      an all-integer state (level/trend/dev as scaled longs, each
-    //      step exact muls + ONE half-up rounding floor-div) — the
-    //      DuckDB oracle replays it with a recursive CTE. Input bounded
-    //      (50 series x 120 rows) to keep the oracle recursion shallow;
-    //      the operator itself is unbounded (one fold per series) ------
-    "q_hw" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val w = Window.partitionBy("stream_id").orderBy("timestamp", "event_id")
-      val bounded = Tables.tsEvents(s, dir)
-        .select("stream_id", "timestamp", "event_id", "value")
-        .filter(col("stream_id") < 50)
-        .withColumn("__i", row_number().over(w))
-        .filter(col("__i") <= 120)
-        .drop("__i")
-        .as[graft.streaming.StreamingDetect.SeriesRow]
-      graft.streaming.StreamingDetect.holtWintersFixedBatch(
-          s, bounded, alpha = 0.3, beta = 0.1, gamma = 0.3,
-          m = 3.0, minN = 10L, minDev = 0.001, quant = 1e6)
-        .toDF()
-        .orderBy("stream_id", "timestamp", "event_id")
-    }),
-
-    // ---- Gap-based sessionization (window-function suite) -------------
-    "q_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("stream_id").orderBy("timestamp", "event_id")
-      QueryEngine
-        .filterTime(Tables.tsEvents(s, dir), Start, Stop)
-        .withColumn("prev", lag("timestamp", 1).over(w))
-        .withColumn(
-          "newsess",
-          when(col("prev").isNull || col("timestamp") - col("prev") > 1800, 1L)
-            .otherwise(0L))
-        .withColumn(
-          "session_id",
-          sum("newsess").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("stream_id", "session_id")
-        .agg(
-          count(lit(1)).as("n_events"),
-          min("timestamp").as("t_start"),
-          max("timestamp").as("t_end"))
-        .withColumn("duration", col("t_end") - col("t_start"))
-        .orderBy("stream_id", "session_id")
-    })
-  )
-
-  // ---------------------------------------------------------------------
-  // Oracles
-  // ---------------------------------------------------------------------
-
-  /** q_ann_ivf oracle: reproduces the NearestCells assignment + probing in
-    * DuckDB against the trained centroid matrix inlined as literals (the
-    * q_ann_lsh planeWeights pattern — training itself stays Spark-side,
-    * everything after it is hash-checked). Score = 2·v·c − |c|² with the
-    * dot product summed in index order (list_sum over list_transform walks
-    * the list left to right, same as the expression's loop); |c|² is the
-    * same Scala-side fold NearestCells precomputes, inlined as a literal;
-    * ties rank toward the HIGHER cell index, matching NearestCells.
-    */
-  private def ivfOracle: String = ivfLastTrained match {
-    case None =>
-      // oracle dumped without the query having run (not the Verify flow,
-      // which always runs queries first): typed empty result, never stale
-      // centroids
-      """SELECT CAST(NULL AS BIGINT) AS query_id,
-        |       CAST(NULL AS BIGINT) AS neighbor_id,
-        |       CAST(NULL AS INTEGER) AS rank,
-        |       CAST(NULL AS DOUBLE) AS sim
-        |WHERE 1 = 0""".stripMargin
-    case Some(cents) =>
-      val cos =
-        """round(
-          |  list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE)))
-          |  / (sqrt(list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(va[i] AS DOUBLE))))
-          |     * sqrt(list_sum(list_transform(range(1, len(vb)+1), i -> CAST(vb[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE))))), 6)""".stripMargin
-      val values = cents.zipWithIndex.map { case (c, i) =>
-        val lst = c.map(java.lang.Double.toString).mkString("[", ",", "]")
-        val nrm = java.lang.Double.toString(c.map(x => x * x).sum)
-        s"($i, $lst, $nrm)"
-      }.mkString(",\n")
-      s"""WITH cent AS (
-         |  SELECT * FROM (VALUES
-         |$values
-         |  ) AS t(cell, w, nrm)
-         |), sc AS (
-         |  SELECT e.vec_id, c.cell,
-         |         2 * list_sum(list_transform(range(1, len(e.embedding)+1),
-         |               d -> CAST(e.embedding[d] AS DOUBLE) * c.w[d])) - c.nrm AS s
-         |  FROM embeddings e, cent c
-         |), rk AS (
-         |  SELECT vec_id, cell,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell DESC) AS rn
-         |  FROM sc
-         |), corpus AS (
-         |  SELECT e.vec_id AS neighbor_id, e.embedding AS vb, r.cell AS cb
-         |  FROM embeddings e JOIN rk r ON e.vec_id = r.vec_id AND r.rn = 1
-         |), q AS (
-         |  SELECT e.vec_id AS query_id, e.embedding AS va, r.cell AS bkt
-         |  FROM embeddings e JOIN rk r ON e.vec_id = r.vec_id AND r.rn <= 4
-         |  WHERE e.vec_id < 10
-         |), s2 AS (
-         |  SELECT query_id, neighbor_id, $cos AS sim
-         |  FROM q JOIN corpus ON q.bkt = corpus.cb
-         |  WHERE neighbor_id != query_id
-         |), r2 AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM s2
-         |)
-         |SELECT query_id, neighbor_id, rank, sim FROM r2 WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
-  }
-
-  private def dlit(x: Double): String = java.lang.Double.toString(x)
-  private def dlist(xs: Seq[Double]): String = xs.map(dlit).mkString("[", ",", "]")
-
-  /** Shared encode CTE for the PQ oracles: replays the per-block
-    * NearestCells argmin (2·v·w − |w|², tie toward the higher code) in
-    * DuckDB against the trained codebooks inlined as literals. The
-    * DOUBLE·DECIMAL products promote to DOUBLE before any addition, and
-    * list_sum walks left to right, so every score bit-matches the
-    * expression (the [[ivfOracle]] argument).
-    */
-  private def pqEncodeCte(model: graft.pipeline.Pq.PqModel): String = {
-    val sub = model.subDim
-    val values = model.codebooks.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.map { case (w, c) =>
-        s"($s, $c, ${dlist(w)}, ${dlit(w.map(x => x * x).sum)})"
-      }
-    }.mkString(",\n")
-    s"""cb AS (
-       |  SELECT * FROM (VALUES
-       |$values
-       |  ) AS t(s, code, w, nrm)
-       |), sc AS (
-       |  SELECT e.vec_id, c.s, c.code,
-       |         2 * list_sum(list_transform(range(1, ${sub + 1}),
-       |               d -> CAST(e.embedding[c.s * $sub + d] AS DOUBLE) * c.w[d])) - c.nrm AS sc
-       |  FROM embeddings e, cb c
-       |), rk AS (
-       |  SELECT vec_id, s, code,
-       |         row_number() OVER (PARTITION BY vec_id, s ORDER BY sc DESC, code DESC) AS rn
-       |  FROM sc
-       |), enc AS (
-       |  SELECT vec_id, list(CAST(code AS INTEGER) ORDER BY s) AS codes
-       |  FROM rk WHERE rn = 1 GROUP BY vec_id
-       |)""".stripMargin
-  }
-
-  private def pqEncodeOracle: String = pqLastTrained match {
-    case None =>
-      """SELECT CAST(NULL AS BIGINT) AS vec_id,
-        |       CAST(NULL AS VARCHAR) AS codes
-        |WHERE 1 = 0""".stripMargin
-    case Some(model) =>
-      s"""WITH ${pqEncodeCte(model)}
-         |SELECT vec_id, array_to_string(codes, '|') AS codes
-         |FROM enc ORDER BY vec_id""".stripMargin
-  }
-
-  /** q_ann_pq oracle: the encode CTE plus one UNION ALL arm per query,
-    * each arm scoring every code row through the query's inlined ADC
-    * tables. The per-block lookups cast to DOUBLE[] FIRST (a bare decimal
-    * list would sum exactly instead of IEEE-rounding per step) and the
-    * explicit `+` chains are left-associated in both engines, matching
-    * the expression's reduceLeft.
-    */
-  private def annPqOracle: String = (pqLastTrained, pqLastQueries) match {
-    case (Some(model), Some(qs)) =>
-      val lutN = model.lutNorm
-      def idx(s: Int) = s"(codes[${s + 1}] + 1)"
-      def hit(tab: Seq[Double], s: Int) =
-        s"(CAST(${dlist(tab)} AS DOUBLE[]))[${idx(s)}]"
-      val nsum = (0 until model.m).map(s => hit(lutN(s), s)).mkString(" + ")
-      val arms = qs.map { q =>
-        val dsum = (0 until model.m).map(s => hit(q.lutDot(s), s)).mkString(" + ")
-        s"""  SELECT vec_id AS neighbor_id, CAST(${q.id} AS BIGINT) AS query_id,
-           |         round(($dsum) / (${dlit(q.qnorm)} * sqrt($nsum)), 6) AS sim
-           |  FROM enc WHERE vec_id <> ${q.id}""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH ${pqEncodeCte(model)},
-         |sc2 AS (
-         |$arms
-         |), r2 AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM sc2
-         |)
-         |SELECT query_id, neighbor_id, rank, sim FROM r2 WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
-    case _ =>
-      """SELECT CAST(NULL AS BIGINT) AS query_id,
-        |       CAST(NULL AS BIGINT) AS neighbor_id,
-        |       CAST(NULL AS INTEGER) AS rank,
-        |       CAST(NULL AS DOUBLE) AS sim
-        |WHERE 1 = 0""".stripMargin
-  }
-
-  /** q_embed_pca_proj oracle: the TRAINED quantized component matrix
-    * inlined as integer literals (the [[ivfOracle]] convention — training
-    * stays Spark-side, everything after it is hash-checked). Vectors
-    * quantize with the same floor(v·1e6 + 0.5), products and sums are
-    * exact integers, so the pivot agrees bit-for-bit.
-    */
-  private def pcaProjOracle: String = pcaLastTrained match {
-    case None =>
-      // oracle dumped without the query having run: typed empty result
-      """SELECT CAST(NULL AS BIGINT) AS vec_id,
-        |       CAST(NULL AS BIGINT) AS pc_1, CAST(NULL AS BIGINT) AS pc_2,
-        |       CAST(NULL AS BIGINT) AS pc_3, CAST(NULL AS BIGINT) AS pc_4
-        |WHERE 1 = 0""".stripMargin
-    case Some(comps) =>
-      val values = comps.zipWithIndex.flatMap { case (row, j) =>
-        row.zipWithIndex.map { case (wq, d) => s"(${j + 1}, ${d + 1}, ${wq})" }
-      }.mkString(",\n")
-      val cols = (1 to comps.length)
-        .map(j => s"  max(CASE WHEN j = $j THEN v END) AS pc_$j")
-        .mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT vec_id, unnest(range(1, 65)) AS d,
-         |         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS q
-         |  FROM embeddings
-         |), w AS (
-         |  SELECT * FROM (VALUES
-         |$values
-         |  ) AS t(j, d, w)
-         |), p AS (
-         |  SELECT vec_id, j, CAST(sum(w * q) AS BIGINT) AS v
-         |  FROM e JOIN w USING (d)
-         |  GROUP BY vec_id, j
-         |)
-         |SELECT vec_id,
-         |$cols
-         |FROM p GROUP BY vec_id ORDER BY vec_id""".stripMargin
-  }
-
-  /** q_cluster_assign oracle: the [[ivfOracle]] assignment CTE alone —
-    * rn = 1 under (score DESC, cell DESC) is the nearest cell with the
-    * NearestCells tie-break.
-    */
-  private def clusterAssignOracle: String = ivfLastTrained match {
-    case None =>
-      """SELECT CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS INTEGER) AS cluster
-        |WHERE 1 = 0""".stripMargin
-    case Some(cents) =>
-      val values = cents.zipWithIndex.map { case (c, i) =>
-        val lst = c.map(java.lang.Double.toString).mkString("[", ",", "]")
-        val nrm = java.lang.Double.toString(c.map(x => x * x).sum)
-        s"($i, $lst, $nrm)"
-      }.mkString(",\n")
-      s"""WITH cent AS (
-         |  SELECT * FROM (VALUES
-         |$values
-         |  ) AS t(cell, w, nrm)
-         |), sc AS (
-         |  SELECT e.vec_id, c.cell,
-         |         2 * list_sum(list_transform(range(1, len(e.embedding)+1),
-         |               d -> CAST(e.embedding[d] AS DOUBLE) * c.w[d])) - c.nrm AS s
-         |  FROM embeddings e, cent c
-         |), rk AS (
-         |  SELECT vec_id, cell,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell DESC) AS rn
-         |  FROM sc
-         |)
-         |SELECT vec_id, CAST(cell AS INTEGER) AS cluster
-         |FROM rk WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin
-  }
-
-  /** SemDeDup oracle: the same inlined-centroid assignment as
-    * [[ivfOracle]], then within-cell cosine pairs at the gate's
-    * threshold, recursive-CTE components, and the canonical-min-id
-    * survivor rule (the q_dedup_canonical construction).
-    */
-  private def semanticDedupOracle: String = ivfLastTrained match {
-    case None =>
-      """SELECT CAST(NULL AS BIGINT) AS vec_id WHERE 1 = 0"""
-    case Some(cents) =>
-      val cos =
-        """round(
-          |  list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE)))
-          |  / (sqrt(list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(va[i] AS DOUBLE))))
-          |     * sqrt(list_sum(list_transform(range(1, len(vb)+1), i -> CAST(vb[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE))))), 6)""".stripMargin
-      val values = cents.zipWithIndex.map { case (c, i) =>
-        val lst = c.map(java.lang.Double.toString).mkString("[", ",", "]")
-        val nrm = java.lang.Double.toString(c.map(x => x * x).sum)
-        s"($i, $lst, $nrm)"
-      }.mkString(",\n")
-      s"""WITH RECURSIVE cent AS (
-         |  SELECT * FROM (VALUES
-         |$values
-         |  ) AS t(cell, w, nrm)
-         |), sc AS (
-         |  SELECT e.vec_id, c.cell,
-         |         2 * list_sum(list_transform(range(1, len(e.embedding)+1),
-         |               d -> CAST(e.embedding[d] AS DOUBLE) * c.w[d])) - c.nrm AS s
-         |  FROM embeddings e, cent c
-         |), rk AS (
-         |  SELECT vec_id, cell,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell DESC) AS rn
-         |  FROM sc
-         |), corpus AS (
-         |  SELECT e.vec_id, e.embedding, r.cell
-         |  FROM embeddings e JOIN rk r ON e.vec_id = r.vec_id AND r.rn = 1
-         |), pairs AS (
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM (SELECT vec_id, embedding AS va, cell FROM corpus) a
-         |  JOIN (SELECT vec_id, embedding AS vb, cell FROM corpus) b USING (cell)
-         |  WHERE a.vec_id < b.vec_id AND $cos >= 0.3
-         |), edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs
-         |), reach(id, r) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id
-         |), comp AS (
-         |  SELECT id, min(r) AS component FROM reach GROUP BY 1
-         |)
-         |SELECT e.vec_id FROM embeddings e
-         |WHERE e.vec_id NOT IN (SELECT id FROM comp WHERE id <> component)
-         |ORDER BY vec_id""".stripMargin
-  }
-
-  /** Shared CTE chain computing md5-family MinHash signatures and band
-    * keys (the q_dedup_minhash construction through `banded`) — reused
-    * by the incremental-probe oracle so the two stay bit-identical.
-    * Ends defining `sig` (doc_id, sg list) and `banded` (doc_id, b, bh).
-    */
-  /** The q_url_normalize gate's dirty-URL construction — engine-neutral
-    * SQL passed VERBATIM to both Spark's `expr()` and the DuckDB oracle,
-    * so the two engines build the identical string by construction.
-    */
-  private val UrlGateCase: String =
-    """CASE CAST(doc_id % 9 AS INT)
-      |  WHEN 0 THEN 'HTTP://WWW.Example.COM:80/path/' || doc_id || '?utm_source=x&b=2&a=1#frag'
-      |  WHEN 1 THEN 'https://news.example.co.uk:443/a%20b?z=1&utm_campaign=c&y=' || (doc_id % 5)
-      |  WHEN 2 THEN 'https://' || source || '.example.org/docs/' || doc_id
-      |  WHEN 3 THEN 'http://sub.domain.example.net:8080/x?fbclid=abc' || doc_id
-      |  WHEN 4 THEN 'not a url ' || doc_id
-      |  WHEN 5 THEN 'ftp://files.example.com/pub/' || doc_id || '.dat'
-      |  WHEN 6 THEN 'https://Example.com?only=' || doc_id || '&only=' || doc_id
-      |  WHEN 7 THEN 'http://localhost:' || (8000 + doc_id % 100) || '/h?ref=x&p=1'
-      |  ELSE 'https://a.b.example.gov.au/deep/' || doc_id || '?utm_x=1&utm_y=2'
-      |END""".stripMargin
-
-  /** The q_url_dedup gate's construction: collisions are CREATED BY
-    * normalization — case/port/tracking/param-order/fragment variants of
-    * the same canonical URL (arms 0 and 1 normalize identically), plus a
-    * malformed arm the dedup must drop.
-    */
-  private val UrlDedupCase: String =
-    """CASE CAST(doc_id % 4 AS INT)
-      |  WHEN 0 THEN 'HTTP://WWW.Example.COM:80/item/' || (doc_id % 25) || '?b=2&a=1&utm_source=' || doc_id
-      |  WHEN 1 THEN 'http://www.example.com/item/' || (doc_id % 25) || '?a=1&utm_medium=m&b=2#sec' || doc_id
-      |  WHEN 2 THEN 'https://' || source || '.shop.example.org/p?x=' || (doc_id % 10)
-      |  ELSE 'not a url ' || doc_id
-      |END""".stripMargin
-
-  /** url_parts oracle replay, shared by q_url_normalize and q_url_dedup:
-    * the anchored parse regex via regexp_extract, authority split on the
-    * last ':' + 1..18-digit suffix (the lazy-group backtracking),
-    * public-suffix-lite via negative list indexing, param filter/sort via
-    * list ops. Ends defining `norm` (doc_id, scheme, host, port,
-    * reg_domain, n_params, url_norm — all NULL when the parse regex
-    * rejects).
-    */
-  private def urlNormChainSql(urlCase: String): String =
-    raw"""WITH u AS (
-       |  SELECT doc_id,
-       |    $urlCase AS url
-       |  FROM documents
-       |), m AS (
-       |  SELECT doc_id, url,
-       |    regexp_matches(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$$') AS ok,
-       |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$$', 1)) AS scheme,
-       |    regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$$', 2) AS auth,
-       |    regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$$', 3) AS path_raw,
-       |    regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$$', 4) AS q_raw
-       |  FROM u
-       |), hp AS (
-       |  SELECT *,
-       |    CASE WHEN regexp_matches(auth, '^(.*?):([0-9]{1,18})$$')
-       |         THEN lower(regexp_extract(auth, '^(.*?):([0-9]{1,18})$$', 1))
-       |         ELSE lower(auth) END AS host,
-       |    CASE WHEN regexp_matches(auth, '^(.*?):([0-9]{1,18})$$')
-       |         THEN CAST(regexp_extract(auth, '^(.*?):([0-9]{1,18})$$', 2) AS BIGINT)
-       |         END AS port
-       |  FROM m
-       |), q AS (
-       |  SELECT *, string_split(host, '.') AS labels,
-       |    list_sort(list_filter(string_split(substr(q_raw, 2), '&'),
-       |      p -> p <> '' AND NOT starts_with(string_split(p, '=')[1], 'utm_')
-       |        AND string_split(p, '=')[1] NOT IN ('gclid','fbclid','ref','msclkid'))) AS kept
-       |  FROM hp
-       |), norm AS (
-       |  SELECT doc_id,
-       |    CASE WHEN ok THEN scheme END AS scheme,
-       |    CASE WHEN ok THEN host END AS host,
-       |    CASE WHEN ok THEN port END AS port,
-       |    CASE WHEN ok THEN
-       |      CASE WHEN len(labels) >= 3 AND length(labels[-1]) = 2
-       |                AND labels[-2] IN ('co','com','net','org','ac','gov','edu')
-       |           THEN labels[-3] || '.' || labels[-2] || '.' || labels[-1]
-       |           WHEN len(labels) >= 2 THEN labels[-2] || '.' || labels[-1]
-       |           ELSE host END
-       |    END AS reg_domain,
-       |    CASE WHEN ok THEN CAST(len(kept) AS BIGINT) END AS n_params,
-       |    CASE WHEN ok THEN
-       |      scheme || '://' || host ||
-       |      CASE WHEN port IS NOT NULL AND NOT ((scheme = 'http' AND port = 80)
-       |                OR (scheme = 'https' AND port = 443))
-       |           THEN ':' || port ELSE '' END ||
-       |      CASE WHEN path_raw = '' THEN '/' ELSE path_raw END ||
-       |      CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&') ELSE '' END
-       |    END AS url_norm
-       |  FROM q
-       |)""".stripMargin
-
-  /** Shared winnowing replay chain (q_winnow + q_winnow_pairs): trigram
-    * md5-60 hashes, one row per w=4 window position, rightmost-minimum
-    * selection via the composite HUGEINT (h, -pos) key. Ends defining
-    * `e` (doc_id, pos, h), `gc` (doc_id, ng) and `fp` (doc_id, sel).
-    */
-  private val WinnowChainCte: String =
-    """WITH t AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)] AS g
-      |  FROM t WHERE len(w) >= 3
-      |), e AS (
-      |  SELECT doc_id, unnest(range(1, len(g) + 1)) AS pos,
-      |         ('0x' || substr(md5(unnest(g)), 1, 15))::BIGINT AS h
-      |  FROM sh
-      |), gc AS (
-      |  SELECT doc_id, count(*) AS ng FROM e GROUP BY doc_id
-      |), wp AS (
-      |  SELECT doc_id, unnest(range(1, greatest(ng - 3, 1) + 1)) AS p FROM gc
-      |), win AS (
-      |  SELECT wp.doc_id, wp.p,
-      |    arg_min(e.pos, e.h::HUGEINT * 4294967296 + (4294967295 - e.pos)) AS sel
-      |  FROM wp JOIN e ON e.doc_id = wp.doc_id
-      |    AND e.pos >= wp.p AND e.pos < wp.p + 4
-      |  GROUP BY wp.doc_id, wp.p
-      |), fp AS (
-      |  SELECT DISTINCT doc_id, sel FROM win
-      |)""".stripMargin
-
-  private val MinhashBandedCte: String = {
-    // base = lower-60-bit md5 of the shingle, plane hash =
-    // (base * A_p) mod 2^60 (HUGEINT product — 2^60 divides 2^64, so it
-    // equals Java's wrap-multiply masked to 60 bits), signature =
-    // per-plane min, band key = the band's 4 minhashes joined with ','
-    val mults = graft.functions.MinHashSignatureMd5.multipliers(64)
-    val planeValues = mults.zipWithIndex
-      .map { case (a, p) => s"($p, $a)" }
-      .mkString(",\n")
-    s"""t AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents
-       |), sh AS (
-       |  SELECT doc_id,
-       |    [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)] AS g
-       |  FROM t WHERE len(w) >= 3
-       |), e AS (
-       |  SELECT doc_id, ('0x' || substr(md5(unnest(g)), 1, 15))::BIGINT AS base
-       |  FROM sh
-       |), planes AS (
-       |  SELECT * FROM (VALUES
-       |$planeValues
-       |  ) AS pl(p, a)
-       |), ph AS (
-       |  SELECT doc_id, p,
-       |         min(CAST((base::HUGEINT * a) % 1152921504606846976 AS BIGINT)) AS mh
-       |  FROM e, planes GROUP BY doc_id, p
-       |), sig AS (
-       |  SELECT doc_id, list(mh ORDER BY p) AS sg FROM ph GROUP BY doc_id
-       |), banded AS (
-       |  SELECT doc_id, b,
-       |         array_to_string(sg[b*4+1:b*4+4], ',') AS bh
-       |  FROM sig, (SELECT unnest(range(0, 16)) AS b)
-       |)""".stripMargin
-  }
-
-  /** Shared CTE chain computing the SimHash near-dup pairs (the
-    * q_simhash_pairs construction) — reused by the cluster/canonical
-    * oracles so the three stay bit-identical. Ends defining `pairs`
-    * (id_a < id_b, hamming <= 3).
-    */
-  private val SimhashPairsCte =
-    """tok AS (
-      |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
-      |), h AS (
-      |  SELECT doc_id, CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h FROM tok
-      |), bits AS (
-      |  SELECT doc_id, b,
-      |         sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h, (SELECT unnest(range(60)) AS b)
-      |  GROUP BY 1, 2
-      |), fp AS (
-      |  SELECT doc_id,
-      |         CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-      |  FROM bits GROUP BY 1
-      |), pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |         CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-      |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-      |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      |)""".stripMargin
-
-  /** Shared WAV/FLAC sample-recompute CTEs (d/d2/s) behind the
-    * mixed-audio sniff and fingerprint oracles: the codec-blind
-    * per-channel sample lists from text positions, with the 3-way
-    * bits cycle and the corruption/format null arms. Margins are
-    * stripped by the consuming entries after concatenation.
-    */
-  private val AudioMixedSampleCtes: String =
-    """WITH d AS (
-        |  SELECT doc_id AS media_id, text,
-        |    CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |    CAST(CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |              WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END AS INTEGER) AS bits,
-        |    (doc_id % 2 + 1) *
-        |      (CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |            WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END) // 8 AS bpf,
-        |    CAST((doc_id // 4) % 4 AS INTEGER) AS fmt,
-        |    (doc_id // 4) % 4 = 2 OR doc_id % 7 = 3 AS bad
-        |  FROM documents
-        |), d2 AS (
-        |  SELECT media_id, text, ch, bits, bpf, fmt,
-        |    CAST(length(text) // bpf AS BIGINT) AS nf,
-        |    (bad OR (fmt = 1 AND length(text) // bpf = 0)) AS bad
-        |  FROM d
-        |), s AS (
-        |  SELECT media_id, ch, bits, nf, fmt, bad,
-        |    CASE WHEN bad THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        CASE bits
-        |          WHEN 8 THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1)) - 128
-        |          WHEN 16 THEN CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) >= 32768
-        |            THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) - 65536
-        |            ELSE ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) END
-        |          ELSE CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) >= 8388608
-        |            THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) - 16777216
-        |            ELSE ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) END
-        |        END) END AS c0,
-        |    CASE WHEN bad OR ch = 1 THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        CASE bits
-        |          WHEN 8 THEN ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) - 128
-        |          WHEN 16 THEN CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) >= 32768
-        |            THEN ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) - 65536
-        |            ELSE ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) END
-        |          ELSE CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) >= 8388608
-        |            THEN ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) - 16777216
-        |            ELSE ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) END
-        |        END) END AS c1
-        |  FROM d2
-        |)"""
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_qty,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_base_price,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))), 2) AS DOUBLE) AS sum_disc_price,
-        |  (CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / count(l_quantity)) AS avg_qty,
-        |  (CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(l_discount)) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q6_forecast" ->
-      """SELECT
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
-        |                 * CAST(l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_rows
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT r_name, n_name,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
-        |                 * (1 - CAST(l_discount AS DECIMAL(18,6)))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem, orders, customer, supplier, nation, region
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = n_nationkey
-        |  AND n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q_raw_select" -> {
-      val lo = Start + 7 * 86400; val hi = Start + 14 * 86400
-      s"""SELECT nntsclabel, "timestamp", stream_id, event_id, event_type, value
-         |FROM ($OracleEvents)
-         |WHERE "timestamp" BETWEEN $lo AND $hi AND nntsclabel IN ('g0','g1')
-         |ORDER BY nntsclabel, "timestamp", event_id""".stripMargin
-    },
-
-    "q_agg_bins" -> {
-      import OracleParity.Sql._
-      s"""SELECT nntsclabel,
-         |  "timestamp" - ("timestamp" % 21600) AS binstart,
-         |  ${exactAvg("value")} AS value_avg,
-         |  max(value) AS value_max,
-         |  min(value) AS value_min,
-         |  ${exactSum("value")} AS value_sum,
-         |  count(value) AS value_count,
-         |  ${exactStddev("value")} AS value_stddev,
-         |  max("timestamp") AS "timestamp"
-         |FROM ($oracleEventsWindow)
-         |GROUP BY 1, 2
-         |ORDER BY nntsclabel, binstart""".stripMargin
-    },
-
-    "q_groupcols" ->
-      s"""SELECT nntsclabel, event_type,
-         |  "timestamp" - ("timestamp" % ${7 * 86400}) AS binstart,
-         |  ${OracleParity.Sql.exactAvg("value")} AS value,
-         |  count(event_type) AS event_type_count,
-         |  max("timestamp") AS "timestamp"
-         |FROM ($oracleEventsWindow)
-         |GROUP BY 1, 2, 3
-         |ORDER BY nntsclabel, event_type, binstart""".stripMargin,
-
-    "q_most" ->
-      s"""WITH b AS (
-         |  SELECT nntsclabel, "timestamp" - ("timestamp" % ${7 * 86400}) AS binstart,
-         |         "timestamp", event_type, value
-         |  FROM ($oracleEventsWindow)
-         |), base AS (
-         |  SELECT nntsclabel, binstart, count(value) AS value,
-         |         max("timestamp") AS "timestamp"
-         |  FROM b GROUP BY 1, 2
-         |), m AS (
-         |  SELECT nntsclabel, binstart, event_type,
-         |         row_number() OVER (PARTITION BY nntsclabel, binstart
-         |                            ORDER BY count(*) DESC, event_type ASC) AS rn
-         |  FROM b WHERE event_type IS NOT NULL GROUP BY 1, 2, 3
-         |)
-         |SELECT base.nntsclabel, base.binstart, base.value, base."timestamp",
-         |       m.event_type
-         |FROM base LEFT JOIN m
-         |  ON base.nntsclabel = m.nntsclabel AND base.binstart = m.binstart AND m.rn = 1
-         |ORDER BY base.nntsclabel, base.binstart""".stripMargin,
-
-    "q_pathlen" ->
-      s"""WITH b AS (
-         |  SELECT nntsclabel, "timestamp" - ("timestamp" % ${7 * 86400}) AS binstart,
-         |         regexp_replace(props, '[^0-9]', '', 'g') AS digits
-         |  FROM ($oracleEventsWindow)
-         |), adj AS (
-         |  SELECT nntsclabel, binstart,
-         |         CASE WHEN len(digits) = 0 THEN 0.5
-         |              WHEN digits LIKE '%0'
-         |                THEN len(digits) + 0.5 - (len(digits) - len(rtrim(digits, '0')))
-         |              ELSE CAST(len(digits) AS DOUBLE) END AS path_length
-         |  FROM b
-         |), counted AS (
-         |  SELECT nntsclabel, binstart, path_length, count(*) AS "count"
-         |  FROM adj GROUP BY 1, 2, 3
-         |), win AS (
-         |  SELECT *, row_number() OVER (PARTITION BY nntsclabel, binstart
-         |             ORDER BY "count" DESC, path_length ASC NULLS LAST) AS rn
-         |  FROM counted
-         |)
-         |SELECT nntsclabel, binstart, path_length, "count"
-         |FROM win WHERE rn = 1
-         |ORDER BY nntsclabel, binstart""".stripMargin,
-
-    "q_most_array" ->
-      s"""WITH b AS (
-         |  SELECT nntsclabel, "timestamp" - ("timestamp" % ${7 * 86400}) AS binstart,
-         |         "timestamp", value,
-         |         array_to_string(
-         |           string_split(regexp_replace(props, '[^0-9]', '', 'g'), ''),
-         |           '|') AS pstr,
-         |         CAST(len(string_split(regexp_replace(props, '[^0-9]', '', 'g'), ''))
-         |              AS BIGINT) AS plen
-         |  FROM ($oracleEventsWindow)
-         |), base AS (
-         |  SELECT nntsclabel, binstart, count(value) AS value,
-         |         max(plen) AS path_arraysize,
-         |         max("timestamp") AS "timestamp"
-         |  FROM b GROUP BY 1, 2
-         |), m AS (
-         |  SELECT nntsclabel, binstart, pstr,
-         |         row_number() OVER (PARTITION BY nntsclabel, binstart
-         |                            ORDER BY count(*) DESC, pstr ASC) AS rn
-         |  FROM b WHERE pstr IS NOT NULL GROUP BY 1, 2, 3
-         |)
-         |SELECT base.nntsclabel, base.binstart, m.pstr AS path_most_array,
-         |       base.path_arraysize, base.value, base."timestamp"
-         |FROM base LEFT JOIN m
-         |  ON base.nntsclabel = m.nntsclabel AND base.binstart = m.binstart AND m.rn = 1
-         |ORDER BY base.nntsclabel, base.binstart""".stripMargin,
-
-    "q_smoke" ->
-      s"""WITH b AS (
-         |  SELECT nntsclabel, "timestamp" - ("timestamp" % ${7 * 86400}) AS binstart,
-         |         "timestamp", value
-         |  FROM ($oracleEventsWindow)
-         |), base AS (
-         |  SELECT nntsclabel, binstart, count(value) AS value_count,
-         |         max("timestamp") AS "timestamp"
-         |  FROM b GROUP BY 1, 2
-         |), t AS (
-         |  SELECT nntsclabel, binstart, value,
-         |         ntile(20) OVER (PARTITION BY nntsclabel, binstart ORDER BY value) AS bucket
-         |  FROM b WHERE value IS NOT NULL
-         |), ba AS (
-         |  SELECT nntsclabel, binstart, bucket,
-         |         ${OracleParity.Sql.exactAvg("value")} AS bavg
-         |  FROM t GROUP BY 1, 2, 3
-         |), sm AS (
-         |  SELECT nntsclabel, binstart,
-         |         ${(1 to 20).map(i => s"max(CASE WHEN bucket = $i THEN bavg END) AS smoke_${f"$i%02d"}").mkString(",\n         ")}
-         |  FROM ba GROUP BY 1, 2
-         |)
-         |SELECT base.nntsclabel, base.binstart,
-         |       ${(1 to 20).map(i => f"sm.smoke_$i%02d").mkString(", ")},
-         |       base.value_count, base."timestamp"
-         |FROM base LEFT JOIN sm
-         |  ON base.nntsclabel = sm.nntsclabel AND base.binstart = sm.binstart
-         |ORDER BY base.nntsclabel, base.binstart""".stripMargin,
-
-    "q_smokearray" ->
-      s"""WITH b AS (
-         |  SELECT nntsclabel, "timestamp" - ("timestamp" % ${7 * 86400}) AS binstart,
-         |         "timestamp", value, props
-         |  FROM ($oracleEventsWindow)
-         |), base AS (
-         |  SELECT nntsclabel, binstart, count(value) AS value,
-         |         max("timestamp") AS "timestamp"
-         |  FROM b GROUP BY 1, 2
-         |), x AS (
-         |  SELECT nntsclabel, binstart,
-         |         unnest(list_transform(
-         |           string_split(regexp_replace(props, '[^0-9]', '', 'g'), ''),
-         |           c -> CAST(c AS INT))) AS sv
-         |  FROM b
-         |), t AS (
-         |  SELECT nntsclabel, binstart, sv,
-         |         ntile(20) OVER (PARTITION BY nntsclabel, binstart ORDER BY sv) AS bucket
-         |  FROM x WHERE sv IS NOT NULL
-         |), ba AS (
-         |  SELECT nntsclabel, binstart, bucket,
-         |         ${OracleParity.Sql.exactAvg("sv")} AS bavg
-         |  FROM t GROUP BY 1, 2, 3
-         |), sm AS (
-         |  SELECT nntsclabel, binstart,
-         |         ${(1 to 20).map(i => s"max(CASE WHEN bucket = $i THEN bavg END) AS pings_${f"$i%02d"}").mkString(",\n         ")}
-         |  FROM ba GROUP BY 1, 2
-         |)
-         |SELECT base.nntsclabel, base.binstart,
-         |       ${(1 to 20).map(i => f"sm.pings_$i%02d").mkString(", ")},
-         |       base.value, base."timestamp"
-         |FROM base LEFT JOIN sm
-         |  ON base.nntsclabel = sm.nntsclabel AND base.binstart = sm.binstart
-         |ORDER BY base.nntsclabel, base.binstart""".stripMargin,
-
-    "q_matrix" ->
-      s"""SELECT nntsclabel, CAST($Start AS BIGINT) AS binstart,
-         |  ${OracleParity.Sql.exactAvg("value")} AS value_avg,
-         |  max(value) AS value_max,
-         |  count(value) AS value_count,
-         |  max("timestamp") AS "timestamp",
-         |  min("timestamp") AS min_timestamp
-         |FROM ($oracleEventsWindow)
-         |GROUP BY 1
-         |ORDER BY nntsclabel""".stripMargin,
-
-    "q_matrix_tier" ->
-      s"""SELECT nntsclabel, CAST($Start AS BIGINT) AS binstart,
-         |  ${OracleParity.Sql.exactAvg("value")} AS value_avg,
-         |  ${OracleParity.Sql.exactSum("value")} AS value_sum,
-         |  min(value) AS value_min,
-         |  max(value) AS value_max,
-         |  count(value) AS value_count,
-         |  ${OracleParity.Sql.exactStddev("value")} AS value_stddev,
-         |  max("timestamp") AS "timestamp",
-         |  min("timestamp") AS min_timestamp
-         |FROM ($OracleEvents)
-         |WHERE "timestamp" - ("timestamp" % 3600) >= $Start
-         |  AND "timestamp" - ("timestamp" % 3600) < $Stop
-         |GROUP BY 1
-         |ORDER BY nntsclabel""".stripMargin,
-
-    "q_matrix_tier_multi" ->
-      s"""WITH w AS (
-         |  SELECT * FROM ($OracleEvents)
-         |  WHERE "timestamp" - ("timestamp" % 3600) >= $Start
-         |    AND "timestamp" - ("timestamp" % 3600) < $Stop
-         |), base AS (
-         |  SELECT nntsclabel,
-         |    ${OracleParity.Sql.exactAvg("value")} AS value_avg,
-         |    count(value) AS value_count,
-         |    ${OracleParity.Sql.exactAvg("event_id")} AS event_id_avg,
-         |    max(event_id) AS event_id_max,
-         |    max("timestamp") AS "timestamp",
-         |    min("timestamp") AS min_timestamp
-         |  FROM w GROUP BY 1
-         |), m AS (
-         |  SELECT nntsclabel, event_type,
-         |    row_number() OVER (PARTITION BY nntsclabel
-         |                       ORDER BY count(*) DESC, event_type ASC) AS rn
-         |  FROM w WHERE event_type IS NOT NULL GROUP BY 1, 2
-         |)
-         |SELECT b.nntsclabel, CAST($Start AS BIGINT) AS binstart,
-         |  b.value_avg, b.value_count, b.event_id_avg, b.event_id_max,
-         |  m.event_type, b."timestamp", b.min_timestamp
-         |FROM base b
-         |LEFT JOIN m ON b.nntsclabel = m.nntsclabel AND m.rn = 1
-         |ORDER BY b.nntsclabel""".stripMargin,
-
-    // tier smoke: per-(stream, bin) percentile grid (weighted form —
-    // DuckDB's quantile_cont and Spark's percentile share it), quantized
-    // to DECIMAL(18,6), count-weighted merge, window max as the 20th slot;
-    // grid emitted as smoke_01..smoke_20 scalars (gate-shape pivot — the
-    // driver comparator cannot sort arrays)
-    "q_matrix_tier_smoke" -> {
-      val grid = (1 to 19)
-        .map(k => s"quantile_cont(value, $k/20.0) AS g$k").mkString(", ")
-      val slots = (1 to 19)
-        .map(k =>
-          s"${OracleParity.Sql.decToDouble(s"sum(CAST(g$k AS DECIMAL(18,6)) * cnt)")} / sum(cnt) AS p$k")
-        .mkString(", ")
-      val pack = (1 to 19)
-        .map(k => f"CASE WHEN m.n > 0 THEN p$k END AS smoke_$k%02d")
-        .mkString(", ") + ", CASE WHEN m.n > 0 THEN mxx END AS smoke_20"
-      s"""WITH w AS (
-         |  SELECT * FROM ($OracleEvents)
-         |  WHERE "timestamp" - ("timestamp" % 3600) >= $Start
-         |    AND "timestamp" - ("timestamp" % 3600) < $Stop
-         |), b AS (
-         |  SELECT nntsclabel, stream_id,
-         |    "timestamp" - ("timestamp" % 3600) AS bin,
-         |    count(value) AS cnt, max(value) AS mx, $grid
-         |  FROM w GROUP BY 1, 2, 3
-         |), m AS (
-         |  SELECT nntsclabel, $slots, max(mx) AS mxx, sum(cnt) AS n
-         |  FROM b GROUP BY 1
-         |), base AS (
-         |  SELECT nntsclabel,
-         |    ${OracleParity.Sql.exactAvg("value")} AS value_avg,
-         |    count(value) AS value_count,
-         |    max("timestamp") AS "timestamp",
-         |    min("timestamp") AS min_timestamp
-         |  FROM w GROUP BY 1
-         |)
-         |SELECT base.nntsclabel, CAST($Start AS BIGINT) AS binstart,
-         |  $pack,
-         |  base.value_avg, base.value_count, base."timestamp",
-         |  base.min_timestamp
-         |FROM base JOIN m ON base.nntsclabel = m.nntsclabel
-         |ORDER BY base.nntsclabel""".stripMargin
-    },
-
-    // binned tier serve: same per-tier-bin grid/count/mode partials as the
-    // matrix oracles, re-grouped onto the requested 6-h absolute grid;
-    // grid emitted as smoke_01..smoke_20 scalars (gate-shape pivot)
-    "q_agg_tier_bins" -> {
-      val grid = (1 to 19)
-        .map(k => s"quantile_cont(value, $k/20.0) AS g$k").mkString(", ")
-      val slots = (1 to 19)
-        .map(k =>
-          s"${OracleParity.Sql.decToDouble(s"sum(CAST(g$k AS DECIMAL(18,6)) * cnt)")} / sum(cnt) AS p$k")
-        .mkString(", ")
-      val pack = (1 to 19)
-        .map(k => f"CASE WHEN sm.n > 0 THEN p$k END AS smoke_$k%02d")
-        .mkString(", ") + ", CASE WHEN sm.n > 0 THEN mxx END AS smoke_20"
-      s"""WITH w AS (
-         |  SELECT *, "timestamp" - ("timestamp" % 21600) AS rb
-         |  FROM ($OracleEvents)
-         |  WHERE "timestamp" - ("timestamp" % 3600) >= $Start
-         |    AND "timestamp" - ("timestamp" % 3600) < $Stop
-         |), b AS (
-         |  SELECT nntsclabel, rb, stream_id,
-         |    "timestamp" - ("timestamp" % 3600) AS bin,
-         |    count(value) AS cnt, max(value) AS mx, $grid
-         |  FROM w GROUP BY 1, 2, 3, 4
-         |), sm AS (
-         |  SELECT nntsclabel, rb, $slots, max(mx) AS mxx, sum(cnt) AS n
-         |  FROM b GROUP BY 1, 2
-         |), mo AS (
-         |  SELECT nntsclabel, rb, event_type,
-         |    row_number() OVER (PARTITION BY nntsclabel, rb
-         |                       ORDER BY count(*) DESC, event_type ASC) AS rn
-         |  FROM w WHERE event_type IS NOT NULL GROUP BY 1, 2, 3
-         |), base AS (
-         |  SELECT nntsclabel, rb,
-         |    ${OracleParity.Sql.exactAvg("value")} AS value_avg,
-         |    count(value) AS value_count,
-         |    ${OracleParity.Sql.exactStddev("value")} AS value_stddev,
-         |    max("timestamp") AS "timestamp"
-         |  FROM w GROUP BY 1, 2
-         |)
-         |SELECT b.nntsclabel, b.rb AS binstart,
-         |  b.value_avg, b.value_count, b.value_stddev,
-         |  mo.event_type,
-         |  $pack,
-         |  b."timestamp"
-         |FROM base b
-         |JOIN sm ON b.nntsclabel = sm.nntsclabel AND b.rb = sm.rb
-         |LEFT JOIN mo ON b.nntsclabel = mo.nntsclabel AND b.rb = mo.rb AND mo.rn = 1
-         |ORDER BY b.nntsclabel, b.rb""".stripMargin
-    },
-
-    // nearest-rank tier smoke (Influx percentile() byte parity): per
-    // (stream, 600 s bin) grids via 1-based index floor(n·p + 0.5) into
-    // the sorted values (index 0 → NULL slot, influx.py:694-722); merged
-    // onto the 6 h grid with PER-SLOT denominators (Σ(cnt | slot
-    // populated) — the r9 advice fix); clamped to the 100/n percentile
-    // step by the merged window count (influx.py:694-712); NULL slots
-    // dropped (the reference's non-None pack) before the scalar pivot
-    "q_tier_smoke_nr" -> {
-      val grid = (1 to 19)
-        .map(k =>
-          s"CASE WHEN floor(cnt * ($k/20.0) + 0.5) >= 1 THEN " +
-            s"sv[CAST(floor(cnt * ($k/20.0) + 0.5) AS INTEGER)] END AS g$k")
-        .mkString(", ")
-      val slots = (1 to 19)
-        .map(k =>
-          s"${OracleParity.Sql.decToDouble(s"sum(CAST(g$k AS DECIMAL(18,6)) * cnt)")} / " +
-            s"sum(CASE WHEN floor(cnt * ($k/20.0) + 0.5) >= 1 THEN cnt END) AS p$k")
-        .mkString(", ")
-      val full = ((1 to 19).map(k => s"p$k") :+ "mxx").mkString(", ")
-      val clamp = (2 to 19)
-        .map { k =>
-          val ps = Rollup.clampPercents(k).map(p => s"p${p / 5}")
-          s"WHEN n = $k THEN [${(ps :+ "mxx").mkString(", ")}]"
-        }
-        .mkString(" ")
-      val pivot = (1 to 20).map(i => f"l[$i] AS smoke_$i%02d").mkString(", ")
-      s"""WITH w AS (
-         |  SELECT *, "timestamp" - ("timestamp" % 21600) AS rb,
-         |         "timestamp" - ("timestamp" % 600) AS bin
-         |  FROM ($OracleEvents)
-         |  WHERE "timestamp" - ("timestamp" % 600) >= $Start
-         |    AND "timestamp" - ("timestamp" % 600) < $Stop
-         |), b AS (
-         |  SELECT nntsclabel, rb, stream_id, bin,
-         |    count(value) AS cnt, max(value) AS mx,
-         |    list_sort(list(value) FILTER (WHERE value IS NOT NULL)) AS sv
-         |  FROM w GROUP BY 1, 2, 3, 4
-         |), g AS (
-         |  SELECT *, $grid FROM b
-         |), m AS (
-         |  SELECT nntsclabel, rb, $slots, max(mx) AS mxx, sum(cnt) AS n
-         |  FROM g GROUP BY 1, 2
-         |), packed AS (
-         |  SELECT nntsclabel, rb,
-         |    list_filter(
-         |      CASE WHEN n <= 1 THEN [mxx] $clamp ELSE [$full] END,
-         |      x -> x IS NOT NULL) AS l
-         |  FROM m
-         |), base AS (
-         |  SELECT nntsclabel, rb,
-         |    ${OracleParity.Sql.exactAvg("value")} AS value_avg,
-         |    count(value) AS value_count,
-         |    max("timestamp") AS "timestamp"
-         |  FROM w GROUP BY 1, 2
-         |)
-         |SELECT base.nntsclabel, base.rb AS binstart,
-         |  base.value_avg, base.value_count, $pivot, base."timestamp"
-         |FROM base
-         |JOIN packed ON base.nntsclabel = packed.nntsclabel AND base.rb = packed.rb
-         |ORDER BY base.nntsclabel, base.rb""".stripMargin
-    },
-
-    // exact columns verified directly; the in-band booleans are pinned to
-    // TRUE — the Spark side computes them against ITS sketches, so a
-    // sketch out of bounds flips a cell and fails the hash
-    "q_sketches" ->
-      s"""SELECT nntsclabel, count(*) AS n, count(DISTINCT value) AS nd_exact,
-         |  TRUE AS hll_within_5pct, TRUE AS p50_in_band,
-         |  TRUE AS p95_in_band, TRUE AS p99_in_band
-         |FROM ($oracleEventsWindow)
-         |GROUP BY 1
-         |ORDER BY nntsclabel""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS canonical_id,
-        |       count(*) AS n_copies
-        |FROM documents
-        |GROUP BY 1
-        |ORDER BY canonical_id""".stripMargin,
-
-    // BPE: the oracle RE-TRAINS the merge table in SQL (48 unrolled
-    // iterations over the distinct-word state; merge application = 16
-    // nested boundary-delimited replaces, the exact fixpoint semantics
-    // Bpe.applyRule implements) and re-encodes every document from the
-    // final vocab state — full pipeline parity with zero runtime state
-    // crossing engines
-    "q_bpe_merges" ->
-      Bpe.oracleSqlMerges("documents", vocabCap = 2048, maxMerges = 48,
-        minPairCount = 2L),
-
-    "q_tokenize_bpe" ->
-      Bpe.oracleSqlTokenize("documents", vocabCap = 2048, maxMerges = 48,
-        minPairCount = 2L),
-
-    // WordPiece greedy apply replayed as 24 unrolled longest-match layers
-    // (pure list ops per layer; 24 = the word regex's length cap)
-    "q_tokenize_wordpiece" ->
-      graft.functions.WordPieceEncode.oracleSql(
-        "documents", graft.functions.WordPieceEncode.GateVocab),
-
-    // Unigram Viterbi replayed as unrolled forward + backtrack layers
-    // (integer scores — no libm; tie-break = the (−total, j, piece)
-    // struct sort, the operator's contract)
-    "q_tokenize_unigram" ->
-      graft.functions.UnigramEncode.oracleSql(
-        "documents", graft.functions.UnigramEncode.GateVocab),
-
-    // Unigram TRAINING replayed end-to-end: seed → EM rounds (each a
-    // full unrolled Viterbi over the word-count state, vocab flowing
-    // between rounds as a CTE) → prune → rescore
-    "q_unigram_vocab" ->
-      graft.pipeline.Unigram.oracleSqlVocab("documents"),
-
-    // train → apply composed: re-train, re-encode with the re-trained
-    // vocab (3×(24+24) unrolled Viterbi layers in total)
-    "q_tokenize_unigram_trained" ->
-      graft.pipeline.Unigram.oracleSqlTokenizeTrained("documents"),
-
-    // WordPiece training replayed: the BPE trainChain with ##-marked
-    // state, per-layer symbol counts and the likelihood-ratio argmax
-    "q_wordpiece_vocab" ->
-      graft.pipeline.WordPiece.oracleSqlVocab(
-        "documents", vocabCap = 2048, maxMerges = 48, minPairCount = 2L),
-
-    // winnowing fingerprints replayed relationally: trigram md5-60 hashes
-    // (the MinhashBandedCte idiom), one row per window position, rightmost
-    // minimum via arg_min(pos, [h, -pos]), DISTINCT selected pairs; G < w
-    // collapses to one window (greatest(ng-3, 1)); no-gram docs → md5('')
-    "q_winnow" ->
-      s"""$WinnowChainCte
-         |, fps AS (
-         |  SELECT f.doc_id, count(*) AS n_fp,
-         |         string_agg(e.h || ':' || f.sel, ' ' ORDER BY f.sel) AS stream
-         |  FROM fp f JOIN e ON e.doc_id = f.doc_id AND e.pos = f.sel
-         |  GROUP BY f.doc_id
-         |)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(gc.ng, 0) AS BIGINT) AS n_grams,
-         |  CAST(coalesce(fps.n_fp, 0) AS BIGINT) AS n_fp,
-         |  md5(coalesce(fps.stream, '')) AS fp_md5
-         |FROM documents d
-         |LEFT JOIN gc ON d.doc_id = gc.doc_id
-         |LEFT JOIN fps ON d.doc_id = fps.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // winnow candidate pairs: DISTINCT selected fingerprint hashes per
-    // doc, hot cut (df > 500 dropped — the boilerplate fingerprints), a
-    // doc-pair join on shared hashes, shared >= 2, overlap over the
-    // kept-fingerprint sizes — exactly Dedup.winnowPairs' arithmetic
-    "q_winnow_pairs" ->
-      s"""$WinnowChainCte
-         |, fph AS (
-         |  SELECT DISTINCT f.doc_id, e.h
-         |  FROM fp f JOIN e ON e.doc_id = f.doc_id AND e.pos = f.sel
-         |), dfs AS (
-         |  SELECT h, count(*) AS df FROM fph GROUP BY h
-         |), kept AS (
-         |  SELECT fph.doc_id, fph.h FROM fph JOIN dfs USING (h) WHERE df <= 500
-         |), ksz AS (
-         |  SELECT doc_id, count(*) AS nk FROM kept GROUP BY doc_id
-         |), pr AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |         CAST(count(*) AS BIGINT) AS shared
-         |  FROM kept a JOIN kept b ON a.h = b.h AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT id_a, id_b, shared,
-         |  CAST(shared AS DOUBLE) / least(ka.nk, kb.nk) AS overlap
-         |FROM pr
-         |JOIN ksz ka ON ka.doc_id = pr.id_a
-         |JOIN ksz kb ON kb.doc_id = pr.id_b
-         |WHERE shared >= 2
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_token_budget_bpe" ->
-      Bpe.oracleSqlTokenBudget("documents", vocabCap = 2048, maxMerges = 48,
-        minPairCount = 2L, budget = 2000L, salt = "tbb"),
-
-    "q_text_stats" ->
-      """WITH w AS (
-        |  SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS BIGINT) AS n_bpe_tokens,
-        |    CAST(len(list_filter(toks, t -> t IN
-        |      ('the','a','an','of','and','to','in','is','on','for','with'))) AS BIGINT) AS n_stopwords,
-        |    CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks) AS mean_token_len,
-        |    CAST(length(text) - length(regexp_replace(text, '[\.,;:!\?''"]', '', 'g')) AS DOUBLE) / length(text) AS punct_ratio,
-        |    CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text) AS digit_ratio
-        |  FROM w
-        |)
-        |SELECT doc_id, n_tokens, n_bpe_tokens, n_stopwords, mean_token_len, punct_ratio, digit_ratio,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-        |    + (1.0 - punct_ratio) * 0.2
-        |    + (1.0 - digit_ratio) * 0.2
-        |    + least((CAST(n_stopwords AS DOUBLE) / n_tokens) * 4.0, 1.0) * 0.2 AS quality
-        |FROM s
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_langid" ->
-      """WITH sc AS (
-        |  SELECT doc_id,
-        |    len(list_filter(w, t -> t IN ('der','die','das','und','ist'))) AS s_de,
-        |    len(list_filter(w, t -> t IN ('the','a','of','and','is'))) AS s_en,
-        |    len(list_filter(w, t -> t IN ('el','la','de','y','es'))) AS s_es,
-        |    len(list_filter(w, t -> t IN ('le','la','de','et','est'))) AS s_fr,
-        |    len(list_filter(w, t -> t IN ('的','是','了','在','我'))) AS s_zh
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-        |       WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-        |       WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-        |       WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-        |       WHEN s_fr >= s_zh THEN 'fr'
-        |       ELSE 'zh' END AS lang_pred
-        |FROM sc
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(trim(regexp_replace(lower(text), '[\.,;:!\?''"]', '', 'g')), '\s+', ' ', 'g')) AS fp
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_filter_lines" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    replace(replace(text, ' merge ', chr(10)), 'scan', 'scan.') AS t
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10))) AS line,
-        |    generate_subscripts(string_split(t, chr(10)), 1) AS ord
-        |  FROM m
-        |), k AS (
-        |  SELECT doc_id, ord, line,
-        |    len(list_filter(string_split_regex(line, '[ \t\x0b\f\r]+'),
-        |        w -> w <> '')) AS nw,
-        |    list_has_any(string_split_regex(line, '[ \t\x0b\f\r]+'),
-        |        ['slow', 'dup']) AS banned,
-        |    right(regexp_replace(line, '[ \t\x0b\f\r]+$', ''), 1) AS lastc
-        |  FROM l
-        |)
-        |SELECT doc_id,
-        |  count(*) AS n_lines,
-        |  count(*) FILTER (WHERE nw >= 3 AND NOT banned) AS n_kept,
-        |  md5(coalesce(string_agg(line, chr(10) ORDER BY ord)
-        |      FILTER (WHERE nw >= 3 AND NOT banned), '')) AS clean_md5,
-        |  count(*) FILTER (WHERE nw >= 3 AND NOT banned
-        |      AND lastc IN ('.', '!', '?', '"')) AS n_kept_punct,
-        |  md5(coalesce(string_agg(line, chr(10) ORDER BY ord)
-        |      FILTER (WHERE nw >= 3 AND NOT banned
-        |        AND lastc IN ('.', '!', '?', '"')), '')) AS clean_punct_md5
-        |FROM k
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_nfc" ->
-      """WITH a AS (
-        |  SELECT doc_id, replace(text, 'e', 'e' || chr(769)) AS acc, text
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  md5(nfc_normalize(acc)) AS norm_md5,
-        |  nfc_normalize(acc) <> acc AS changed,
-        |  nfc_normalize(text) = text AS raw_identity
-        |FROM a
-        |ORDER BY doc_id""".stripMargin,
-
-    // token-distribution entropy, relational form: explode → per-token
-    // count → per-doc totals join. Per-occurrence q9(ln(c/n)) quantized
-    // to integers BEFORE the sum (the PlatformLn recipe), grouped as
-    // c·q9(ln(c/n)) per distinct token — identical arithmetic to the
-    // fused expression's count-map fold
-    "q_text_entropy" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-        |), u AS (
-        |  SELECT doc_id, unnest(toks) AS tok FROM w
-        |), c AS (
-        |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt FROM u GROUP BY 1, 2
-        |), n AS (
-        |  SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n,
-        |         CAST(count(*) AS BIGINT) AS nd
-        |  FROM c GROUP BY 1
-        |)
-        |SELECT c.doc_id, n.n AS n_tokens, n.nd AS n_distinct,
-        |  -(CAST(sum(cnt * CAST(floor(
-        |      ln(CAST(cnt AS DOUBLE) / n.n) * 1000000000.0 + 0.5) AS BIGINT))
-        |    AS DOUBLE) / n.n) / 1000000000.0 AS entropy
-        |FROM c JOIN n USING (doc_id)
-        |GROUP BY c.doc_id, n.n, n.nd
-        |ORDER BY doc_id""".stripMargin,
-
-    // html_extract replayed as the contract's literal pass chain:
-    // script/style/comment block drops, tags → one space, sequential
-    // literal entity replaces, explicit-ASCII whitespace collapse, trim.
-    // The markup wrapper is built identically to the Spark side
-    "q_html_extract" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    '<html><head><title>doc ' || doc_id || '</title><style>p{margin:'
-        |    || (doc_id % 7) || 'px}</style></head><body><!-- id ' || doc_id
-        |    || ' --><h1 class="t">' || source || '</h1><p data-k="v">'
-        |    || replace(replace(text, 'a', '&lt;i&gt;'), 'e', '&amp;') || '</p>'
-        |    || CASE WHEN doc_id % 13 = 0 THEN '<script>var x=unclosed'
-        |            ELSE '<script type="text/javascript">var id=1;</script>' END
-        |    || CASE WHEN doc_id % 11 = 0 THEN ' 1<2 ' ELSE '' END
-        |    || '</body></html>' AS html
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(
-        |      replace(replace(replace(replace(replace(replace(replace(
-        |        regexp_replace(
-        |          regexp_replace(
-        |            regexp_replace(
-        |              regexp_replace(html, '<script[^>]*>.*?</script>', '', 'gs'),
-        |              '<style[^>]*>.*?</style>', '', 'gs'),
-        |            '<!--.*?-->', '', 'gs'),
-        |          '<[^>]*>', ' ', 'gs'),
-        |        '&amp;', '&'), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |        '&#39;', ''''), '&apos;', ''''), '&nbsp;', ' '),
-        |      '[ \t\n\r\f]+', ' ', 'g')) AS clean
-        |  FROM h
-        |)
-        |SELECT doc_id, md5(clean) AS clean_md5,
-        |       length(clean) AS n_chars_clean
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // url_parts replayed relationally through the shared normalization
-    // chain (urlNormChainSql) over the shared UrlGateCase construction
-    "q_url_normalize" ->
-      s"""${urlNormChainSql(UrlGateCase)}
-         |SELECT doc_id, scheme, host, port, reg_domain, n_params, url_norm
-         |FROM norm ORDER BY doc_id""".stripMargin,
-
-    // URL-level dedup over the same chain: group by the canonical string,
-    // min doc id is the survivor, malformed (NULL url_norm) rows dropped
-    "q_url_dedup" ->
-      s"""${urlNormChainSql(UrlDedupCase)}
-         |SELECT url_norm, min(doc_id) AS canonical_id,
-         |       CAST(count(*) AS BIGINT) AS n_dupes
-         |FROM norm WHERE url_norm IS NOT NULL
-         |GROUP BY url_norm
-         |ORDER BY canonical_id""".stripMargin,
-
-    // dict_scan semantics in portable SQL: presence via contains;
-    // n_hits = OVERLAPPING occurrences (brute-force position scan, so
-    // the self-overlapping "a a" term is counted exactly as the
-    // automaton does); first_term = present term whose first match END
-    // (instr + len - 1) is smallest, ties → longer term, then
-    // lexicographic — encoded as a struct sort (e asc, nl asc, t asc)
-    "q_dict_scan" ->
-      """WITH d AS (
-        |  SELECT doc_id, text,
-        |    ['a', 'a a', 'scan slow', 'table', 'agg'] AS dict,
-        |    ['scan slow', 'table', 'agg', 'window', 'merge'] AS dict2
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  len(list_filter(dict, t -> contains(text, t))) AS n_terms_present,
-        |  CAST(list_sum(list_transform(dict, t ->
-        |    len(list_filter(
-        |      generate_series(1, greatest(length(text) - length(t) + 1, 0)),
-        |      i -> substr(text, i::int, length(t)) = t)))) AS BIGINT) AS n_hits,
-        |  list_sort(list_transform(list_filter(dict, t -> contains(text, t)),
-        |    t -> {'e': instr(text, t) + length(t) - 1,
-        |          'nl': -length(t), 't': t}))[1].t AS first_term,
-        |  len(list_filter(dict2, t -> contains(text, t))) AS n2_present,
-        |  CAST(list_sum(list_transform(dict2, t ->
-        |    len(list_filter(
-        |      generate_series(1, greatest(length(text) - length(t) + 1, 0)),
-        |      i -> substr(text, i::int, length(t)) = t)))) AS BIGINT) AS n2_hits,
-        |  list_sort(list_transform(list_filter(dict2, t -> contains(text, t)),
-        |    t -> {'e': instr(text, t) + length(t) - 1,
-        |          'nl': -length(t), 't': t}))[1].t AS first_term2
-        |FROM d
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_line_dedup" ->
-      """WITH m AS (
-        |  SELECT doc_id, replace(text, ' merge ', chr(10)) AS t FROM documents
-        |), l AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10))) AS line,
-        |    generate_subscripts(string_split(t, chr(10)), 1) AS ord
-        |  FROM m
-        |), k AS (
-        |  SELECT doc_id, ord, line,
-        |    CASE WHEN length(trim(line)) >= 1
-        |         THEN row_number() OVER (
-        |                PARTITION BY CASE WHEN length(trim(line)) >= 1 THEN line END
-        |                ORDER BY doc_id, ord) = 1
-        |         ELSE TRUE END AS keep
-        |  FROM l
-        |)
-        |SELECT doc_id,
-        |  count(*) AS n_lines,
-        |  count(*) FILTER (WHERE keep) AS n_kept,
-        |  md5(coalesce(string_agg(line, chr(10) ORDER BY ord)
-        |      FILTER (WHERE keep), '')) AS clean_md5
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // paragraph granularity: split/rejoin on the blank line
-    // (chr(10)||chr(10)); the rule is identical at span scope
-    "q_para_dedup" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    replace(replace(text, ' sort ', chr(10) || chr(10)),
-        |            ' merge ', chr(10)) AS t
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10) || chr(10))) AS line,
-        |    generate_subscripts(string_split(t, chr(10) || chr(10)), 1) AS ord
-        |  FROM m
-        |), k AS (
-        |  SELECT doc_id, ord, line,
-        |    CASE WHEN length(trim(line)) >= 1
-        |         THEN row_number() OVER (
-        |                PARTITION BY CASE WHEN length(trim(line)) >= 1 THEN line END
-        |                ORDER BY doc_id, ord) = 1
-        |         ELSE TRUE END AS keep
-        |  FROM l
-        |)
-        |SELECT doc_id,
-        |  count(*) AS n_paras,
-        |  count(*) FILTER (WHERE keep) AS n_kept,
-        |  md5(coalesce(string_agg(line, chr(10) || chr(10) ORDER BY ord)
-        |      FILTER (WHERE keep), '')) AS clean_md5
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_line_boilerplate" ->
-      """WITH m AS (
-        |  SELECT doc_id, replace(text, ' merge ', chr(10)) AS t FROM documents
-        |), l AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10))) AS line,
-        |    generate_subscripts(string_split(t, chr(10)), 1) AS ord
-        |  FROM m
-        |), c AS (
-        |  SELECT line, count(*) AS cnt FROM l
-        |  WHERE length(trim(line)) >= 1 GROUP BY line
-        |), k AS (
-        |  SELECT l.doc_id, l.ord, l.line,
-        |    CASE WHEN length(trim(l.line)) >= 1 THEN coalesce(c.cnt, 0) <= 3
-        |         ELSE TRUE END AS keep
-        |  FROM l LEFT JOIN c USING (line)
-        |)
-        |SELECT doc_id,
-        |  count(*) AS n_lines,
-        |  count(*) FILTER (WHERE keep) AS n_kept,
-        |  md5(coalesce(string_agg(line, chr(10) ORDER BY ord)
-        |      FILTER (WHERE keep), '')) AS clean_md5
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_pipeline_clean" ->
-      """WITH w AS (
-        |  SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents
-        |), sc AS (
-        |  SELECT doc_id, text, toks,
-        |    len(list_filter(toks, t -> t IN ('der','die','das','und','ist'))) AS s_de,
-        |    len(list_filter(toks, t -> t IN ('the','a','of','and','is'))) AS s_en,
-        |    len(list_filter(toks, t -> t IN ('el','la','de','y','es'))) AS s_es,
-        |    len(list_filter(toks, t -> t IN ('le','la','de','et','est'))) AS s_fr,
-        |    len(list_filter(toks, t -> t IN ('的','是','了','在','我'))) AS s_zh
-        |  FROM w
-        |), q AS (
-        |  SELECT doc_id,
-        |    md5(regexp_replace(trim(regexp_replace(lower(text), '[\.,;:!\?''"]', '', 'g')), '\s+', ' ', 'g')) AS fp,
-        |    CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-        |         WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-        |         WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-        |         WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-        |         WHEN s_fr >= s_zh THEN 'fr'
-        |         ELSE 'zh' END AS lang_pred,
-        |    least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.4
-        |      + (1.0 - CAST(length(text) - length(regexp_replace(text, '[\.,;:!\?''"]', '', 'g')) AS DOUBLE) / length(text)) * 0.2
-        |      + (1.0 - CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text)) * 0.2
-        |      + least((CAST(len(list_filter(toks, t -> t IN
-        |          ('the','a','an','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-        |          / len(toks)) * 4.0, 1.0) * 0.2 AS quality
-        |  FROM sc
-        |)
-        |SELECT min(doc_id) AS doc_id, fp, count(*) AS n_copies
-        |FROM q
-        |WHERE lang_pred = 'en' AND quality >= 0.5
-        |GROUP BY fp
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_ngram" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), e0 AS (
-        |  SELECT doc_id, unnest(g) AS s FROM t
-        |), df AS (
-        |  SELECT s FROM e0 GROUP BY s HAVING count(*) <= 500
-        |), e AS (
-        |  SELECT e0.doc_id, e0.s FROM e0 JOIN df USING (s)
-        |), sz AS (
-        |  SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id
-        |), p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        |  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id_a, id_b,
-        |       CAST(shared AS DOUBLE) / (na.n + nb.n - shared) AS jaccard
-        |FROM p
-        |JOIN sz na ON na.doc_id = p.id_a
-        |JOIN sz nb ON nb.doc_id = p.id_b
-        |WHERE CAST(shared AS DOUBLE) / (na.n + nb.n - shared) >= 0.2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_containment" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), e0 AS (
-        |  SELECT doc_id, unnest(g) AS s FROM t
-        |), df AS (
-        |  SELECT s FROM e0 GROUP BY s HAVING count(*) <= 500
-        |), e AS (
-        |  SELECT e0.doc_id, e0.s FROM e0 JOIN df USING (s)
-        |), sz AS (
-        |  SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id
-        |), p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        |  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), d AS (
-        |  SELECT id_a AS id_sub, id_b AS id_super,
-        |         CAST(shared AS DOUBLE) / na.n AS containment
-        |  FROM p JOIN sz na ON na.doc_id = p.id_a
-        |  UNION ALL
-        |  SELECT id_b, id_a, CAST(shared AS DOUBLE) / nb.n
-        |  FROM p JOIN sz nb ON nb.doc_id = p.id_b
-        |)
-        |SELECT id_sub, id_super, containment
-        |FROM d
-        |WHERE containment >= 0.5
-        |ORDER BY id_sub, id_super""".stripMargin,
-
-    // positional trigram index (parallel unnests zip position and gram);
-    // grams compared by string where Spark compares xxhash64 — equal while
-    // hashing is injective on the corpus (the q_dedup_ngram convention).
-    // Interval union per doc mirrors the engine: sorted span starts, each
-    // covering min(next - start, 3) tokens, the last covering 3.
-    "q_dup_span" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), pos AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(w) - 1)) AS p,
-        |    unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM t
-        |), dup AS (
-        |  SELECT g FROM pos GROUP BY g HAVING count(*) >= 2
-        |), dpos AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN dup USING (g)
-        |), ld AS (
-        |  SELECT doc_id, p,
-        |         lead(p) OVER (PARTITION BY doc_id ORDER BY p) AS nxt
-        |  FROM dpos
-        |), cov AS (
-        |  SELECT doc_id,
-        |         sum(CASE WHEN nxt IS NULL THEN 3 ELSE least(nxt - p, 3) END) AS c
-        |  FROM ld GROUP BY doc_id
-        |)
-        |SELECT t.doc_id,
-        |       CAST(len(w) AS BIGINT) AS n_tokens,
-        |       CAST(coalesce(cov.c, 0) AS BIGINT) AS dup_tokens,
-        |       round(CAST(coalesce(cov.c, 0) AS DOUBLE) / len(w), 6) AS dup_frac
-        |FROM t LEFT JOIN cov USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // removal twin of q_dup_span: covered positions = distinct union of
-    // [p, p+2] over duplicated-gram starts; surviving tokens re-joined in
-    // position order (string_agg ORDER BY = the engine's sorted rebuild)
-    "q_dup_span_clean" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), pos AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(w) - 1)) AS p,
-        |    unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM t
-        |), dup AS (
-        |  SELECT g FROM pos GROUP BY g HAVING count(*) >= 2
-        |), dpos AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN dup USING (g)
-        |), covp AS (
-        |  SELECT DISTINCT doc_id, tp
-        |  FROM (SELECT doc_id, unnest(range(p, p + 3)) AS tp FROM dpos)
-        |), tok AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(w) + 1)) AS tp,
-        |    unnest(w) AS tk
-        |  FROM t
-        |), kept AS (
-        |  SELECT tok.doc_id, tok.tp, tok.tk
-        |  FROM tok ANTI JOIN covp USING (doc_id, tp)
-        |), cl AS (
-        |  SELECT doc_id,
-        |    count(*) AS n_kept,
-        |    string_agg(tk, ' ' ORDER BY tp) AS clean_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT t.doc_id,
-        |       CAST(len(w) AS BIGINT) AS n_tokens,
-        |       CAST(coalesce(cl.n_kept, 0) AS BIGINT) AS n_kept,
-        |       coalesce(cl.clean_text, '') AS clean_text
-        |FROM t LEFT JOIN cl USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    "q_dedup_minhash" ->
-      s"""WITH $MinhashBandedCte, cand AS (
-         |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         |  FROM banded l JOIN banded r ON l.b = r.b AND l.bh = r.bh
-         |  WHERE l.doc_id < r.doc_id
-         |), est AS (
-         |  SELECT id_a, id_b,
-         |         CAST(list_sum(list_transform(range(1, 65),
-         |                i -> CASE WHEN sa.sg[i] = sb.sg[i] THEN 1 ELSE 0 END)) AS DOUBLE)
-         |           / 64 AS est_jaccard
-         |  FROM cand
-         |  JOIN sig sa ON sa.doc_id = cand.id_a
-         |  JOIN sig sb ON sb.doc_id = cand.id_b
-         |)
-         |SELECT id_a, id_b, est_jaccard FROM est
-         |WHERE est_jaccard >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // same signature/band construction; candidates come from PROBE
-    // (doc_id % 10 = 0) bands joined against ALL bands — pairs touching
-    // the probe only, corpus x corpus never generated
-    "q_dedup_incremental" ->
-      s"""WITH $MinhashBandedCte, cand AS (
-         |  SELECT DISTINCT least(l.doc_id, r.doc_id) AS id_a,
-         |                  greatest(l.doc_id, r.doc_id) AS id_b
-         |  FROM banded l JOIN banded r ON l.b = r.b AND l.bh = r.bh
-         |  WHERE l.doc_id % 10 = 0 AND l.doc_id != r.doc_id
-         |), est AS (
-         |  SELECT id_a, id_b,
-         |         CAST(list_sum(list_transform(range(1, 65),
-         |                i -> CASE WHEN sa.sg[i] = sb.sg[i] THEN 1 ELSE 0 END)) AS DOUBLE)
-         |           / 64 AS est_jaccard
-         |  FROM cand
-         |  JOIN sig sa ON sa.doc_id = cand.id_a
-         |  JOIN sig sb ON sb.doc_id = cand.id_b
-         |)
-         |SELECT id_a, id_b, est_jaccard FROM est
-         |WHERE est_jaccard >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // same signature chain; the union sketch is min over member docs'
-    // plane minima (grouped straight from ph), matches / 64 exact
-    "q_source_overlap" ->
-      s"""WITH $MinhashBandedCte, ssig AS (
-         |  SELECT d.source, ph.p, min(ph.mh) AS mh
-         |  FROM ph JOIN documents d USING (doc_id)
-         |  GROUP BY 1, 2
-         |)
-         |SELECT a.source AS source_a, b.source AS source_b,
-         |       CAST(sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS DOUBLE) / 64
-         |         AS est_jaccard
-         |FROM ssig a JOIN ssig b ON a.p = b.p AND a.source < b.source
-         |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-
-    "q_simhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
-        |), h AS (
-        |  SELECT doc_id, CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h FROM tok
-        |), bits AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM h, (SELECT unnest(range(60)) AS b)
-        |  GROUP BY 1, 2
-        |)
-        |SELECT doc_id,
-        |       CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-        |FROM bits
-        |GROUP BY 1
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_simhash_pairs" ->
-      s"""WITH $SimhashPairsCte
-         |SELECT id_a, id_b, hamming FROM pairs
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // components over the simhash pairs: recursive-CTE reachability
-    // (min reachable id == the engine's large-star/small-star fixpoint)
-    "q_dedup_cluster" ->
-      s"""WITH RECURSIVE $SimhashPairsCte, edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs
-         |), reach(id, r) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id
-         |)
-         |SELECT CAST(id AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS component
-         |FROM reach GROUP BY 1
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_canonical" ->
-      s"""WITH RECURSIVE $SimhashPairsCte, edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs
-         |), reach(id, r) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id
-         |), comp AS (
-         |  SELECT id, min(r) AS component FROM reach GROUP BY 1
-         |)
-         |SELECT d.doc_id FROM documents d
-         |WHERE d.doc_id NOT IN (SELECT id FROM comp WHERE id <> component)
-         |ORDER BY doc_id""".stripMargin,
-
-    // max(score)-then-min(id among maxima) == Spark's max_by over the
-    // (score, -id) struct: the same total order, in SQL arg_max can't
-    // compose (DuckDB's takes no composite ordering key)
-    "q_dedup_best" ->
-      s"""WITH RECURSIVE $SimhashPairsCte, edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs
-         |), reach(id, r) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id
-         |), comp AS (
-         |  SELECT id, min(r) AS component FROM reach GROUP BY 1
-         |), keyed AS (
-         |  SELECT d.doc_id, d.n_chars, coalesce(c.component, d.doc_id) AS k
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-         |), best AS (
-         |  SELECT k, max(n_chars) AS mx FROM keyed GROUP BY k
-         |), keep AS (
-         |  SELECT min(keyed.doc_id) AS doc_id
-         |  FROM keyed JOIN best ON keyed.k = best.k AND keyed.n_chars = best.mx
-         |  GROUP BY keyed.k
-         |)
-         |SELECT d.doc_id, d.n_chars FROM documents d
-         |WHERE d.doc_id IN (SELECT doc_id FROM keep)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // u = first-15-hex of md5 as 60-bit long / 2^60: the engine's
-    // hashSplitMd5 arithmetic verbatim; cuts 0.75/0.875 are binary-exact
-    "q_split_hash" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |         CAST('0x' || substr(md5('s1' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |           / 1152921504606846976.0 AS u
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |       CASE WHEN u < 0.75 THEN 'train'
-        |            WHEN u < 0.875 THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM u ORDER BY doc_id""".stripMargin,
-
-    "q_split_leakage" ->
-      s"""WITH RECURSIVE $SimhashPairsCte, edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs
-         |), reach(id, r) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id
-         |), comp AS (
-         |  SELECT id, min(r) AS component FROM reach GROUP BY 1
-         |), keyed AS (
-         |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS k
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-         |), u2 AS (
-         |  SELECT doc_id,
-         |         CAST('0x' || substr(md5('s1' || CAST(k AS VARCHAR)), 1, 15) AS BIGINT)
-         |           / 1152921504606846976.0 AS u
-         |  FROM keyed
-         |)
-         |SELECT doc_id,
-         |       CASE WHEN u < 0.75 THEN 'train'
-         |            WHEN u < 0.875 THEN 'val'
-         |            ELSE 'test' END AS split
-         |FROM u2 ORDER BY doc_id""".stripMargin,
-
-    "q_top_terms" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents
-        |)
-        |SELECT term, count(*) AS cnt FROM tok
-        |WHERE term <> ''
-        |GROUP BY term
-        |ORDER BY cnt DESC, term
-        |LIMIT 50""".stripMargin,
-
-    "q_sample_stratified" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang,
-        |         CAST('0x' || substr(md5('s2' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |           / 1152921504606846976.0 AS u
-        |  FROM documents
-        |)
-        |SELECT doc_id, lang FROM u
-        |WHERE u < CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25
-        |                    WHEN 'zh' THEN 0.125 ELSE 0.0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS tokens
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, tokens, sum(tokens) OVER (ORDER BY doc_id) AS cum FROM t
-        |)
-        |SELECT doc_id, tokens, CAST(floor((cum - tokens) / 512.0) AS BIGINT) AS bin
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_pack_text" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |         CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS tokens
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, text, tokens, sum(tokens) OVER (ORDER BY doc_id) AS cum FROM t
-        |)
-        |SELECT CAST(floor((cum - tokens) / 512.0) AS BIGINT) AS bin,
-        |       count(*) AS n_docs,
-        |       CAST(sum(tokens) AS BIGINT) AS total_tokens,
-        |       string_agg(text, ' ' ORDER BY doc_id) AS packed_text
-        |FROM c GROUP BY 1 ORDER BY bin""".stripMargin,
-
-    "q_text_repetition" ->
-      """WITH g AS (
-        |  SELECT doc_id, unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), c AS (
-        |  SELECT doc_id, s, count(*) AS c FROM g GROUP BY 1, 2
-        |), a AS (
-        |  SELECT doc_id, sum(c) AS t, max(c) AS mx,
-        |         coalesce(sum(CASE WHEN c >= 2 THEN c END), 0) AS d
-        |  FROM c GROUP BY 1
-        |)
-        |SELECT doc_id, CAST(mx AS DOUBLE) / t AS top_ngram_frac,
-        |       CAST(d AS DOUBLE) / t AS dup_ngram_frac
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    // gate counts distinct shingle HASHES, oracle distinct shingle STRINGS
-    // — equal while hashing is injective on the corpus (q_dedup_ngram
-    // convention)
-    "q_decontaminate" -> DecontaminateOracle,
-
-    // the hybrid path is output-identical to the exact form by
-    // construction (lossless bloom prefilter) — same oracle
-    "q_decontaminate_hybrid" -> DecontaminateOracle,
-
-    // the dup-span machinery with the flag set = the bench corpus's
-    // DISTINCT grams; inner join vs cov == the cont_tokens > 0 filter
-    // (cov only holds docs with >=1 flagged span)
-    "q_cont_span" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), pos AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(w) - 1)) AS p,
-        |    unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM t
-        |), bset AS (
-        |  SELECT DISTINCT g FROM pos WHERE doc_id % 10 = 0
-        |), dpos AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN bset USING (g)
-        |  WHERE pos.doc_id % 10 <> 0
-        |), ld AS (
-        |  SELECT doc_id, p,
-        |         lead(p) OVER (PARTITION BY doc_id ORDER BY p) AS nxt
-        |  FROM dpos
-        |), cov AS (
-        |  SELECT doc_id,
-        |         sum(CASE WHEN nxt IS NULL THEN 3 ELSE least(nxt - p, 3) END) AS c
-        |  FROM ld GROUP BY doc_id
-        |)
-        |SELECT t.doc_id,
-        |       CAST(len(w) AS BIGINT) AS n_tokens,
-        |       CAST(cov.c AS BIGINT) AS cont_tokens,
-        |       round(CAST(cov.c AS DOUBLE) / len(w), 6) AS cont_frac
-        |FROM t JOIN cov USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_cont_span_clean" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), pos AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(w) - 1)) AS p,
-        |    unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM t
-        |), bset AS (
-        |  SELECT DISTINCT g FROM pos WHERE doc_id % 10 = 0
-        |), dpos AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN bset USING (g)
-        |  WHERE pos.doc_id % 10 <> 0
-        |), covp AS (
-        |  SELECT DISTINCT doc_id, tp
-        |  FROM (SELECT doc_id, unnest(range(p, p + 3)) AS tp FROM dpos)
-        |), tok AS (
-        |  SELECT doc_id,
-        |    unnest(range(1, len(w) + 1)) AS tp,
-        |    unnest(w) AS tk
-        |  FROM t WHERE doc_id % 10 <> 0
-        |), kept AS (
-        |  SELECT tok.doc_id, tok.tp, tok.tk
-        |  FROM tok ANTI JOIN covp USING (doc_id, tp)
-        |), cl AS (
-        |  SELECT doc_id,
-        |    count(*) AS n_kept,
-        |    string_agg(tk, ' ' ORDER BY tp) AS clean_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT t.doc_id,
-        |       CAST(len(w) AS BIGINT) AS n_tokens,
-        |       CAST(coalesce(cl.n_kept, 0) AS BIGINT) AS n_kept,
-        |       coalesce(cl.clean_text, '') AS clean_text
-        |FROM t LEFT JOIN cl USING (doc_id)
-        |WHERE t.doc_id % 10 <> 0
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // exact simulation of the m=2^20 / k=4 double-hash bloom: base =
-    // lower-60-md5 (the MinHashSignatureMd5 convention), h1 = base &
-    // (m-1), h2 = ((base >> 20) & (m-1)) | 1, p_i = (h1 + i*h2) % m; a
-    // corpus gram may-hits iff ALL 4 of its positions are set by ANY
-    // bench grams (count(DISTINCT i) = 4 — two different probes landing
-    // on one set bit both count, exactly like the real bitmap)
-    "q_decontaminate_bloom" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS g
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), bb AS (
-        |  SELECT DISTINCT ('0x' || substr(md5(s), 1, 15))::BIGINT AS base
-        |  FROM (SELECT unnest(g) AS s FROM t WHERE doc_id % 10 = 0)
-        |), bp AS (
-        |  SELECT DISTINCT ((base & 1048575) + i * (((base >> 20) & 1048575) | 1)) % 1048576 AS p
-        |  FROM bb, (SELECT unnest(range(0, 4)) AS i)
-        |), cg AS (
-        |  SELECT doc_id, s, ('0x' || substr(md5(s), 1, 15))::BIGINT AS base
-        |  FROM (SELECT doc_id, unnest(g) AS s FROM t WHERE doc_id % 10 <> 0)
-        |), cp AS (
-        |  SELECT doc_id, s, i,
-        |         ((base & 1048575) + i * (((base >> 20) & 1048575) | 1)) % 1048576 AS p
-        |  FROM cg, (SELECT unnest(range(0, 4)) AS i)
-        |), hit AS (
-        |  SELECT doc_id, s
-        |  FROM cp JOIN bp USING (p)
-        |  GROUP BY doc_id, s
-        |  HAVING count(DISTINCT i) = 4
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hit_ngrams
-        |FROM hit GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_pii_scan" ->
-      """WITH l AS (
-        |  SELECT event_type,
-        |    'uid ' || user_id || ' mail u' || user_id || '@example.com ip 10.0.' ||
-        |    (user_id % 256) || '.' || (event_id % 256) || ' tel +64' ||
-        |    (4000000 + event_id % 1000000) || ' acct ' || (9000000 + event_id) || ' ' || props AS text
-        |  FROM events
-        |), p AS (
-        |  SELECT event_type,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |    CAST(len(regexp_extract_all(text, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS BIGINT) AS n_ipv4,
-        |    CAST(len(regexp_extract_all(text, '\+[0-9]{7,15}')) AS BIGINT) AS n_phones,
-        |    CAST(len(regexp_extract_all(text, '\b[0-9]{6,}\b')) AS BIGINT) AS n_idnums,
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |      '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '[IP]', 'g'),
-        |      '\+[0-9]{7,15}', '[PHONE]', 'g'),
-        |      '\b[0-9]{6,}\b', '[ID]', 'g') AS redacted
-        |  FROM l
-        |)
-        |SELECT event_type, count(*) AS n_events,
-        |       CAST(sum(n_emails) AS BIGINT) AS emails,
-        |       CAST(sum(n_ipv4) AS BIGINT) AS ipv4s,
-        |       CAST(sum(n_phones) AS BIGINT) AS phones,
-        |       CAST(sum(n_idnums) AS BIGINT) AS idnums,
-        |       min(redacted) AS redacted_min
-        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_rare_words" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, t FROM tok WHERE t <> ''
-        |), vocab AS (
-        |  SELECT t, count(*) AS df
-        |  FROM (SELECT DISTINCT doc_id, t FROM tk) GROUP BY t
-        |)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |       CAST(sum(CASE WHEN df < 300 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare,
-        |       CAST(sum(CASE WHEN df < 300 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS rare_ratio
-        |FROM tk JOIN vocab USING (t)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
-        |), tk AS (
-        |  SELECT doc_id, t FROM tok WHERE t <> ''
-        |), tf AS (
-        |  SELECT doc_id, t, count(*) AS tf FROM tk GROUP BY 1, 2
-        |), vocab AS (
-        |  SELECT t, count(*) AS df FROM tf GROUP BY t
-        |), sc AS (
-        |  SELECT doc_id, t, tf, df, (tf * 1000000) // df AS score_q
-        |  FROM tf JOIN vocab USING (t)
-        |), rk AS (
-        |  SELECT doc_id, t, tf, df, score_q,
-        |         CAST(row_number() OVER (PARTITION BY doc_id
-        |              ORDER BY score_q DESC, t) AS INTEGER) AS rank
-        |  FROM sc
-        |)
-        |SELECT doc_id, rank, t AS term, tf, df, score_q
-        |FROM rk WHERE rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    // token counts mirror the engine's leading-empty-aware arithmetic
-    // (list_filter drops ALL empties; position 0 is the only one Java
-    // split can keep, so the counts coincide)
-    "q_corpus_card" ->
-      """WITH per AS (
-        |  SELECT source, lang,
-        |         CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS t,
-        |         CAST(length(text) AS BIGINT) AS c
-        |  FROM documents
-        |), base AS (
-        |  SELECT source,
-        |         CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(sum(t) AS BIGINT) AS n_tokens,
-        |         CAST(sum(c) AS BIGINT) AS n_chars,
-        |         CAST(sum(t) AS DOUBLE) / count(*) AS mean_doc_tokens
-        |  FROM per GROUP BY source
-        |), lc AS (
-        |  SELECT source, lang, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM per GROUP BY source, lang
-        |), lt AS (
-        |  SELECT source, lang AS top_lang, cnt AS top_lang_docs,
-        |         row_number() OVER (PARTITION BY source ORDER BY cnt DESC, lang) AS rn
-        |  FROM lc
-        |)
-        |SELECT base.source, n_docs, n_tokens, n_chars, mean_doc_tokens,
-        |       top_lang, top_lang_docs
-        |FROM base JOIN lt ON base.source = lt.source AND lt.rn = 1
-        |ORDER BY base.source""".stripMargin,
-
-    "q_top_terms_by_source" ->
-      """WITH tok AS (
-        |  SELECT source, unnest(string_split_regex(trim(text), '\s+')) AS term
-        |  FROM documents
-        |), tc AS (
-        |  SELECT source, term, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM tok WHERE term <> '' GROUP BY source, term
-        |), r AS (
-        |  SELECT source, term, cnt,
-        |         CAST(row_number() OVER (PARTITION BY source
-        |                                 ORDER BY cnt DESC, term) AS INTEGER) AS rank
-        |  FROM tc
-        |)
-        |SELECT source, rank, term, cnt FROM r WHERE rank <= 5
-        |ORDER BY source, rank""".stripMargin,
-
-    // bigrams via the 2-slice comprehension (duplicates KEPT — each
-    // occurrence is scored); c1 folds from the bigram table so the
-    // conditionals sum to 1 per w1; p = one BIGINT/BIGINT double
-    // division, floored to 1e-12 longs, summed as integers
-    "q_lm_score" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-        |), g AS (
-        |  SELECT doc_id, unnest([array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))]) AS s
-        |  FROM w
-        |), c2 AS (
-        |  SELECT s, CAST(count(*) AS BIGINT) AS c2 FROM g GROUP BY s
-        |), c1 AS (
-        |  SELECT string_split(s, ' ')[1] AS w1, CAST(sum(c2) AS BIGINT) AS c1
-        |  FROM c2 GROUP BY 1
-        |), sc AS (
-        |  SELECT g.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_bigrams,
-        |         sum(CAST(floor(
-        |           (CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)) * 1000000000000.0 + 0.5) AS BIGINT)) AS sq
-        |  FROM g
-        |  JOIN c2 USING (s)
-        |  JOIN c1 ON string_split(g.s, ' ')[1] = c1.w1
-        |  GROUP BY g.doc_id
-        |)
-        |SELECT doc_id, n_bigrams,
-        |       (CAST(sq AS DOUBLE) / n_bigrams) / 1000000000000.0 AS lm_score
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // cross-entropy twin: ln of the SAME exact division, 1e-9 quantum
-    // (platform-libm parity — see PlatformLn)
-    "q_lm_xent" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-        |), g AS (
-        |  SELECT doc_id, unnest([array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))]) AS s
-        |  FROM w
-        |), c2 AS (
-        |  SELECT s, CAST(count(*) AS BIGINT) AS c2 FROM g GROUP BY s
-        |), c1 AS (
-        |  SELECT string_split(s, ' ')[1] AS w1, CAST(sum(c2) AS BIGINT) AS c1
-        |  FROM c2 GROUP BY 1
-        |), sc AS (
-        |  SELECT g.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_bigrams,
-        |         sum(CAST(floor(
-        |           ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)) * 1000000000.0 + 0.5) AS BIGINT)) AS sq
-        |  FROM g
-        |  JOIN c2 USING (s)
-        |  JOIN c1 ON string_split(g.s, ' ')[1] = c1.w1
-        |  GROUP BY g.doc_id
-        |)
-        |SELECT doc_id, n_bigrams,
-        |       (CAST(sq AS DOUBLE) / n_bigrams) / 1000000000.0 AS lm_score
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // hashed unigram+bigram buckets (lower-60-bit md5 mod 4096 — the
-    // established md5 bridge), target/raw Laplace bucket models over the
-    // fixed bucket space, per-probability 1e-12 quantization BEFORE the
-    // subtraction — integer sums term for term with the Spark side
-    "q_importance" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), uni AS (
-        |  SELECT doc_id, source, unnest(w) AS g FROM t
-        |), bi AS (
-        |  SELECT doc_id, source,
-        |         unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS g
-        |  FROM t WHERE len(w) >= 2
-        |), feats AS (
-        |  SELECT doc_id, source = 'src0' AS tgt,
-        |         CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % 4096 AS f
-        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-        |), counts AS (
-        |  SELECT f,
-        |         CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-        |         CAST(sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS BIGINT) AS cr
-        |  FROM feats GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(ct) AS BIGINT) AS tt, CAST(sum(cr) AS BIGINT) AS tr FROM counts
-        |), lm AS (
-        |  SELECT f,
-        |    CAST(floor((CAST(ct + 1 AS DOUBLE) / CAST(tt + 4096 AS DOUBLE))
-        |               * 1000000000000.0 + 0.5) AS BIGINT)
-        |    - CAST(floor((CAST(cr + 1 AS DOUBLE) / CAST(tr + 4096 AS DOUBLE))
-        |               * 1000000000000.0 + 0.5) AS BIGINT) AS dq
-        |  FROM counts CROSS JOIN tot
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-        |       (CAST(sum(dq) AS DOUBLE) / count(*)) / 1000000000000.0 AS imp_score
-        |FROM feats JOIN lm USING (f)
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // DSIR's actual log-ratio: dq = floor((ln pt - ln pr)*1e9 + 0.5) —
-    // platform-libm ln parity (PlatformLn), 1e-9 quantum absorbs the
-    // residual 1-ulp disagreements
-    "q_importance_log" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), uni AS (
-        |  SELECT doc_id, source, unnest(w) AS g FROM t
-        |), bi AS (
-        |  SELECT doc_id, source,
-        |         unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS g
-        |  FROM t WHERE len(w) >= 2
-        |), feats AS (
-        |  SELECT doc_id, source = 'src0' AS tgt,
-        |         CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % 4096 AS f
-        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-        |), counts AS (
-        |  SELECT f,
-        |         CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-        |         CAST(sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS BIGINT) AS cr
-        |  FROM feats GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(ct) AS BIGINT) AS tt, CAST(sum(cr) AS BIGINT) AS tr FROM counts
-        |), lm AS (
-        |  SELECT f,
-        |    CAST(floor(
-        |      (ln(CAST(ct + 1 AS DOUBLE) / CAST(tt + 4096 AS DOUBLE))
-        |       - ln(CAST(cr + 1 AS DOUBLE) / CAST(tr + 4096 AS DOUBLE)))
-        |      * 1000000000.0 + 0.5) AS BIGINT) AS dq
-        |  FROM counts CROSS JOIN tot
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-        |       (CAST(sum(dq) AS DOUBLE) / count(*)) / 1000000000.0 AS imp_score
-        |FROM feats JOIN lm USING (f)
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // the q_importance model arithmetic trained on EVEN doc_ids only;
-    // odd-doc features LEFT JOIN the observed buckets with the smoothed
-    // c=0 default (dq0) where the model never saw the bucket — the same
-    // dense-array semantics as trainModel/ImportanceScore
-    "q_importance_score" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), uni AS (
-        |  SELECT doc_id, source, unnest(w) AS g FROM t
-        |), bi AS (
-        |  SELECT doc_id, source,
-        |         unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS g
-        |  FROM t WHERE len(w) >= 2
-        |), feats AS (
-        |  SELECT doc_id, source,
-        |         CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % 4096 AS f
-        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-        |), counts AS (
-        |  SELECT f,
-        |         CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-        |         CAST(sum(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS cr
-        |  FROM feats WHERE doc_id % 2 = 0 GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(ct) AS BIGINT) AS tt, CAST(sum(cr) AS BIGINT) AS tr FROM counts
-        |), lm AS (
-        |  SELECT f,
-        |    CAST(floor((CAST(ct + 1 AS DOUBLE) / CAST(tt + 4096 AS DOUBLE))
-        |               * 1000000000000.0 + 0.5) AS BIGINT)
-        |    - CAST(floor((CAST(cr + 1 AS DOUBLE) / CAST(tr + 4096 AS DOUBLE))
-        |               * 1000000000000.0 + 0.5) AS BIGINT) AS dq
-        |  FROM counts CROSS JOIN tot
-        |), d0 AS (
-        |  SELECT
-        |    CAST(floor((CAST(1 AS DOUBLE) / CAST(tt + 4096 AS DOUBLE))
-        |               * 1000000000000.0 + 0.5) AS BIGINT)
-        |    - CAST(floor((CAST(1 AS DOUBLE) / CAST(tr + 4096 AS DOUBLE))
-        |               * 1000000000000.0 + 0.5) AS BIGINT) AS dq0
-        |  FROM tot
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-        |       (CAST(sum(COALESCE(lm.dq, d0.dq0)) AS DOUBLE) / count(*))
-        |         / 1000000000000.0 AS imp_score
-        |FROM feats LEFT JOIN lm USING (f) CROSS JOIN d0
-        |WHERE doc_id % 2 = 1
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // same expression SHAPE as the Spark side, term for term: rational
-    // idf ((n-df+0.5)/(df+0.5)), binary-exact k1=1.25/b=0.75 (so the
-    // folded constants 2.25/0.25 are identical bits), per-term
-    // contributions floored to 1e-9 longs and summed as integers
-    "q_bm25" ->
-      """WITH dl AS (
-        |  SELECT doc_id,
-        |         CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS dl
-        |  FROM documents
-        |), st AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-        |  FROM dl
-        |), tf AS (
-        |  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
-        |  ) WHERE t IN ('spark', 'join', 'window', 'vector')
-        |  GROUP BY doc_id, t
-        |), dfreq AS (
-        |  SELECT t, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY t
-        |), sc AS (
-        |  SELECT tf.doc_id,
-        |    sum(CAST(floor(
-        |      ((n - df + 0.5) / (df + 0.5))
-        |      * ((tf * (1.25 + 1.0)) / (tf + 1.25 * (1.0 - 0.75 + 0.75 * dl / avgdl)))
-        |      * 1000000000.0 + 0.5) AS BIGINT)) AS score_q
-        |  FROM tf JOIN dfreq USING (t) JOIN dl USING (doc_id) CROSS JOIN st
-        |  GROUP BY tf.doc_id
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INTEGER) AS rank,
-        |       doc_id, CAST(score_q AS DOUBLE) / 1000000000.0 AS score
-        |FROM sc ORDER BY score_q DESC, doc_id LIMIT 15""".stripMargin,
-
-    // log-idf twin: idf = ln(1 + rational), identical evaluation order
-    // (platform-libm parity — see PlatformLn); same 1e-9 quantum
-    "q_bm25_log" ->
-      """WITH dl AS (
-        |  SELECT doc_id,
-        |         CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS dl
-        |  FROM documents
-        |), st AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-        |  FROM dl
-        |), tf AS (
-        |  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
-        |  ) WHERE t IN ('spark', 'join', 'window', 'vector')
-        |  GROUP BY doc_id, t
-        |), dfreq AS (
-        |  SELECT t, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY t
-        |), sc AS (
-        |  SELECT tf.doc_id,
-        |    sum(CAST(floor(
-        |      ln(((n - df + 0.5) / (df + 0.5)) + 1.0)
-        |      * ((tf * (1.25 + 1.0)) / (tf + 1.25 * (1.0 - 0.75 + 0.75 * dl / avgdl)))
-        |      * 1000000000.0 + 0.5) AS BIGINT)) AS score_q
-        |  FROM tf JOIN dfreq USING (t) JOIN dl USING (doc_id) CROSS JOIN st
-        |  GROUP BY tf.doc_id
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INTEGER) AS rank,
-        |       doc_id, CAST(score_q AS DOUBLE) / 1000000000.0 AS score
-        |FROM sc ORDER BY score_q DESC, doc_id LIMIT 15""".stripMargin,
-
-    // integer metric -> the mean is an exact long sum + one double
-    // division in both engines (order-independent, unlike a double sum)
-    "q_quality_cut" ->
-      """WITH w AS (
-        |  SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS BIGINT) AS n_bpe_tokens,
-        |    CAST(len(list_filter(toks, t -> t IN
-        |      ('the','a','an','of','and','to','in','is','on','for','with'))) AS BIGINT) AS n_stopwords,
-        |    CAST(length(text) - length(regexp_replace(text, '[\.,;:!\?''"]', '', 'g')) AS DOUBLE) / length(text) AS punct_ratio,
-        |    CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text) AS digit_ratio
-        |  FROM w
-        |), q AS (
-        |  SELECT doc_id, n_bpe_tokens,
-        |    least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-        |      + (1.0 - punct_ratio) * 0.2
-        |      + (1.0 - digit_ratio) * 0.2
-        |      + least((CAST(n_stopwords AS DOUBLE) / n_tokens) * 4.0, 1.0) * 0.2 AS quality
-        |  FROM s
-        |)
-        |SELECT doc_id, n_bpe_tokens, quality FROM q
-        |WHERE CAST(n_bpe_tokens AS DOUBLE) >=
-        |      (SELECT CAST(sum(n_bpe_tokens) AS DOUBLE) / count(*) FROM q)
-        |ORDER BY doc_id""".stripMargin,
-
-    // exact rank cut: row_number over (metric, doc_id) — the id
-    // tie-break makes the kept count exact even on a plateaued metric;
-    // floor(0.8·n) is the same single double op the engine computes
-    "q_quality_cut_quantile" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS BIGINT) AS n_bpe_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, n_bpe_tokens FROM (
-        |  SELECT doc_id, n_bpe_tokens,
-        |         row_number() OVER (ORDER BY n_bpe_tokens, doc_id) - 1 AS pos,
-        |         count(*) OVER () AS n
-        |  FROM s
-        |) WHERE pos >= floor(0.8 * n)
-        |ORDER BY doc_id""".stripMargin,
-
-    // per-group: the same rank rule partitioned by source
-    "q_quality_cut_pergroup" ->
-      """WITH s AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS BIGINT) AS n_bpe_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, source, n_bpe_tokens FROM (
-        |  SELECT doc_id, source, n_bpe_tokens,
-        |         row_number() OVER (
-        |           PARTITION BY source ORDER BY n_bpe_tokens, doc_id) - 1 AS pos,
-        |         count(*) OVER (PARTITION BY source) AS n
-        |  FROM s
-        |) WHERE pos >= floor(0.8 * n)
-        |ORDER BY doc_id""".stripMargin,
-
-    // row_number (not percent_rank): ties order by doc_id — the same
-    // unique total order the distributed scan produces
-    "q_rank_norm" ->
-      """SELECT doc_id, n_chars,
-        |       CASE WHEN (SELECT count(*) FROM documents) = 1 THEN 0.0
-        |            ELSE CAST(row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS DOUBLE)
-        |                 / ((SELECT count(*) FROM documents) - 1)
-        |       END AS pct_rank
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // pct_rank as in q_rank_norm; decile = least(floor(pct*10), 9);
-    // keep-hash u as in q_split_hash — all three idioms verbatim
-    "q_quality_sample" ->
-      """WITH r AS (
-        |  SELECT doc_id, n_chars,
-        |         CASE WHEN (SELECT count(*) FROM documents) = 1 THEN 0.0
-        |              ELSE CAST(row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS DOUBLE)
-        |                   / ((SELECT count(*) FROM documents) - 1)
-        |         END AS pct_rank
-        |  FROM documents
-        |), d AS (
-        |  SELECT *, least(CAST(floor(pct_rank * 10) AS INTEGER), 9) AS dec,
-        |         CAST('0x' || substr(md5('qs' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |           / 1152921504606846976.0 AS u
-        |  FROM r
-        |)
-        |SELECT doc_id, n_chars, pct_rank
-        |FROM d
-        |WHERE u < CASE dec
-        |  WHEN 0 THEN 0.05 WHEN 1 THEN 0.1 WHEN 2 THEN 0.15
-        |  WHEN 3 THEN 0.2 WHEN 4 THEN 0.3 WHEN 5 THEN 0.4
-        |  WHEN 6 THEN 0.5 WHEN 7 THEN 0.7 WHEN 8 THEN 0.9 ELSE 1.0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_shuffle_order" ->
-      """SELECT doc_id,
-        |       row_number() OVER (
-        |         ORDER BY substr(md5('s3' || CAST(doc_id AS VARCHAR)), 1, 15), doc_id) - 1 AS pos
-        |FROM documents ORDER BY pos""".stripMargin,
-
-    // rate(s) = least(1, target * M / tokens(s)), M = min tokens/target;
-    // token totals are exact BIGINT sums, so both engines compute the
-    // same rates from the same doubles in the same operation order
-    "q_mixture_sample" ->
-      """WITH t AS (
-        |  SELECT source, CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS tk
-        |  FROM documents GROUP BY source
-        |), w AS (
-        |  SELECT source, CAST(tgt AS DOUBLE) AS tgt
-        |  FROM (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)) AS v(source, tgt)
-        |), r AS (
-        |  SELECT t.source,
-        |         least(1.0, tgt * (SELECT min(CAST(tk AS DOUBLE) / tgt) FROM t JOIN w USING (source))
-        |                      / CAST(tk AS DOUBLE)) AS rate
-        |  FROM t JOIN w USING (source)
-        |)
-        |SELECT doc_id, source FROM documents d JOIN r USING (source)
-        |WHERE CAST('0x' || substr(md5('mx' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |        / 1152921504606846976.0 < rate
-        |ORDER BY doc_id""".stripMargin,
-
-    // replicas = floor(rate) + (u < rate - floor(rate)); the frac
-    // subtraction is one IEEE op, floor is exact, so both engines draw
-    // the same replica count; epochs unnest from range(0, n)
-    "q_replicate" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.0
-        |                     WHEN 'src2' THEN 0.25 ELSE 0.0 END AS rate,
-        |         CAST('0x' || substr(md5('rep' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |           / 1152921504606846976.0 AS u
-        |  FROM documents
-        |), nn AS (
-        |  SELECT doc_id, source,
-        |         CAST(floor(rate) AS BIGINT)
-        |           + CASE WHEN u < rate - floor(rate) THEN 1 ELSE 0 END AS n
-        |  FROM d
-        |)
-        |SELECT doc_id, source, unnest(range(0, n)) AS epoch
-        |FROM nn WHERE n > 0
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    // the q_shuffle_order position idiom + a WHERE on the position
-    "q_sample_exact" ->
-      """SELECT doc_id, source, pos FROM (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (
-        |           ORDER BY substr(md5('se1' || CAST(doc_id AS VARCHAR)), 1, 15),
-        |                    doc_id) - 1 AS pos
-        |  FROM documents
-        |) WHERE pos < 100
-        |ORDER BY pos""".stripMargin,
-
-    // hash-order row_number per group — the padded-hex concat key orders
-    // exactly like (md5 prefix, doc_id) for non-negative ids
-    "q_domain_cap" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (
-        |           PARTITION BY source
-        |           ORDER BY substr(md5('dc' || CAST(doc_id AS VARCHAR)), 1, 15),
-        |                    doc_id) AS rn
-        |  FROM documents
-        |) WHERE rn <= 10
-        |ORDER BY doc_id""".stripMargin,
-
-    // the q_replicate replication verbatim, then positions by
-    // row_number over (md5(salt || id || ':' || epoch), id, epoch) —
-    // the epoch-aware twin of the q_shuffle_order idiom
-    "q_shuffle_epochs" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.0
-        |                     WHEN 'src2' THEN 0.25 ELSE 0.0 END AS rate,
-        |         CAST('0x' || substr(md5('rep' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |           / 1152921504606846976.0 AS u
-        |  FROM documents
-        |), nn AS (
-        |  SELECT doc_id,
-        |         CAST(floor(rate) AS BIGINT)
-        |           + CASE WHEN u < rate - floor(rate) THEN 1 ELSE 0 END AS n
-        |  FROM d
-        |), r AS (
-        |  SELECT doc_id, unnest(range(0, n)) AS epoch FROM nn WHERE n > 0
-        |)
-        |SELECT doc_id, epoch,
-        |       row_number() OVER (
-        |         ORDER BY substr(md5('se' || CAST(doc_id AS VARCHAR) || ':'
-        |                          || CAST(epoch AS VARCHAR)), 1, 15),
-        |                  doc_id, epoch) - 1 AS pos
-        |FROM r ORDER BY pos""".stripMargin,
-
-    // targets = exact integer sqrt of the per-source token mass
-    // (floor(sqrt) corrected one step either side — exact BIGINT on both
-    // engines), then the q_mixture_sample rate/filter idiom verbatim
-    "q_mixture_temp" ->
-      """WITH t0 AS (
-        |  SELECT source, CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS tk
-        |  FROM documents GROUP BY source
-        |), t AS (
-        |  SELECT * FROM t0 WHERE tk > 0
-        |), iq AS (
-        |  SELECT source, tk,
-        |         s0 - CASE WHEN s0 * s0 > tk THEN 1 ELSE 0 END
-        |            + CASE WHEN (s0 + 1) * (s0 + 1) <= tk THEN 1 ELSE 0 END AS w
-        |  FROM (SELECT source, tk,
-        |               CAST(floor(sqrt(CAST(tk AS DOUBLE))) AS BIGINT) AS s0 FROM t)
-        |), r AS (
-        |  SELECT source,
-        |         least(1.0, CAST(w AS DOUBLE)
-        |                      * (SELECT min(CAST(tk AS DOUBLE) / CAST(w AS DOUBLE)) FROM iq)
-        |                      / CAST(tk AS DOUBLE)) AS rate
-        |  FROM iq
-        |)
-        |SELECT doc_id, source FROM documents d JOIN r USING (source)
-        |WHERE CAST('0x' || substr(md5('tp' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |        / 1152921504606846976.0 < rate
-        |ORDER BY doc_id""".stripMargin,
-
-    // length buckets: floor(log2(tk)) = length(binary string) - 1 (exact
-    // integers, no float log); within-bucket numbering by (md5 hash, id)
-    "q_length_batches" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS tk,
-        |    substr(md5('lb' || CAST(doc_id AS VARCHAR)), 1, 15) AS hx
-        |  FROM documents
-        |), b AS (
-        |  SELECT doc_id, tk,
-        |    CAST(length(bin(tk)) - 1 AS INTEGER) AS bucket, hx
-        |  FROM t
-        |), r AS (
-        |  SELECT doc_id, tk, bucket,
-        |    CAST(row_number() OVER (
-        |      PARTITION BY bucket ORDER BY hx, doc_id) - 1 AS BIGINT) AS batch_pos
-        |  FROM b
-        |)
-        |SELECT doc_id, tk AS tokens, bucket, batch_pos,
-        |  CAST(batch_pos // 8 AS BIGINT) AS batch_id
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // token budget: per-source running token sum in (md5 hash, id)
-    // order; kept iff the tokens BEFORE the doc are under the budget
-    "q_mixture_token_budget" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS tk,
-        |    substr(md5('tb' || CAST(doc_id AS VARCHAR)), 1, 15) AS hx
-        |  FROM documents
-        |), w AS (
-        |  SELECT doc_id, source, tk,
-        |    sum(tk) OVER (PARTITION BY source ORDER BY hx, doc_id
-        |                  ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM t
-        |)
-        |SELECT doc_id, source, tk AS tokens,
-        |  CAST(cum - tk AS BIGINT) AS tokens_before
-        |FROM w WHERE cum - tk < 500
-        |ORDER BY doc_id""".stripMargin,
-
-    // α = 1/4: weight = isqrt(isqrt(tk)) — the exact-integer-sqrt idiom
-    // applied twice, then the rate/filter idiom verbatim (salt 'tq')
-    "q_mixture_temp_a25" ->
-      """WITH t0 AS (
-        |  SELECT source, CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS tk
-        |  FROM documents GROUP BY source
-        |), t AS (
-        |  SELECT * FROM t0 WHERE tk > 0
-        |), iq1 AS (
-        |  SELECT source, tk,
-        |         s0 - CASE WHEN s0 * s0 > tk THEN 1 ELSE 0 END
-        |            + CASE WHEN (s0 + 1) * (s0 + 1) <= tk THEN 1 ELSE 0 END AS w1
-        |  FROM (SELECT source, tk,
-        |               CAST(floor(sqrt(CAST(tk AS DOUBLE))) AS BIGINT) AS s0 FROM t)
-        |), iq AS (
-        |  SELECT source, tk,
-        |         s1 - CASE WHEN s1 * s1 > w1 THEN 1 ELSE 0 END
-        |            + CASE WHEN (s1 + 1) * (s1 + 1) <= w1 THEN 1 ELSE 0 END AS w
-        |  FROM (SELECT source, tk, w1,
-        |               CAST(floor(sqrt(CAST(w1 AS DOUBLE))) AS BIGINT) AS s1 FROM iq1)
-        |), r AS (
-        |  SELECT source,
-        |         least(1.0, CAST(w AS DOUBLE)
-        |                      * (SELECT min(CAST(tk AS DOUBLE) / CAST(w AS DOUBLE)) FROM iq)
-        |                      / CAST(tk AS DOUBLE)) AS rate
-        |  FROM iq
-        |)
-        |SELECT doc_id, source FROM documents d JOIN r USING (source)
-        |WHERE CAST('0x' || substr(md5('tq' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |        / 1152921504606846976.0 < rate
-        |ORDER BY doc_id""".stripMargin,
-
-    // rate(s) = tgt * factor * T / tokens(s) with T the exact BIGINT
-    // token total over targeted sources; same left-assoc op order as the
-    // Spark side, then the q_replicate replica/epoch idiom verbatim
-    "q_mixture_up" ->
-      """WITH t AS (
-        |  SELECT source, CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS tk
-        |  FROM documents GROUP BY source
-        |), w AS (
-        |  SELECT source, CAST(tgt AS DOUBLE) AS tgt
-        |  FROM (VALUES ('src0', 0.6), ('src1', 0.3), ('src2', 0.1)) AS v(source, tgt)
-        |), tw AS (
-        |  SELECT t.source, tk, tgt FROM t JOIN w USING (source)
-        |), r AS (
-        |  SELECT source,
-        |         tgt * 1.0 * CAST((SELECT CAST(sum(tk) AS BIGINT) FROM tw) AS DOUBLE)
-        |             / CAST(tk AS DOUBLE) AS rate
-        |  FROM tw
-        |), d AS (
-        |  SELECT doc_id, dd.source, rate,
-        |         CAST('0x' || substr(md5('mu' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |           / 1152921504606846976.0 AS u
-        |  FROM documents dd JOIN r USING (source)
-        |), nn AS (
-        |  SELECT doc_id, source,
-        |         CAST(floor(rate) AS BIGINT)
-        |           + CASE WHEN u < rate - floor(rate) THEN 1 ELSE 0 END AS n
-        |  FROM d
-        |)
-        |SELECT doc_id, source, unnest(range(0, n)) AS epoch
-        |FROM nn WHERE n > 0
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    "q_chunk_docs" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-        |), c AS (
-        |  SELECT doc_id, toks, len(toks) AS n FROM w
-        |), e AS (
-        |  SELECT doc_id, toks,
-        |         unnest(range(0, CASE WHEN n > 32
-        |                              THEN (n - 32 + 24 - 1) // 24
-        |                              ELSE 0 END + 1)) AS chunk_id
-        |  FROM c
-        |)
-        |SELECT doc_id, chunk_id,
-        |       CAST(len(toks[chunk_id * 24 + 1 : chunk_id * 24 + 32]) AS BIGINT) AS n_chunk_tokens,
-        |       array_to_string(toks[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q_sim_topk" -> {
-      val cos =
-        """round(
-          |  list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE)))
-          |  / (sqrt(list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(va[i] AS DOUBLE))))
-          |     * sqrt(list_sum(list_transform(range(1, len(vb)+1), i -> CAST(vb[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE))))), 6)""".stripMargin
-      s"""WITH q AS (
-         |  SELECT vec_id AS query_id, embedding AS va FROM embeddings WHERE vec_id < 10
-         |), c AS (
-         |  SELECT vec_id AS neighbor_id, embedding AS vb FROM embeddings
-         |), s AS (
-         |  SELECT query_id, neighbor_id, $cos AS sim
-         |  FROM q, c WHERE neighbor_id != query_id
-         |), r AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM s
-         |)
-         |SELECT query_id, neighbor_id, rank, sim FROM r WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
-    },
-
-    // the sign matrix is DERIVED in SQL from md5 (same "rp:j:d" tokens,
-    // 0-based d) rather than inlined — the derivation itself is checked;
-    // coordinates are exact BIGINT sums of ±quantized components
-    "q_embed_rp" -> {
-      val cols = (0 until 16)
-        .map(j => s"  max(CASE WHEN j = $j THEN v END) AS rp_${"%02d".format(j)}")
-        .mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT vec_id, unnest(range(1, 65)) AS d,
-         |         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS q
-         |  FROM embeddings
-         |), sgn AS (
-         |  SELECT j, d,
-         |         CASE WHEN ('0x' || substr(md5('rp:' || j || ':' || (d - 1)), 1, 15))::BIGINT % 2 = 0
-         |              THEN 1 ELSE -1 END AS s
-         |  FROM (SELECT unnest(range(0, 16)) AS j), (SELECT unnest(range(1, 65)) AS d)
-         |), p AS (
-         |  SELECT vec_id, j, CAST(sum(s * q) AS BIGINT) AS v
-         |  FROM e JOIN sgn USING (d)
-         |  GROUP BY vec_id, j
-         |)
-         |SELECT vec_id,
-         |$cols
-         |FROM p GROUP BY vec_id ORDER BY vec_id""".stripMargin
-    },
-
-    "q_embed_pca_proj" -> pcaProjOracle,
-
-    // quantize → exact HUGEINT sums → the SAME double finisher formula as
-    // CovStats.cov (term-for-term: products, /n, /(n-1), /quant²), so the
-    // 2080 doubles agree bit-for-bit with the engine's exact partials
-    "q_embed_pca_cov" ->
-      """WITH e AS (
-        |  SELECT vec_id,
-        |         unnest(range(1, 65)) AS i,
-        |         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS q
-        |  FROM embeddings
-        |), n AS (
-        |  SELECT count(*) AS n FROM embeddings
-        |), s AS (
-        |  SELECT i, sum(q) AS si FROM e GROUP BY i
-        |), p AS (
-        |  SELECT a.i AS i, b.i AS j, sum(a.q * b.q) AS pij
-        |  FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |  GROUP BY 1, 2
-        |)
-        |SELECT p.i, p.j,
-        |  (CAST(pij AS DOUBLE) - CAST(sa.si AS DOUBLE) * CAST(sb.si AS DOUBLE) / CAST(n.n AS DOUBLE))
-        |    / CAST(n.n - 1 AS DOUBLE) / (1000000.0 * 1000000.0) AS cov
-        |FROM p
-        |JOIN s sa ON sa.i = p.i
-        |JOIN s sb ON sb.i = p.j
-        |CROSS JOIN n
-        |ORDER BY p.i, p.j""".stripMargin,
-
-    "q_embed_dup" -> {
-      val cos =
-        """round(
-          |  list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE)))
-          |  / (sqrt(list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(va[i] AS DOUBLE))))
-          |     * sqrt(list_sum(list_transform(range(1, len(vb)+1), i -> CAST(vb[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE))))), 6)""".stripMargin
-      s"""WITH p AS (
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |         a.embedding AS va, b.embedding AS vb
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.label = b.label AND a.vec_id < b.vec_id
-         |)
-         |SELECT id_a, id_b, $cos AS sim
-         |FROM p
-         |WHERE $cos >= 0.3
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "q_ann_lsh" -> {
-      val cos =
-        """round(
-          |  list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE)))
-          |  / (sqrt(list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(va[i] AS DOUBLE))))
-          |     * sqrt(list_sum(list_transform(range(1, len(vb)+1), i -> CAST(vb[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE))))), 6)""".stripMargin
-      val w = graft.pipeline.Similarity.planeWeights(8, 64)
-      def wLit(p: Int) =
-        w(p).map(x => if (x > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      val bucket = (0 until 8).map { p =>
-        s"""(CASE WHEN list_sum(list_transform(range(1, len(v)+1),
-           |  i -> CAST(v[i] AS DOUBLE) * (${wLit(p)})[i])) > 0
-           |  THEN ${1 << p} ELSE 0 END)""".stripMargin
-      }.mkString(" + ")
-      val probes = ("home" +: (0 until 8).map(p => s"xor(home, ${1 << p})"))
-        .mkString("[", ", ", "]")
-      s"""WITH b AS (
-         |  SELECT vec_id, embedding AS v, $bucket AS home
-         |  FROM embeddings
-         |), corpus AS (
-         |  SELECT vec_id AS neighbor_id, v AS vb, home AS cb FROM b
-         |), q AS (
-         |  SELECT vec_id AS query_id, v AS va, unnest($probes) AS bkt
-         |  FROM b WHERE vec_id < 10
-         |), s AS (
-         |  SELECT query_id, neighbor_id, $cos AS sim
-         |  FROM q JOIN corpus ON q.bkt = corpus.cb
-         |  WHERE neighbor_id != query_id
-         |), r AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM s
-         |)
-         |SELECT query_id, neighbor_id, rank, sim FROM r WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
-    },
-
-    "q_cluster_assign" -> clusterAssignOracle,
-
-    "q_ann_ivf" -> ivfOracle,
-
-    "q_ann_ivf_index" -> ivfOracle,
-
-    "q_pq_encode" -> pqEncodeOracle,
-
-    "q_ann_pq" -> annPqOracle,
-
-    "q_semantic_dedup" -> semanticDedupOracle,
-
-    "q_embed_dup_lsh" -> {
-      val cos =
-        """round(
-          |  list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE)))
-          |  / (sqrt(list_sum(list_transform(range(1, len(va)+1), i -> CAST(va[i] AS DOUBLE) * CAST(va[i] AS DOUBLE))))
-          |     * sqrt(list_sum(list_transform(range(1, len(vb)+1), i -> CAST(vb[i] AS DOUBLE) * CAST(vb[i] AS DOUBLE))))), 6)""".stripMargin
-      val w = graft.pipeline.Similarity.planeWeights(8, 64)
-      def wLit(p: Int) =
-        w(p).map(x => if (x > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      val bucket = (0 until 8).map { p =>
-        s"""(CASE WHEN list_sum(list_transform(range(1, len(v)+1),
-           |  i -> CAST(v[i] AS DOUBLE) * (${wLit(p)})[i])) > 0
-           |  THEN ${1 << p} ELSE 0 END)""".stripMargin
-      }.mkString(" + ")
-      s"""WITH b AS (
-         |  SELECT vec_id AS id, embedding AS v, $bucket AS home
-         |  FROM embeddings
-         |), p AS (
-         |  SELECT id, v, home, unnest([home, xor(home, 1), xor(home, 2)]) AS bkt
-         |  FROM b
-         |), c AS (
-         |  SELECT least(a.id, h.id) AS id_a, greatest(a.id, h.id) AS id_b,
-         |         a.v AS va, h.v AS vb
-         |  FROM p a JOIN b h ON a.bkt = h.home
-         |  WHERE h.home < a.home OR (a.home = h.home AND a.id < h.id)
-         |)
-         |SELECT id_a, id_b, $cos AS sim
-         |FROM c
-         |WHERE $cos >= 0.3
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "q_rollup_merge" ->
-      s"""WITH r AS (
-         |  SELECT stream_id, nntsclabel,
-         |         "timestamp" - ("timestamp" % 3600) AS binstart,
-         |         count(value) AS cnt,
-         |         sum(CAST(value AS DECIMAL(18,6))) AS s1,
-         |         sum(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))) AS s2,
-         |         min(value) AS mn, max(value) AS mx, max("timestamp") AS ts
-         |  FROM ($OracleEvents)
-         |  GROUP BY 1, 2, 3
-         |), v AS (
-         |  SELECT *,
-         |         CASE WHEN cnt >= 2 THEN
-         |           (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / cnt) / (cnt - 1)
-         |         END AS var
-         |  FROM r WHERE binstart BETWEEN $Start AND ${Stop - 1}
-         |)
-         |SELECT nntsclabel,
-         |  CAST(sum(s1) AS DOUBLE) / sum(cnt) AS value_avg,
-         |  CAST(sum(s1) AS DOUBLE) AS value_sum,
-         |  min(mn) AS value_min, max(mx) AS value_max,
-         |  CAST(sum(cnt) AS BIGINT) AS value_count,
-         |  CASE WHEN sum(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) > 0 THEN
-         |    round(sqrt(sum(CASE WHEN cnt >= 2 THEN var * cnt ELSE 0.0 END)
-         |               / sum(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END)), 6)
-         |  END AS value_stddev,
-         |  max(ts) AS "timestamp"
-         |FROM v GROUP BY 1 ORDER BY nntsclabel""".stripMargin,
-
-    "q_freq" ->
-      s"""WITH agg AS (
-         |  SELECT nntsclabel, "timestamp" - ("timestamp" % 600) AS binstart,
-         |         max("timestamp") AS ts
-         |  FROM ($oracleEventsWindow) GROUP BY 1, 2
-         |), d0 AS (
-         |  SELECT nntsclabel,
-         |         ts - lag(ts) OVER (PARTITION BY nntsclabel ORDER BY ts) AS tsdiff,
-         |         binstart - lag(binstart) OVER (PARTITION BY nntsclabel ORDER BY ts) AS bindiff,
-         |         ts
-         |  FROM agg
-         |), d AS (
-         |  SELECT * FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY nntsclabel ORDER BY ts) AS rn
-         |    FROM d0 WHERE tsdiff IS NOT NULL)
-         |  WHERE rn <= 200
-         |), stats AS (
-         |  SELECT nntsclabel, count(*) AS total,
-         |         sum(CASE WHEN bindiff = 600 THEN 1 ELSE 0 END) AS perfect,
-         |         CAST(sum(tsdiff) AS DOUBLE) / count(*) AS mean
-         |  FROM d GROUP BY 1
-         |), byd AS (
-         |  SELECT nntsclabel, tsdiff, count(*) AS cnt FROM d GROUP BY 1, 2
-         |), strong AS (
-         |  SELECT nntsclabel, tsdiff AS strongmode FROM (
-         |    SELECT b.nntsclabel, b.tsdiff,
-         |           row_number() OVER (PARTITION BY b.nntsclabel
-         |                              ORDER BY b.cnt DESC, b.tsdiff) AS rn
-         |    FROM byd b JOIN stats s ON b.nntsclabel = s.nntsclabel
-         |    WHERE b.cnt * 2 >= s.total)
-         |  WHERE rn = 1
-         |), prom AS (
-         |  SELECT b.nntsclabel, min(b.tsdiff) AS prominent
-         |  FROM byd b JOIN stats s ON b.nntsclabel = s.nntsclabel
-         |  WHERE b.cnt * 5 >= s.total GROUP BY 1
-         |), lbls AS (SELECT DISTINCT nntsclabel FROM agg)
-         |SELECT l.nntsclabel,
-         |  CAST(CASE
-         |    WHEN s.total IS NULL OR s.total = 0 THEN 300
-         |    WHEN CAST(s.perfect AS DOUBLE) / s.total > 0.9 THEN 600
-         |    WHEN st.strongmode IS NOT NULL THEN st.strongmode
-         |    WHEN p.prominent IS NOT NULL THEN p.prominent
-         |    WHEN s.mean <= 10 THEN 10
-         |    WHEN s.mean <= 60 THEN floor((floor(s.mean) + 5) / 10) * 10
-         |    WHEN s.mean <= 300 THEN floor((floor(s.mean) + 30) / 60) * 60
-         |    WHEN s.mean <= 3600 THEN floor((floor(s.mean) + 150) / 300) * 300
-         |    ELSE floor((floor(s.mean) + 1800) / 3600) * 3600
-         |  END AS BIGINT) AS freq
-         |FROM lbls l
-         |LEFT JOIN stats s ON l.nntsclabel = s.nntsclabel
-         |LEFT JOIN strong st ON l.nntsclabel = st.nntsclabel
-         |LEFT JOIN prom p ON l.nntsclabel = p.nntsclabel
-         |ORDER BY l.nntsclabel""".stripMargin,
-
-    "q_missing_labels" ->
-      s"""WITH all_l AS (
-         |  SELECT unnest(['g0', 'g1', 'g2', 'ghost']) AS nntsclabel
-         |), obs AS (
-         |  SELECT DISTINCT nntsclabel FROM ($OracleEvents)
-         |  WHERE "timestamp" BETWEEN $Start AND ${Start + 86400}
-         |)
-         |SELECT nntsclabel FROM all_l
-         |WHERE nntsclabel NOT IN (SELECT nntsclabel FROM obs)
-         |ORDER BY nntsclabel""".stripMargin,
-
-    "q_ingest_median" ->
-      s"""WITH d AS (
-         |  SELECT stream_id, "timestamp" - ("timestamp" % 21600) AS binstart,
-         |         CAST(trunc(value) AS INTEGER) AS v, event_type
-         |  FROM ($oracleEventsWindow)
-         |), g AS (
-         |  SELECT stream_id, binstart, list(v ORDER BY v) AS l,
-         |         count(v) AS results,
-         |         CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS loss
-         |  FROM d GROUP BY 1, 2
-         |)
-         |SELECT stream_id, binstart,
-         |  CAST(CASE WHEN results % 2 = 1 THEN l[CAST(results // 2 AS INTEGER) + 1]
-         |       ELSE (l[CAST(results // 2 AS INTEGER)] + l[CAST(results // 2 AS INTEGER) + 1]) // 2
-         |  END AS INTEGER) AS median,
-         |  results, loss,
-         |  CAST(loss AS DOUBLE) / results AS lossrate
-         |FROM g ORDER BY stream_id, binstart""".stripMargin,
-
-    "q_scalar_funcs" ->
-      s"""SELECT stream_id, "timestamp", event_id,
-         |  CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k,
-         |  value * 1000 AS value_ms,
-         |  CASE WHEN CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL
-         |            AND CAST(json_extract_string(props, '$$.k') AS BIGINT) != 0
-         |       THEN value / CAST(json_extract_string(props, '$$.k') AS BIGINT)
-         |  END AS rate
-         |FROM ($oracleEventsWindow)
-         |ORDER BY event_id""".stripMargin,
-
-    "q3_shipping" ->
-      """SELECT l_orderkey,
-        |  CAST(floor(epoch(o_orderdate)) AS BIGINT) AS od_epoch,
-        |  o_orderpriority,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
-        |                 * (1 - CAST(l_discount AS DECIMAL(18,6)))), 2) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q18_big_orders" ->
-      """SELECT c_name, c_custkey, o_orderkey,
-        |  CAST(floor(epoch(o_orderdate)) AS BIGINT) AS od_epoch,
-        |  CAST(round(CAST(o_totalprice AS DECIMAL(18,6)), 2) AS DOUBLE) AS o_totalprice,
-        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_qty
-        |FROM customer, orders, lineitem
-        |WHERE o_orderkey IN (
-        |    SELECT l_orderkey FROM lineitem
-        |    GROUP BY l_orderkey
-        |    HAVING CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) > 250)
-        |  AND c_custkey = o_custkey AND o_orderkey = l_orderkey
-        |GROUP BY 1, 2, 3, 4, 5
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 100""".stripMargin,
-
-    "q_dims_join" ->
-      """SELECT p_brand, s_name, count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_price
-        |FROM lineitem
-        |LEFT JOIN part ON l_partkey = p_partkey
-        |LEFT JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2
-        |ORDER BY p_brand, s_name""".stripMargin,
-
-    // P6 resize: output payload = "P6\n4 3\n255\n" + chars sampled at
-    // source (row, col) = ((ty*h)//3, (tx*w)//4) — rebuilt as a STRING
-    // (ASCII raster) and md5'd; rsum_r re-derives channel-0 sums from
-    // the same sampled positions (the decode-of-resize composition)
-    "q_multimodal_resize" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px,
-        |    (doc_id % 3 = 2 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |), r AS (
-        |  SELECT media_id, bad, px,
-        |    CASE WHEN bad THEN NULL ELSE
-        |      flatten(list_transform(range(0, CAST(3 AS BIGINT)), ty ->
-        |        flatten(list_transform(range(0, CAST(4 AS BIGINT)), tx ->
-        |          list_transform([0, 1, 2], ch ->
-        |            3 * (CAST((ty * h) // 3 AS INTEGER) * w
-        |                 + CAST((tx * w) // 4 AS INTEGER)) + ch + 1)))))
-        |    END AS pos
-        |  FROM d
-        |), o AS (
-        |  SELECT media_id, bad,
-        |    CASE WHEN bad THEN NULL ELSE
-        |      'P6' || chr(10) || '4 3' || chr(10) || '255' || chr(10) ||
-        |      list_aggregate(
-        |        list_transform(pos, p -> substr(px, CAST(p AS INTEGER), 1)),
-        |        'string_agg', '')
-        |    END AS resized
-        |  FROM r
-        |)
-        |SELECT media_id,
-        |  md5(resized) AS resized_md5,
-        |  CASE WHEN bad THEN NULL ELSE 4 END AS rw,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(12 AS BIGINT)),
-        |    i -> ascii(substr(resized, CAST(11 + 3 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS rsum_r
-        |FROM o ORDER BY media_id""".stripMargin,
-
-    // y4m frame-sample: 3 C444 frames, step 2 -> frames {0, 2} sampled;
-    // frame k's luma = hex positions fb*k+1 .. fb*k+w*h of the repeated
-    // md5 (fb = 3*w*h)
-    "q_multimodal_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 3 + 1 AS INTEGER) AS w,
-        |    CAST(n_chars % 3 + 1 AS INTEGER) AS h,
-        |    repeat(md5(text), 5) AS hx,
-        |    (doc_id % 3 = 2 OR doc_id % 5 = 4) AS bad
-        |  FROM documents
-        |), s AS (
-        |  SELECT media_id, w, h, bad,
-        |    CASE WHEN bad THEN NULL ELSE
-        |      flatten(list_transform([0, 2], k ->
-        |        list_transform(range(0, CAST(w * h AS BIGINT)), i ->
-        |          ascii(substr(hx, CAST(3 * w * h * k + i + 1 AS INTEGER), 1)))))
-        |    END AS y
-        |  FROM d
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(3 AS BIGINT) END AS n_frames,
-        |  CASE WHEN bad THEN NULL ELSE CAST(2 AS BIGINT) END AS n_sampled,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(y) AS BIGINT) END AS y_sum,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_max(y) AS INTEGER) END AS y_peak
-        |FROM s ORDER BY media_id""".stripMargin,
-
-    // lossless WebP: the oracle recomputes the exact ARGB pixels from
-    // each arm's derivation (the transforms are invisible — lossless):
-    // 0/1 ARGB quads from the hex chars, 2 the shared palette formula
-    // TIFF: positional recompute per photometric — RGB triplets, gray,
-    // WHITE-IS-ZERO inverted gray, or the palette formula (colormap
-    // entries are paletteEntry×257, so the decoder's >>8 lands exactly
-    // on (j*7+13)%256 / (j*11+5)%256 / (j*3+77)%256); byte order,
-    // compression, predictor and strip split are byte-level choices
-    // the pixel oracle is invariant to
-    "q_multimodal_tiff" -> {
-      def px1(idx: String): String =
-        s"ascii(substr(px, CAST($idx + 1 AS INTEGER), 1))"
-      def chan(c: Int): String = {
-        val mul = Seq(7, 11, 3)(c); val add = Seq(13, 5, 77)(c)
-        s"""CASE WHEN p = 2 THEN ${px1(s"3*pi + $c")}
-           |      WHEN p = 1 THEN ${px1("pi")}
-           |      WHEN p = 0 THEN 255 - ${px1("pi")}
-           |      ELSE (${px1("pi")} * $mul + $add) % 256 END""".stripMargin
-      }
-      def sumCol(c: Int, name: String): String =
-        s"""CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-           |    range(0, CAST(w * h AS BIGINT)), pi -> ${chan(c)})) AS BIGINT)
-           |  END AS $name""".stripMargin
-      s"""WITH d AS (
-         |  SELECT doc_id AS media_id,
-         |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-         |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-         |    CAST((doc_id // 2) % 4 AS INTEGER) AS p,
-         |    substr(repeat(md5(text), 7), 1,
-         |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) *
-         |        (CASE WHEN (doc_id // 2) % 4 = 2 THEN 3 ELSE 1 END) AS INTEGER)) AS px,
-         |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-         |  FROM documents
-         |)
-         |SELECT media_id,
-         |  CASE WHEN bad THEN NULL ELSE w END AS width,
-         |  CASE WHEN bad THEN NULL ELSE h END AS height,
-         |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-         |  ${sumCol(0, "sum_r")},
-         |  ${sumCol(1, "sum_g")},
-         |  ${sumCol(2, "sum_b")},
-         |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-         |    list_transform(
-         |      flatten(list_transform([0, 1], ty ->
-         |        list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-         |      pi -> printf('%02x%02x%02x', ${chan(0)}, ${chan(1)}, ${chan(2)})),
-         |    'string_agg', '')
-         |  END AS thumb_hex
-         |FROM d ORDER BY media_id""".stripMargin
-    },
-
-    // over idx%4, 3 row-constant, 4 two-tone by parity, 5/6 RGB triples
-    "q_multimodal_webp" -> {
-      def ch(name: String, palM: Int, palA: Int, o3: Int, o4: Int): String =
-        s"""CASE arm
-           |        WHEN 2 THEN ((ascii(substr(hx, CAST(i+1 AS INTEGER), 1)) % 4) * $palM + $palA) % 256
-           |        WHEN 3 THEN ascii(substr(hx, CAST(3*(i//w)+$o3 AS INTEGER), 1))
-           |        WHEN 4 THEN ascii(substr(hx, CAST(3*(i%2)+$o3 AS INTEGER), 1))
-           |        WHEN 5 THEN ascii(substr(hx, CAST(3*i+$o3 AS INTEGER), 1))
-           |        WHEN 6 THEN ascii(substr(hx, CAST(3*i+$o3 AS INTEGER), 1))
-           |        ELSE ascii(substr(hx, CAST(4*i+$o4 AS INTEGER), 1)) END""".stripMargin
-      val rE = ch("r", 7, 13, 1, 2)
-      val gE = ch("g", 11, 5, 2, 3)
-      val bE = ch("b", 3, 77, 3, 4)
-      s"""WITH d AS (
-         |  SELECT doc_id AS media_id,
-         |    CAST(doc_id % 9 + 4 AS INTEGER) AS w,
-         |    CAST(n_chars % 7 + 4 AS INTEGER) AS h,
-         |    CAST(doc_id % 7 AS INTEGER) AS arm,
-         |    repeat(md5(text), 16) AS hx,
-         |    (doc_id % 11 = 5 OR doc_id % 13 = 3) AS bad
-         |  FROM documents
-         |), px AS (
-         |  SELECT media_id, w, h, arm, bad,
-         |    CASE WHEN bad THEN NULL ELSE
-         |      list_transform(range(0, CAST(w*h AS BIGINT)), i -> $rE) END AS rs,
-         |    CASE WHEN bad THEN NULL ELSE
-         |      list_transform(range(0, CAST(w*h AS BIGINT)), i -> $gE) END AS gs,
-         |    CASE WHEN bad THEN NULL ELSE
-         |      list_transform(range(0, CAST(w*h AS BIGINT)), i -> $bE) END AS bs,
-         |    CASE WHEN bad THEN NULL
-         |      WHEN arm <= 1 THEN list_transform(range(0, CAST(w*h AS BIGINT)),
-         |        i -> ascii(substr(hx, CAST(4*i+1 AS INTEGER), 1)))
-         |      ELSE list_transform(range(0, CAST(w*h AS BIGINT)), i -> 255) END AS as_
-         |  FROM d
-         |)
-         |SELECT media_id,
-         |  CASE WHEN bad THEN NULL ELSE w END AS width,
-         |  CASE WHEN bad THEN NULL ELSE h END AS height,
-         |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-         |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(rs) AS BIGINT) END AS sum_r,
-         |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(gs) AS BIGINT) END AS sum_g,
-         |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(bs) AS BIGINT) END AS sum_b,
-         |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(as_) AS BIGINT) END AS sum_a,
-         |  CASE WHEN bad THEN NULL ELSE list_aggregate(list_transform(
-         |    flatten(list_transform([0, 1], ty ->
-         |      list_transform([0, 1], tx -> ((ty*h)//2)*w + (tx*w)//2))),
-         |    p -> printf('%02x%02x%02x',
-         |      rs[CAST(p+1 AS INTEGER)], gs[CAST(p+1 AS INTEGER)],
-         |      bs[CAST(p+1 AS INTEGER)])), 'string_agg', '') END AS thumb_hex
-         |FROM px ORDER BY media_id""".stripMargin
-    },
-
-    // video frame signatures: the oracle recomputes each sampled frame's
-    // 9x7 luma dHash positionally from the clip derivation (sampled set
-    // {0, 2} at step 2; frame k's luma = the first w*h chars of its
-    // source hex at offset k*2*fb) — per-cell sums via the floor-cell
-    // membership trick, cross-multiplied means, 56-bit packing (BIGINT
-    // exact). Bad docs surface as one null row per video via LEFT JOIN
-    "q_video_sigs" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 4 + 9 AS INTEGER) AS w,
-        |    CAST(n_chars % 3 + 8 AS INTEGER) AS h,
-        |    repeat(md5(text), 34) AS hxA,
-        |    repeat(md5(text || 'B'), 34) AS hxB,
-        |    doc_id % 5 = 4 AS bad
-        |  FROM documents
-        |), vids AS (
-        |  SELECT doc_id * 2 + v AS media_id, w, h, v, hxA, hxB, bad
-        |  FROM d, (SELECT unnest([0, 1]) AS v)
-        |), frames AS (
-        |  SELECT media_id, w, h, k,
-        |    CASE WHEN k = 0 OR v = 0 THEN hxA ELSE hxB END AS src,
-        |    k * 2 * (w * h * 3) AS off
-        |  FROM vids, (SELECT unnest([0, 1]) AS k)
-        |  WHERE NOT bad
-        |), pix AS (
-        |  SELECT media_id, k, w, h, i % w AS x, i // w AS y,
-        |    ascii(substr(src, CAST(off + i + 1 AS INTEGER), 1)) AS g
-        |  FROM (SELECT media_id, k, w, h, src, off,
-        |          unnest(range(0, CAST(w*h AS BIGINT))) AS i
-        |        FROM frames)
-        |), cells AS (
-        |  SELECT media_id, k,
-        |    (len(list_filter(range(7), c -> (c*h)//7 <= y)) - 1) * 9
-        |      + (len(list_filter(range(9), c -> (c*w)//9 <= x)) - 1) AS cell,
-        |    CAST(sum(g) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS c
-        |  FROM pix GROUP BY 1, 2, 3
-        |), arrs AS (
-        |  SELECT media_id, k, list(s ORDER BY cell) AS ss, list(c ORDER BY cell) AS cc
-        |  FROM cells GROUP BY media_id, k
-        |), sigs AS (
-        |  SELECT media_id, k,
-        |    CAST(list_sum(list_transform(range(0, 56), i ->
-        |      CASE WHEN ss[CAST((i//8)*9 + (i%8) + 2 AS INTEGER)]
-        |                 * cc[CAST((i//8)*9 + (i%8) + 1 AS INTEGER)]
-        |              > ss[CAST((i//8)*9 + (i%8) + 1 AS INTEGER)]
-        |                 * cc[CAST((i//8)*9 + (i%8) + 2 AS INTEGER)]
-        |           THEN (CAST(1 AS BIGINT) << CAST(i AS INTEGER))
-        |           ELSE 0 END)) AS BIGINT) AS sig
-        |  FROM arrs
-        |)
-        |SELECT v.media_id,
-        |  CASE WHEN v.bad THEN NULL ELSE 'y4m' END AS format,
-        |  CASE WHEN v.bad THEN NULL ELSE v.w END AS width,
-        |  CASE WHEN v.bad THEN NULL ELSE v.h END AS height,
-        |  CASE WHEN v.bad THEN NULL ELSE CAST(3 AS BIGINT) END AS n_frames,
-        |  CASE WHEN v.bad THEN NULL ELSE CAST(2 AS BIGINT) END AS n_sampled,
-        |  CAST(s.k AS BIGINT) AS k, s.sig AS sig
-        |FROM vids v LEFT JOIN sigs s ON v.media_id = s.media_id
-        |ORDER BY v.media_id, s.k""".stripMargin,
-
-    // video near-dup pairs: the oracle re-mines on the production 9x8
-    // grid — per-frame 64 bits compared as bit LISTS (no 64-bit pack
-    // needed), distinct per video, equi-joined across videos, shared
-    // counts grouped — the inverted-list shape the engine runs
-    "q_video_sig_dup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 4 + 9 AS INTEGER) AS w,
-        |    CAST(n_chars % 3 + 8 AS INTEGER) AS h,
-        |    repeat(md5(text), 34) AS hxA,
-        |    repeat(md5(text || 'B'), 34) AS hxB,
-        |    doc_id % 5 = 4 AS bad
-        |  FROM documents
-        |), vids AS (
-        |  SELECT doc_id * 2 + v AS media_id, w, h, v, hxA, hxB
-        |  FROM d, (SELECT unnest([0, 1]) AS v)
-        |  WHERE NOT bad
-        |), frames AS (
-        |  SELECT media_id, w, h, k,
-        |    CASE WHEN k = 0 OR v = 0 THEN hxA ELSE hxB END AS src,
-        |    k * 2 * (w * h * 3) AS off
-        |  FROM vids, (SELECT unnest([0, 1]) AS k)
-        |), pix AS (
-        |  SELECT media_id, k, w, h, i % w AS x, i // w AS y,
-        |    ascii(substr(src, CAST(off + i + 1 AS INTEGER), 1)) AS g
-        |  FROM (SELECT media_id, k, w, h, src, off,
-        |          unnest(range(0, CAST(w*h AS BIGINT))) AS i
-        |        FROM frames)
-        |), cells AS (
-        |  SELECT media_id, k,
-        |    (len(list_filter(range(8), c -> (c*h)//8 <= y)) - 1) * 9
-        |      + (len(list_filter(range(9), c -> (c*w)//9 <= x)) - 1) AS cell,
-        |    CAST(sum(g) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS c
-        |  FROM pix GROUP BY 1, 2, 3
-        |), arrs AS (
-        |  SELECT media_id, k, list(s ORDER BY cell) AS ss, list(c ORDER BY cell) AS cc
-        |  FROM cells GROUP BY media_id, k
-        |), sigset AS (
-        |  SELECT DISTINCT media_id,
-        |    CAST(list_transform(range(0, 64), i ->
-        |      CASE WHEN ss[CAST((i//8)*9 + (i%8) + 2 AS INTEGER)]
-        |                 * cc[CAST((i//8)*9 + (i%8) + 1 AS INTEGER)]
-        |              > ss[CAST((i//8)*9 + (i%8) + 1 AS INTEGER)]
-        |                 * cc[CAST((i//8)*9 + (i%8) + 2 AS INTEGER)]
-        |           THEN 1 ELSE 0 END) AS VARCHAR) AS sig
-        |  FROM arrs
-        |)
-        |SELECT id_a, id_b, CAST(count(*) AS INTEGER) AS n_shared
-        |FROM (SELECT a.media_id AS id_a, b2.media_id AS id_b
-        |      FROM sigset a JOIN sigset b2
-        |        ON a.sig = b2.sig AND a.media_id < b2.media_id)
-        |GROUP BY id_a, id_b
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // PCM decode: data chunk = the document's UTF-8 bytes (ASCII corpus),
-    // so samples recompute from text positions — channel c of frame f at
-    // byte offset f*bpf + c*(bits/8); bits cycles 16/8/24 on (doc_id//2)%3
-    // decoupled from the doc_id%2 channel selector (the FLAC-gate
-    // convention; 24-bit closes the WAV/FLAC depth asymmetry, r18 #3).
-    // Trailing partial frame ignored; zero frames still decode (sums 0)
-    "q_multimodal_pcm" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id, text,
-        |    CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |    CAST(CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |              WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END AS INTEGER) AS bits,
-        |    (doc_id % 2 + 1) *
-        |      (CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |            WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END) // 8 AS bpf,
-        |    doc_id % 3 = 2 AS bad
-        |  FROM documents
-        |), d2 AS (
-        |  SELECT media_id, text, ch, bits, bpf,
-        |    CAST(length(text) // bpf AS BIGINT) AS nf, bad
-        |  FROM d
-        |), s AS (
-        |  SELECT media_id, ch, bits, nf, bad,
-        |    CASE WHEN bad THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        CASE bits
-        |          WHEN 8 THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1)) - 128
-        |          WHEN 16 THEN CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) >= 32768
-        |            THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) - 65536
-        |            ELSE ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) END
-        |          ELSE CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) >= 8388608
-        |            THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) - 16777216
-        |            ELSE ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) END
-        |        END) END AS c0,
-        |    CASE WHEN bad OR ch = 1 THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        CASE bits
-        |          WHEN 8 THEN ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) - 128
-        |          WHEN 16 THEN CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) >= 32768
-        |            THEN ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) - 65536
-        |            ELSE ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) END
-        |          ELSE CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) >= 8388608
-        |            THEN ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) - 16777216
-        |            ELSE ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) END
-        |        END) END AS c1
-        |  FROM d2
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE ch END AS channels,
-        |  CASE WHEN bad THEN NULL ELSE bits END AS bits,
-        |  CASE WHEN bad THEN NULL ELSE nf END AS n_frames,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE coalesce(CAST(list_sum(c0) AS BIGINT), 0) END AS sum_c0,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE CAST(coalesce(list_max(list_transform(c0, v -> abs(v))), 0) AS INTEGER)
-        |  END AS peak_c0,
-        |  CASE WHEN bad OR ch = 1 THEN NULL
-        |       ELSE coalesce(CAST(list_sum(c1) AS BIGINT), 0) END AS sum_c1,
-        |  CASE WHEN bad OR ch = 1 THEN NULL
-        |       ELSE CAST(coalesce(list_max(list_transform(c1, v -> abs(v))), 0) AS INTEGER)
-        |  END AS peak_c1
-        |FROM s ORDER BY media_id""".stripMargin,
-
-    // dHash: the oracle recomputes the full hash positionally — per-cell
-    // gray sums over floor-bounded cell rectangles (per-FORMAT gray:
-    // RGB ascii triples for P6/PNG/BMP, the palette formula for GIF),
-    // cross-multiplied mean comparisons, row-major bit packing (built
-    // programmatically: 6 cells, 4 bits for the 3x2 gate grid). Flat
-    // DC-only JPEG rows are uniform, so their hash is literally 0.
-    "q_image_dhash" -> {
-      val grayGif =
-        """(ascii(substr(px1, CAST(i+1 AS INTEGER), 1)) * 7 + 13) % 256
-          |         + (ascii(substr(px1, CAST(i+1 AS INTEGER), 1)) * 11 + 5) % 256
-          |         + (ascii(substr(px1, CAST(i+1 AS INTEGER), 1)) * 3 + 77) % 256""".stripMargin
-      val grayRgb =
-        """ascii(substr(px3, CAST(3*i+1 AS INTEGER), 1))
-          |         + ascii(substr(px3, CAST(3*i+2 AS INTEGER), 1))
-          |         + ascii(substr(px3, CAST(3*i+3 AS INTEGER), 1))""".stripMargin
-      def cellSum(cx: Int, cy: Int) =
-        s"""coalesce(list_sum(list_transform(list_filter(
-           |      range(0, CAST(w*h AS BIGINT)),
-           |      i -> (i % w) >= ($cx * w) // 3 AND (i % w) < (${cx + 1} * w) // 3
-           |       AND (i // w) >= ($cy * h) // 2 AND (i // w) < (${cy + 1} * h) // 2),
-           |      i -> CASE WHEN fmt = 2 THEN $grayGif
-           |           ELSE $grayRgb END)), 0)""".stripMargin
-      def cellCnt(cx: Int, cy: Int) =
-        s"((${cx + 1}*w)//3 - ($cx*w)//3) * ((${cy + 1}*h)//2 - ($cy*h)//2)"
-      val cellCols = (for (cy <- 0 to 1; cx <- 0 to 2) yield
-        s"${cellSum(cx, cy)} AS s$cx$cy,\n    ${cellCnt(cx, cy)} AS c$cx$cy").mkString(",\n    ")
-      val bitTerms = (for (cy <- 0 to 1; cx <- 0 to 1) yield {
-        val bit = 1L << (cy * 2 + cx)
-        s"CASE WHEN s${cx + 1}$cy * c$cx$cy > s$cx$cy * c${cx + 1}$cy THEN $bit ELSE 0 END"
-      }).mkString(" + ")
-      s"""WITH d AS (
-         |  SELECT doc_id AS media_id,
-         |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-         |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-         |    CAST((doc_id // 6) % 7 AS INTEGER) AS fmt,
-         |    substr(repeat(md5(text), 7), 1,
-         |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px3,
-         |    substr(repeat(md5(text), 5), 1,
-         |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) AS INTEGER)) AS px1,
-         |    (doc_id % 11 = 5 OR doc_id % 7 = 3 OR doc_id % 6 + 2 < 3) AS bad
-         |  FROM documents
-         |), cells AS (
-         |  SELECT media_id, w, h, fmt, bad,
-         |    $cellCols
-         |  FROM d
-         |)
-         |SELECT media_id,
-         |  CASE WHEN bad THEN NULL ELSE
-         |    CASE fmt WHEN 0 THEN 'ppm' WHEN 1 THEN 'png' WHEN 2 THEN 'gif'
-         |             WHEN 3 THEN 'bmp' WHEN 4 THEN 'jpeg' WHEN 5 THEN 'webp'
-         |             ELSE 'tiff' END
-         |  END AS format,
-         |  CASE WHEN bad THEN NULL ELSE w END AS width,
-         |  CASE WHEN bad THEN NULL ELSE h END AS height,
-         |  CASE WHEN bad THEN NULL
-         |       WHEN fmt = 4 THEN 0
-         |       ELSE CAST($bitTerms AS BIGINT) END AS dhash
-         |FROM cells ORDER BY media_id""".stripMargin
-    },
-
-    // image near-dup pairs: the oracle RE-MINES from scratch — rebuilds
-    // both rasters per doc (base + one-char-bumped copy), computes every
-    // image's 64 dHash bits via per-cell gray sums grouped by the
-    // floor-cell mapping, derives the four 16-bit band keys from the
-    // bits, self-joins on (band, key), and applies the popcount filter
-    "q_image_dhash_dup" ->
-      """WITH docs2 AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 4 + 10 AS INTEGER) AS w,
-        |    CAST(n_chars % 3 + 9 AS INTEGER) AS h,
-        |    CAST((doc_id // 4) % 6 AS INTEGER) AS fmt,
-        |    CASE WHEN (doc_id // 4) % 6 = 2
-        |      THEN substr(repeat(md5(text), 5), 1,
-        |        CAST((doc_id % 4 + 10) * (n_chars % 3 + 9) AS INTEGER))
-        |      ELSE substr(repeat(md5(text), 14), 1,
-        |        CAST((doc_id % 4 + 10) * (n_chars % 3 + 9) * 3 AS INTEGER)) END AS px0,
-        |    CAST(doc_id % (CASE WHEN (doc_id // 4) % 6 = 2
-        |        THEN (doc_id % 4 + 10) * (n_chars % 3 + 9)
-        |        ELSE (doc_id % 4 + 10) * (n_chars % 3 + 9) * 3 END) AS INTEGER) AS p,
-        |    doc_id % 5 = 4 AS bad
-        |  FROM documents
-        |), imgs AS (
-        |  SELECT doc_id * 2 + v AS media_id, w, h, fmt,
-        |    CASE WHEN v = 0 THEN px0
-        |         ELSE substr(px0, 1, p) || chr(ascii(substr(px0, p + 1, 1)) + 1)
-        |              || substr(px0, p + 2) END AS px
-        |  FROM docs2, (SELECT unnest([0, 1]) AS v)
-        |  WHERE NOT bad
-        |), pix AS (
-        |  SELECT media_id, w, h, i % w AS x, i // w AS y,
-        |    CASE WHEN fmt = 2 THEN
-        |        (ascii(substr(px, CAST(i+1 AS INTEGER), 1)) * 7 + 13) % 256
-        |      + (ascii(substr(px, CAST(i+1 AS INTEGER), 1)) * 11 + 5) % 256
-        |      + (ascii(substr(px, CAST(i+1 AS INTEGER), 1)) * 3 + 77) % 256
-        |    ELSE ascii(substr(px, CAST(3*i+1 AS INTEGER), 1))
-        |      + ascii(substr(px, CAST(3*i+2 AS INTEGER), 1))
-        |      + ascii(substr(px, CAST(3*i+3 AS INTEGER), 1)) END AS g
-        |  FROM (SELECT media_id, w, h, fmt, px, unnest(range(0, CAST(w*h AS BIGINT))) AS i
-        |        FROM imgs)
-        |), cells AS (
-        |  SELECT media_id,
-        |    (len(list_filter(range(8), c -> (c*h)//8 <= y)) - 1) * 9
-        |      + (len(list_filter(range(9), c -> (c*w)//9 <= x)) - 1) AS cell,
-        |    CAST(sum(g) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS c
-        |  FROM pix GROUP BY 1, 2
-        |), arrs AS (
-        |  SELECT media_id,
-        |    list(s ORDER BY cell) AS ss, list(c ORDER BY cell) AS cc
-        |  FROM cells GROUP BY media_id
-        |), bits AS (
-        |  SELECT media_id,
-        |    list_transform(range(0, 64), i ->
-        |      CASE WHEN ss[CAST((i//8)*9 + (i%8) + 2 AS INTEGER)]
-        |                 * cc[CAST((i//8)*9 + (i%8) + 1 AS INTEGER)]
-        |              > ss[CAST((i//8)*9 + (i%8) + 1 AS INTEGER)]
-        |                 * cc[CAST((i//8)*9 + (i%8) + 2 AS INTEGER)]
-        |           THEN 1 ELSE 0 END) AS b
-        |  FROM arrs
-        |), bands AS (
-        |  SELECT media_id, k, b,
-        |    list_sum(list_transform(range(0, 16), j ->
-        |      b[CAST(16*k + j + 1 AS INTEGER)] * (1 << CAST(j AS INTEGER)))) AS key
-        |  FROM bits, (SELECT unnest(range(0, 4)) AS k)
-        |), cand AS (
-        |  SELECT DISTINCT a.media_id AS id_a, b2.media_id AS id_b,
-        |    a.b AS ba, b2.b AS bb
-        |  FROM bands a JOIN bands b2
-        |    ON a.k = b2.k AND a.key = b2.key AND a.media_id < b2.media_id
-        |)
-        |SELECT id_a, id_b, hamming FROM (
-        |  SELECT id_a, id_b,
-        |    CAST(list_sum(list_transform(range(0, 64), i ->
-        |      abs(ba[CAST(i+1 AS INTEGER)] - bb[CAST(i+1 AS INTEGER)]))) AS INTEGER)
-        |      AS hamming
-        |  FROM cand)
-        |WHERE hamming <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // CMYK/YCCK JPEG: flat DC-only payloads decode EXACTLY, so the
-    // oracle recomputes the transform-dependent RGB from the same
-    // md5-derived component values (Adobe-inverted c·k/255; YCCK via
-    // the JFIF equations with floor(x+0.5) rounding and 0..255 clamp;
-    // plain CMYK inverts first) — hash-exact despite the lossy container
-    "q_multimodal_cmyk" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 9 + 8 AS INTEGER) AS w,
-        |    CAST(n_chars % 7 + 8 AS INTEGER) AS h,
-        |    ascii(substr(md5(text), 1, 1)) AS c0,
-        |    ascii(substr(md5(text), 2, 1)) AS c1,
-        |    ascii(substr(md5(text), 3, 1)) AS c2,
-        |    ascii(substr(md5(text), 4, 1)) AS c3,
-        |    CAST(doc_id % 3 AS INTEGER) AS tf,
-        |    (doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |), conv AS (
-        |  SELECT media_id, w, h, bad,
-        |    CASE tf
-        |      WHEN 0 THEN (c0 * c3 + 127) // 255
-        |      WHEN 1 THEN (GREATEST(0, LEAST(255,
-        |        CAST(floor(c0 + 1.402 * (c2 - 128) + 0.5) AS INTEGER))) * c3 + 127) // 255
-        |      ELSE ((255 - c0) * (255 - c3) + 127) // 255 END AS r,
-        |    CASE tf
-        |      WHEN 0 THEN (c1 * c3 + 127) // 255
-        |      WHEN 1 THEN (GREATEST(0, LEAST(255,
-        |        CAST(floor(c0 - 0.344136 * (c1 - 128) - 0.714136 * (c2 - 128) + 0.5)
-        |          AS INTEGER))) * c3 + 127) // 255
-        |      ELSE ((255 - c1) * (255 - c3) + 127) // 255 END AS g,
-        |    CASE tf
-        |      WHEN 0 THEN (c2 * c3 + 127) // 255
-        |      WHEN 1 THEN (GREATEST(0, LEAST(255,
-        |        CAST(floor(c0 + 1.772 * (c1 - 128) + 0.5) AS INTEGER))) * c3 + 127) // 255
-        |      ELSE ((255 - c2) * (255 - c3) + 127) // 255 END AS b
-        |  FROM d
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE 4 END AS n_comp,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h * r AS BIGINT) END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h * g AS BIGINT) END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h * b AS BIGINT) END AS sum_b,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE repeat(printf('%02x%02x%02x', r, g, b), 4) END AS thumb_hex
-        |FROM conv ORDER BY media_id""".stripMargin,
-
-    // mixed-audio sniff: identical sample recompute to the FLAC oracle
-    // with the format decided by doc_id%3 (0 wav / 1 flac / 2 raw text)
-    // and the corruption arm (doc_id%7=3) null for BOTH formats
-    "q_multimodal_audio_mixed" ->
-      (AudioMixedSampleCtes + """
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN fmt = 0 THEN 'wav' WHEN fmt = 1 THEN 'flac'
-        |       ELSE 'aiff' END AS format,
-        |  CASE WHEN bad THEN NULL ELSE ch END AS channels,
-        |  CASE WHEN bad THEN NULL ELSE bits END AS bits,
-        |  CASE WHEN bad THEN NULL ELSE nf END AS n_frames,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE coalesce(CAST(list_sum(c0) AS BIGINT), 0) END AS sum_c0,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE CAST(coalesce(list_max(list_transform(c0, v -> abs(v))), 0) AS INTEGER)
-        |  END AS peak_c0,
-        |  CASE WHEN bad OR ch = 1 THEN NULL
-        |       ELSE coalesce(CAST(list_sum(c1) AS BIGINT), 0) END AS sum_c1,
-        |  CASE WHEN bad OR ch = 1 THEN NULL
-        |       ELSE CAST(coalesce(list_max(list_transform(c1, v -> abs(v))), 0) AS INTEGER)
-        |  END AS peak_c1
-        |FROM s ORDER BY media_id""").stripMargin,
-
-    // audio fingerprint: the oracle recomputes the envelope positionally
-    // from the SAME codec-blind sample derivation (both formats are
-    // lossless) — 9 floor windows over the channel-summed mix, one bit
-    // per adjacent-window cross-multiplied mean comparison
-    "q_audio_fp" -> {
-      val winCols = (0 to 8).map(k =>
-        s"""coalesce(list_sum(list_transform(list_filter(range(0, nf),
-           |      f -> (f*9)//nf = $k), f -> abs(mix[CAST(f+1 AS INTEGER)]))), 0) AS s$k,
-           |    len(list_filter(range(0, nf), f -> (f*9)//nf = $k)) AS n$k""".stripMargin)
-        .mkString(",\n    ")
-      val bitTerms = (0 to 7).map(k =>
-        s"CASE WHEN s${k + 1} * n$k > s$k * n${k + 1} THEN ${1L << k} ELSE 0 END")
-        .mkString("\n    + ")
-      (AudioMixedSampleCtes + s"""
-        |, m AS (
-        |  SELECT media_id, fmt, nf, (bad OR nf < 9) AS bad,
-        |    CASE WHEN bad THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        c0[CAST(f+1 AS INTEGER)]
-        |        + CASE WHEN ch = 2 THEN c1[CAST(f+1 AS INTEGER)] ELSE 0 END) END AS mix
-        |  FROM s
-        |), w AS (
-        |  SELECT media_id, fmt, nf, bad,
-        |    $winCols
-        |  FROM m
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN fmt = 0 THEN 'wav' WHEN fmt = 1 THEN 'flac'
-        |       ELSE 'aiff' END AS format,
-        |  CASE WHEN bad THEN NULL ELSE nf END AS n_frames,
-        |  CASE WHEN bad THEN NULL ELSE CAST($bitTerms AS BIGINT) END AS fp
-        |FROM w ORDER BY media_id""").stripMargin
-    },
-
-    // audio near-dup pairs: the oracle RE-MINES from scratch — rebuilds
-    // both clips' samples per doc (base + one-sample-bumped copy; the
-    // codecs are lossless so the derivation is codec-blind), computes
-    // every clip's 64 fingerprint bits via 65 floor-window envelopes,
-    // derives the four 16-bit band keys, self-joins on (band, key), and
-    // applies the popcount filter — the q_image_dhash_dup shape in 1-D
-    "q_audio_fp_dup" ->
-      """WITH docs2 AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 100 + 130 AS INTEGER) AS L,
-        |    substr(repeat(md5(text), 8), 1,
-        |      CAST(doc_id % 100 + 130 AS INTEGER)) AS px0,
-        |    CAST(doc_id % (doc_id % 100 + 130) AS INTEGER) AS p,
-        |    doc_id % 5 = 4 AS bad
-        |  FROM documents
-        |), clips AS (
-        |  SELECT doc_id * 2 + v AS media_id, L, v, p, px0
-        |  FROM docs2, (SELECT unnest([0, 1]) AS v)
-        |  WHERE NOT bad
-        |), wins AS (
-        |  SELECT media_id, k, CAST(SUM(a) AS BIGINT) AS s, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM (
-        |    SELECT media_id, (f * 65) // L AS k,
-        |      abs(ascii(substr(px0, CAST(f+1 AS INTEGER), 1)) - 128
-        |          + CASE WHEN v = 1 AND f = p THEN 1 ELSE 0 END) AS a
-        |    FROM (SELECT media_id, L, v, p, px0,
-        |            unnest(range(0, CAST(L AS BIGINT))) AS f
-        |          FROM clips))
-        |  GROUP BY media_id, k
-        |), arrs AS (
-        |  SELECT media_id, list(s ORDER BY k) AS ss, list(n ORDER BY k) AS nn
-        |  FROM wins GROUP BY media_id
-        |), bits AS (
-        |  SELECT media_id, list_transform(range(0, 64), i ->
-        |    CASE WHEN ss[CAST(i+2 AS INTEGER)] * nn[CAST(i+1 AS INTEGER)]
-        |            > ss[CAST(i+1 AS INTEGER)] * nn[CAST(i+2 AS INTEGER)]
-        |         THEN 1 ELSE 0 END) AS b
-        |  FROM arrs
-        |), bands AS (
-        |  SELECT media_id, k, b,
-        |    list_sum(list_transform(range(0, 16), j ->
-        |      b[CAST(16*k + j + 1 AS INTEGER)] * (1 << CAST(j AS INTEGER)))) AS key
-        |  FROM bits, (SELECT unnest(range(0, 4)) AS k)
-        |), cand AS (
-        |  SELECT DISTINCT a.media_id AS id_a, b2.media_id AS id_b,
-        |    a.b AS ba, b2.b AS bb
-        |  FROM bands a JOIN bands b2
-        |    ON a.k = b2.k AND a.key = b2.key AND a.media_id < b2.media_id
-        |)
-        |SELECT id_a, id_b, hamming FROM (
-        |  SELECT id_a, id_b,
-        |    CAST(list_sum(list_transform(range(0, 64), i ->
-        |      abs(ba[CAST(i+1 AS INTEGER)] - bb[CAST(i+1 AS INTEGER)]))) AS INTEGER)
-        |      AS hamming
-        |  FROM cand)
-        |WHERE hamming <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-
-    // FLAC decode: LOSSLESS, so the oracle recomputes the exact samples
-    // from text positions (the q_multimodal_pcm convention — channel c
-    // of frame f at byte offset f*bpf + c*(bits/8); 16-bit signed LE,
-    // 8-bit byte-128); the Rice/LPC/CRC machinery in between is the
-    // engine's own, pinned on hand-built fixtures in FlacDecodeSpec
-    "q_multimodal_flac" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id, text,
-        |    CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |    CAST(CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |              WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END AS INTEGER) AS bits,
-        |    (doc_id % 2 + 1) *
-        |      (CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |            WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END) // 8 AS bpf,
-        |    doc_id % 3 = 2 OR doc_id % 7 = 3 AS bad
-        |  FROM documents
-        |), d2 AS (
-        |  SELECT media_id, text, ch, bits, bpf,
-        |    CAST(length(text) // bpf AS BIGINT) AS nf,
-        |    (bad OR length(text) // bpf = 0) AS bad
-        |  FROM d
-        |), s AS (
-        |  SELECT media_id, ch, bits, nf, bad,
-        |    CASE WHEN bad THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        CASE bits
-        |          WHEN 8 THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1)) - 128
-        |          WHEN 16 THEN CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) >= 32768
-        |            THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) - 65536
-        |            ELSE ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) END
-        |          ELSE CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) >= 8388608
-        |            THEN ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) - 16777216
-        |            ELSE ascii(substr(text, CAST(f*bpf+1 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1)) END
-        |        END) END AS c0,
-        |    CASE WHEN bad OR ch = 1 THEN NULL
-        |      ELSE list_transform(range(0, nf), f ->
-        |        CASE bits
-        |          WHEN 8 THEN ascii(substr(text, CAST(f*bpf+2 AS INTEGER), 1)) - 128
-        |          WHEN 16 THEN CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) >= 32768
-        |            THEN ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) - 65536
-        |            ELSE ascii(substr(text, CAST(f*bpf+3 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1)) END
-        |          ELSE CASE WHEN
-        |              ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) >= 8388608
-        |            THEN ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) - 16777216
-        |            ELSE ascii(substr(text, CAST(f*bpf+4 AS INTEGER), 1))
-        |              + 256 * ascii(substr(text, CAST(f*bpf+5 AS INTEGER), 1))
-        |              + 65536 * ascii(substr(text, CAST(f*bpf+6 AS INTEGER), 1)) END
-        |        END) END AS c1
-        |  FROM d2
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE ch END AS channels,
-        |  CASE WHEN bad THEN NULL ELSE bits END AS bits,
-        |  CASE WHEN bad THEN NULL ELSE nf END AS n_frames,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE coalesce(CAST(list_sum(c0) AS BIGINT), 0) END AS sum_c0,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE CAST(coalesce(list_max(list_transform(c0, v -> abs(v))), 0) AS INTEGER)
-        |  END AS peak_c0,
-        |  CASE WHEN bad OR ch = 1 THEN NULL
-        |       ELSE coalesce(CAST(list_sum(c1) AS BIGINT), 0) END AS sum_c1,
-        |  CASE WHEN bad OR ch = 1 THEN NULL
-        |       ELSE CAST(coalesce(list_max(list_transform(c1, v -> abs(v))), 0) AS INTEGER)
-        |  END AS peak_c1
-        |FROM s ORDER BY media_id""".stripMargin,
-
-    // PNG write path: encode(P6) then decode — the oracle recomputes the
-    // P6 raster statistics positionally (the q_multimodal_pixels oracle
-    // with the PNG decode's color_type field; the bytes in between are
-    // the engine's own, proven against javax.imageio in the spec)
-    "q_multimodal_png_write" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px,
-        |    (doc_id % 3 = 2 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE 2 END AS color_type,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 2 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 3 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        flatten(list_transform([0, 1], tx ->
-        |          list_transform([0, 1, 2], ch ->
-        |            3 * (((ty * h) // 2) * w + (tx * w) // 2) + ch + 1))))),
-        |      pos -> printf('%02x', ascii(substr(px, CAST(pos AS INTEGER), 1)))),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // PNG decode: the encoder (javax.imageio) and decoder (the repo's
-    // Inflater+unfilter kernel) are independent implementations; the
-    // oracle never touches the PNG bytes — it recomputes the raster
-    // statistics POSITIONALLY from the same fields the generator derives
-    // the raster from (the q_multimodal_pixels convention, with bpp 3/4
-    // by color type). channel c of pixel i sits at 1-based hex offset
-    // bpp*i + c + 1; thumb pixel (ty,tx) samples row (ty*h)//2,
-    // col (tx*w)//2, RGB channels only
-    "q_multimodal_png" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    CAST(CASE WHEN doc_id % 2 = 1 THEN 4 ELSE 3 END AS INTEGER) AS bpp,
-        |    substr(repeat(md5(text), 7), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2)
-        |           * (CASE WHEN doc_id % 2 = 1 THEN 4 ELSE 3 END) AS INTEGER)) AS px,
-        |    (doc_id % 3 = 2 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE CASE WHEN bpp = 4 THEN 6 ELSE 2 END END AS color_type,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(bpp * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(bpp * i + 2 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(bpp * i + 3 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad OR bpp = 3 THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(bpp * i + 4 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_a,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        flatten(list_transform([0, 1], tx ->
-        |          list_transform([0, 1, 2], ch ->
-        |            bpp * (((ty * h) // 2) * w + (tx * w) // 2) + ch + 1))))),
-        |      pos -> printf('%02x', ascii(substr(px, CAST(pos AS INTEGER), 1)))),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // PNG palette/gray/gray+alpha decode: same positional-recompute
-    // convention as q_multimodal_png — raster samples are ASCII md5 hex;
-    // palette rows (v=0) read them as INDICES into the shared formula
-    // palette entry j = ((j*7+13)%256, (j*11+5)%256, (j*3+77)%256); gray
-    // rows (v=1) as gray samples (r=g=b); gray+alpha rows (v=2) as
-    // interleaved (gray, alpha) pairs. The oracle never touches the PNG
-    // bytes
-    "q_multimodal_png_palette" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    CAST(doc_id % 4 AS INTEGER) AS v,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2)
-        |           * (CASE WHEN doc_id % 4 = 2 THEN 2 ELSE 1 END) AS INTEGER)) AS px,
-        |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL
-        |       ELSE CASE v WHEN 0 THEN 3 WHEN 2 THEN 4 ELSE 0 END END AS color_type,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN v = 0 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 7 + 13) % 256)) AS BIGINT)
-        |       WHEN v = 1 OR v = 3 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(2 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN v = 0 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 11 + 5) % 256)) AS BIGINT)
-        |       WHEN v = 1 OR v = 3 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(2 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN v = 0 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 3 + 77) % 256)) AS BIGINT)
-        |       WHEN v = 1 OR v = 3 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(2 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad OR v <> 2 THEN NULL
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px, CAST(2 * i + 2 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_a,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-        |      pi -> CASE
-        |        WHEN v = 0 THEN printf('%02x%02x%02x',
-        |          (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 7 + 13) % 256,
-        |          (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 11 + 5) % 256,
-        |          (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 3 + 77) % 256)
-        |        WHEN v = 1 OR v = 3 THEN printf('%02x%02x%02x',
-        |          ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)),
-        |          ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)),
-        |          ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)))
-        |        ELSE printf('%02x%02x%02x',
-        |          ascii(substr(px, CAST(2 * pi + 1 AS INTEGER), 1)),
-        |          ascii(substr(px, CAST(2 * pi + 1 AS INTEGER), 1)),
-        |          ascii(substr(px, CAST(2 * pi + 1 AS INTEGER), 1)))
-        |      END),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // GIF decode: positional recompute over the palette-index raster —
-    // the palette arm of the PNG-palette oracle (indices through the
-    // shared (j·7+13, j·11+5, j·3+77) mod 256 colormap); gct_size is the
-    // writer's constant 256-entry table; bad rows (raw text / truncated
-    // LZW) → null
-    "q_multimodal_gif" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) AS INTEGER)) AS px,
-        |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(256 AS INTEGER) END AS gct_size,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 7 + 13) % 256)) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 11 + 5) % 256)) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 3 + 77) % 256)) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-        |      pi -> printf('%02x%02x%02x',
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 7 + 13) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 11 + 5) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 3 + 77) % 256)),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // animated GIF: frames 0 and 2 of the 3-frame sequence are sampled
-    // (every=2); each is a full-size raster whose indices are the f-th
-    // w·h slice of the repeated md5 hex — positional palette recompute
-    // summed over the sampled frames, thumb from the last one
-    "q_multimodal_gif_anim" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px,
-        |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(3 AS BIGINT) END AS n_frames,
-        |  CASE WHEN bad THEN NULL ELSE CAST(2 AS BIGINT) END AS n_sampled,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    flatten([range(0, CAST(w * h AS BIGINT)),
-        |             range(CAST(2 * w * h AS BIGINT), CAST(3 * w * h AS BIGINT))]),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 7 + 13) % 256)) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    flatten([range(0, CAST(w * h AS BIGINT)),
-        |             range(CAST(2 * w * h AS BIGINT), CAST(3 * w * h AS BIGINT))]),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 11 + 5) % 256)) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    flatten([range(0, CAST(w * h AS BIGINT)),
-        |             range(CAST(2 * w * h AS BIGINT), CAST(3 * w * h AS BIGINT))]),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 3 + 77) % 256)) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        list_transform([0, 1], tx ->
-        |          2 * w * h + ((ty * h) // 2) * w + (tx * w) // 2))),
-        |      pi -> printf('%02x%02x%02x',
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 7 + 13) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 11 + 5) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 3 + 77) % 256)),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // palette BMP: the GIF gate's positional palette recompute (px chars
-    // are indices into the shared formula colormap), BMP row mix
-    "q_multimodal_bmp_palette" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) AS INTEGER)) AS px,
-        |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 7 + 13) % 256)) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 11 + 5) % 256)) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 3 + 77) % 256)) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-        |      pi -> printf('%02x%02x%02x',
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 7 + 13) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 11 + 5) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 3 + 77) % 256)),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // BMP decode: positional recompute over the RGB raster convention
-    // (px chars consumed 3 per pixel — the mediaTablePng arm)
-    "q_multimodal_bmp" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 7), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px,
-        |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 2 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 3 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-        |      pi -> printf('%02x%02x%02x',
-        |        ascii(substr(px, CAST(3 * pi + 1 AS INTEGER), 1)),
-        |        ascii(substr(px, CAST(3 * pi + 2 AS INTEGER), 1)),
-        |        ascii(substr(px, CAST(3 * pi + 3 AS INTEGER), 1)))),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // GIF encode: decode-of-encode over the palette-exact P6 table —
-    // identical positional recompute to the gif decode oracle (the px
-    // chars ARE the indices), minus gct_size (the composition's internal)
-    "q_multimodal_gif_write" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) AS INTEGER)) AS px,
-        |    (doc_id % 5 = 4 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 7 + 13) % 256)) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 11 + 5) % 256)) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> (ascii(substr(px, CAST(i + 1 AS INTEGER), 1)) * 3 + 77) % 256)) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-        |      pi -> printf('%02x%02x%02x',
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 7 + 13) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 11 + 5) % 256,
-        |        (ascii(substr(px, CAST(pi + 1 AS INTEGER), 1)) * 3 + 77) % 256)),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // JPEG tolerance gate: geometry is exact (dimensions survive lossy
-    // encode) and recomputes from the same fields; the in-band booleans
-    // are pinned TRUE for good rows — the Spark side computes them by
-    // comparing the javax.imageio decode against the pre-encode raster,
-    // so a decoder drifting out of band (or a channel-order/geometry
-    // bug) flips a boolean and fails the hash. Exact pixel values are
-    // spec-only by the codec's nature (implementation-defined IDCT)
-    "q_multimodal_jpeg" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 9 + 8 AS INTEGER) AS w,
-        |    CAST(n_chars % 7 + 8 AS INTEGER) AS h,
-        |    (doc_id % 3 = 2 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_r,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_g,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_b,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_mae
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // EXIF fields recomputed straight from document columns — the
-    // payload's APP1 bytes were ASSEMBLED from the same expressions
-    "q_multimodal_exif" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 3 = 2 THEN NULL
-        |       ELSE CAST(doc_id % 8 + 1 AS INTEGER) END AS orientation,
-        |  CASE WHEN doc_id % 3 = 2 THEN NULL
-        |       ELSE printf('2021:%02d:%02d 10:00:%02d',
-        |                   doc_id % 12 + 1, n_chars % 28 + 1, doc_id % 60)
-        |  END AS datetime,
-        |  CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 'cam_' || source END AS make,
-        |  CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 'mx_' || lang END AS model
-        |FROM documents
-        |ORDER BY media_id""".stripMargin,
-
-    // orientation-applied decode: geometry and orientation recompute
-    // straight from document columns (the upright dims are the
-    // generated formulas — a kernel that skips the rotation reports
-    // SWAPPED dims for orientations 5..8 and fails the hash); the
-    // positional bands are pinned TRUE for good rows
-    "q_multimodal_oriented" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 9 + 24 AS INTEGER) AS w,
-        |    CAST(n_chars % 7 + 24 AS INTEGER) AS h,
-        |    CASE WHEN doc_id % 3 = 2 THEN 1
-        |         ELSE CAST(doc_id % 8 + 1 AS INTEGER) END AS orient,
-        |    (doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE orient END AS orientation,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS thumb_ok,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_mae
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // identical band-pinning shape over the progressive streams — same
-    // geometry, same bands (quantization tables are the same at the
-    // shared quality; only the scan structure differs)
-    "q_multimodal_jpeg_prog" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 9 + 8 AS INTEGER) AS w,
-        |    CAST(n_chars % 7 + 8 AS INTEGER) AS h,
-        |    (doc_id % 3 = 2 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_r,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_g,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_b,
-        |  CASE WHEN bad THEN NULL ELSE 1 END AS in_band_mae
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // P6 decode: the raster is ASCII md5-hex, so the oracle recomputes
-    // sums and the 2x2 nearest-neighbor thumb POSITIONALLY from the same
-    // fields — channel c at 1-based offset 3*i + c + 1; thumb pixel
-    // (ty, tx) samples row (ty*h)//2, col (tx*w)//2
-    "q_multimodal_pixels" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px,
-        |    (doc_id % 3 = 2 OR doc_id % 7 = 3) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 2 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad THEN NULL ELSE CAST(list_sum(list_transform(
-        |    range(0, CAST(w * h AS BIGINT)),
-        |    i -> ascii(substr(px, CAST(3 * i + 3 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad THEN NULL ELSE list_aggregate(
-        |    list_transform(
-        |      flatten(list_transform([0, 1], ty ->
-        |        flatten(list_transform([0, 1], tx ->
-        |          list_transform([0, 1, 2], ch ->
-        |            3 * (((ty * h) // 2) * w + (tx * w) // 2) + ch + 1))))),
-        |      pos -> printf('%02x', ascii(substr(px, CAST(pos AS INTEGER), 1)))),
-        |    'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    "q_multimodal_meta" ->
-      """WITH m AS (
-        |  SELECT doc_id, source,
-        |         CAST((n_chars % 300) + 16 AS INTEGER) AS w,
-        |         CAST((doc_id % 240) + 16 AS INTEGER) AS h,
-        |         doc_id % 3 AS fmt, doc_id % 2 = 0 AS even,
-        |         encode(text) AS tb
-        |  FROM documents
-        |), p AS (
-        |  SELECT doc_id, source, w, h, fmt, even,
-        |    CASE
-        |      WHEN fmt = 0 THEN
-        |        unhex('89504E470D0A1A0A' || '0000000D49484452' ||
-        |              lpad(to_hex(w), 8, '0') || lpad(to_hex(h), 8, '0') ||
-        |              CASE WHEN even THEN '0802000000' ELSE '0806000000' END ||
-        |              '00000000') || tb
-        |      WHEN fmt = 1 THEN
-        |        unhex('FFD8FFE000104A46494600010100000100010000' ||
-        |              CASE WHEN even THEN 'FFC0001108' ELSE 'FFC0000B08' END ||
-        |              lpad(to_hex(h), 4, '0') || lpad(to_hex(w), 4, '0') ||
-        |              CASE WHEN even THEN '03011100021101031101' ELSE '01011100' END) || tb
-        |      ELSE tb
-        |    END AS pay
-        |  FROM m
-        |)
-        |SELECT doc_id AS media_id,
-        |       CAST(octet_length(pay) AS BIGINT) AS n_bytes,
-        |       substr(hex(pay), 1, 16) AS header_hex,
-        |       md5(hex(pay)) AS checksum,
-        |       CASE fmt WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'unknown' END AS format,
-        |       CASE WHEN fmt IN (0, 1) THEN w END AS width,
-        |       CASE WHEN fmt IN (0, 1) THEN h END AS height,
-        |       CASE WHEN fmt = 0 THEN (CASE WHEN even THEN 2 ELSE 6 END)
-        |            WHEN fmt = 1 THEN (CASE WHEN even THEN 3 ELSE 1 END) END AS color_type,
-        |       source AS origin
-        |FROM p
-        |ORDER BY media_id""".stripMargin,
-
-    // DECODE-BACKED mixed-corpus features: positional recompute per
-    // format over the established raster conventions — RGB (3 chars per
-    // pixel) for ppm/png/bmp, palette indices (1 char per pixel, the
-    // shared formula colormap) for gif, geometry-only for jpeg (sums are
-    // implementation-defined — banded in q_multimodal_jpeg), all-null
-    // for raw text and truncated containers. The oracle never touches
-    // the container bytes
-    "q_multimodal_features" ->
-      """WITH d AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 6 + 2 AS INTEGER) AS w,
-        |    CAST(n_chars % 5 + 2 AS INTEGER) AS h,
-        |    CAST(doc_id % 7 AS INTEGER) AS fmt,
-        |    -- JPEG rows carry an EXIF orientation cycling 1..8; the
-        |    -- ORIENTED sniff reports upright geometry: o >= 5 swaps w/h
-        |    CAST((doc_id // 6) % 8 + 1 AS INTEGER) AS o,
-        |    substr(repeat(md5(text), 7), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) * 3 AS INTEGER)) AS px3,
-        |    substr(repeat(md5(text), 5), 1,
-        |      CAST((doc_id % 6 + 2) * (n_chars % 5 + 2) AS INTEGER)) AS px1,
-        |    (doc_id % 13 = 3 OR doc_id % 7 = 5) AS bad
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE WHEN bad THEN NULL ELSE
-        |    CASE fmt WHEN 0 THEN
-        |               (CASE WHEN (media_id // 7) % 2 = 1 THEN 'tiff' ELSE 'ppm' END)
-        |             WHEN 1 THEN 'png' WHEN 2 THEN 'gif'
-        |             WHEN 3 THEN 'bmp' WHEN 4 THEN 'jpeg' WHEN 6 THEN 'webp' END
-        |  END AS format,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN fmt = 4 AND o >= 5 THEN h ELSE w END AS width,
-        |  CASE WHEN bad THEN NULL
-        |       WHEN fmt = 4 AND o >= 5 THEN w ELSE h END AS height,
-        |  CASE WHEN bad THEN NULL ELSE CAST(w * h AS BIGINT) END AS n_px,
-        |  CASE WHEN bad OR fmt = 4 THEN NULL
-        |       WHEN fmt = 2 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> (ascii(substr(px1, CAST(i + 1 AS INTEGER), 1)) * 7 + 13) % 256)) AS BIGINT)
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px3, CAST(3 * i + 1 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_r,
-        |  CASE WHEN bad OR fmt = 4 THEN NULL
-        |       WHEN fmt = 2 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> (ascii(substr(px1, CAST(i + 1 AS INTEGER), 1)) * 11 + 5) % 256)) AS BIGINT)
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px3, CAST(3 * i + 2 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_g,
-        |  CASE WHEN bad OR fmt = 4 THEN NULL
-        |       WHEN fmt = 2 THEN CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> (ascii(substr(px1, CAST(i + 1 AS INTEGER), 1)) * 3 + 77) % 256)) AS BIGINT)
-        |       ELSE CAST(list_sum(list_transform(
-        |         range(0, CAST(w * h AS BIGINT)),
-        |         i -> ascii(substr(px3, CAST(3 * i + 3 AS INTEGER), 1)))) AS BIGINT)
-        |  END AS sum_b,
-        |  CASE WHEN bad OR fmt = 4 THEN NULL
-        |       WHEN fmt = 2 THEN list_aggregate(
-        |         list_transform(
-        |           flatten(list_transform([0, 1], ty ->
-        |             list_transform([0, 1], tx -> ((ty * h) // 2) * w + (tx * w) // 2))),
-        |           pi -> printf('%02x%02x%02x',
-        |             (ascii(substr(px1, CAST(pi + 1 AS INTEGER), 1)) * 7 + 13) % 256,
-        |             (ascii(substr(px1, CAST(pi + 1 AS INTEGER), 1)) * 11 + 5) % 256,
-        |             (ascii(substr(px1, CAST(pi + 1 AS INTEGER), 1)) * 3 + 77) % 256)),
-        |         'string_agg', '')
-        |       ELSE list_aggregate(
-        |         list_transform(
-        |           flatten(list_transform([0, 1], ty ->
-        |             flatten(list_transform([0, 1], tx ->
-        |               list_transform([0, 1, 2], ch ->
-        |                 3 * (((ty * h) // 2) * w + (tx * w) // 2) + ch + 1))))),
-        |           pos -> printf('%02x', ascii(substr(px3, CAST(pos AS INTEGER), 1)))),
-        |         'string_agg', '')
-        |  END AS thumb_hex
-        |FROM d ORDER BY media_id""".stripMargin,
-
-    // byte statistics over the SAME deterministic blob reconstruction as
-    // q_multimodal_meta: n_bytes/byte_sum/head_byte derive from the hex
-    // form (one int per hex pair), so the Arrow-batched kernel's output
-    // is pinned cell-for-cell — no more rows-only entries
-    "q_multimodal_bytestats" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         CAST((n_chars % 300) + 16 AS INTEGER) AS w,
-        |         CAST((doc_id % 240) + 16 AS INTEGER) AS h,
-        |         doc_id % 3 AS fmt, doc_id % 2 = 0 AS even,
-        |         encode(text) AS tb
-        |  FROM documents
-        |), p AS (
-        |  SELECT doc_id,
-        |    CASE
-        |      WHEN fmt = 0 THEN
-        |        unhex('89504E470D0A1A0A' || '0000000D49484452' ||
-        |              lpad(to_hex(w), 8, '0') || lpad(to_hex(h), 8, '0') ||
-        |              CASE WHEN even THEN '0802000000' ELSE '0806000000' END ||
-        |              '00000000') || tb
-        |      WHEN fmt = 1 THEN
-        |        unhex('FFD8FFE000104A46494600010100000100010000' ||
-        |              CASE WHEN even THEN 'FFC0001108' ELSE 'FFC0000B08' END ||
-        |              lpad(to_hex(h), 4, '0') || lpad(to_hex(w), 4, '0') ||
-        |              CASE WHEN even THEN '03011100021101031101' ELSE '01011100' END) || tb
-        |      ELSE tb
-        |    END AS pay
-        |  FROM m
-        |)
-        |SELECT doc_id AS media_id,
-        |       CAST(octet_length(pay) AS INTEGER) AS n_bytes,
-        |       CAST(COALESCE(list_sum(list_transform(range(0, octet_length(pay)),
-        |         i -> CAST('0x' || substr(hex(pay), i * 2 + 1, 2) AS INTEGER))), 0) AS BIGINT)
-        |         AS byte_sum,
-        |       CASE WHEN octet_length(pay) = 0 THEN -1
-        |            ELSE CAST('0x' || substr(hex(pay), 1, 2) AS INTEGER)
-        |       END AS head_byte
-        |FROM p
-        |ORDER BY media_id""".stripMargin,
-
-    // the engine builds the RIFF container and parses it back; the oracle
-    // recomputes the expected parse from the same document fields (the
-    // byte-walk itself is unit-tested on handcrafted containers)
-    "q_multimodal_audio" ->
-      """WITH m AS (
-        |  SELECT doc_id, source,
-        |         CAST(1 + (doc_id % 2) AS INTEGER) AS ch,
-        |         CAST(CASE WHEN (doc_id // 2) % 3 = 0 THEN 16
-        |                   WHEN (doc_id // 2) % 3 = 1 THEN 8 ELSE 24 END AS INTEGER) AS bits,
-        |         CAST(8000 * (1 + (n_chars % 4)) AS INTEGER) AS rate,
-        |         octet_length(encode(text)) AS ds,
-        |         doc_id % 3 AS fmt
-        |  FROM documents
-        |), c AS (
-        |  SELECT *, rate * ((ch * bits) // 8) AS br FROM m
-        |)
-        |SELECT doc_id AS media_id,
-        |       CAST(CASE WHEN fmt = 2 THEN ds ELSE 44 + ds END AS BIGINT) AS n_bytes,
-        |       CASE WHEN fmt = 2 THEN 'unknown' ELSE 'wav' END AS format,
-        |       CASE WHEN fmt <> 2 THEN ch END AS channels,
-        |       CASE WHEN fmt <> 2 THEN rate END AS sample_rate,
-        |       CASE WHEN fmt <> 2 THEN bits END AS bits_per_sample,
-        |       CASE WHEN fmt <> 2 THEN CAST(floor(ds * 1000.0 / br) AS BIGINT) END AS duration_ms,
-        |       source AS origin
-        |FROM c ORDER BY media_id""".stripMargin,
-
-    // the oracle emits the generator's parameters; the gate PARSES the
-    // byte-exact container — a hash match proves the parser inverts the
-    // generator (the audio/image convention)
-    "q_multimodal_video" ->
-      """WITH m AS (
-        |  SELECT doc_id, source,
-        |         CAST((n_chars % 1280) + 16 AS INTEGER) AS w,
-        |         CAST((doc_id % 720) + 16 AS INTEGER) AS h,
-        |         CAST(n_chars * 3 AS BIGINT) AS dur,
-        |         octet_length(encode(text)) AS ds,
-        |         doc_id % 3 AS fmt,
-        |         CASE WHEN doc_id % 2 = 0 THEN 'isom' ELSE 'mp42' END AS brand
-        |  FROM documents
-        |)
-        |SELECT doc_id AS media_id,
-        |       CAST(CASE WHEN fmt = 1 THEN ds ELSE 16 + 216 + 8 + ds END AS BIGINT) AS n_bytes,
-        |       CASE WHEN fmt = 1 THEN 'unknown' ELSE 'mp4' END AS format,
-        |       CASE WHEN fmt <> 1 THEN brand END AS brand,
-        |       CASE WHEN fmt <> 1 THEN w END AS width,
-        |       CASE WHEN fmt <> 1 THEN h END AS height,
-        |       CASE WHEN fmt <> 1 THEN (dur * 1000) // 600 END AS duration_ms,
-        |       source AS origin
-        |FROM m ORDER BY media_id""".stripMargin,
-
-    // identical expression dag: quantized BIGINT window sums (exact),
-    // then mean/var/z as the same single-IEEE-op chain; sqrt is
-    // correctly rounded in both engines, so no rounding step is needed
-    "q_anomaly" ->
-      s"""WITH e AS (
-         |  SELECT stream_id, "timestamp", event_id, value,
-         |         CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS q
-         |  FROM ($OracleEvents)
-         |), w AS (
-         |  SELECT stream_id, "timestamp", event_id, value, q,
-         |         count(*) OVER win AS n,
-         |         CAST(sum(q) OVER win AS BIGINT) AS s1,
-         |         CAST(sum(q * q) OVER win AS BIGINT) AS s2
-         |  FROM e
-         |  WINDOW win AS (PARTITION BY stream_id ORDER BY "timestamp", event_id
-         |                 ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
-         |), z AS (
-         |  SELECT stream_id, "timestamp", event_id, value, n, q, s1, s2,
-         |         (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / (n - 1) AS var,
-         |         (CAST(q AS DOUBLE) - CAST(s1 AS DOUBLE) / n)
-         |           / sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / (n - 1)) AS zscore
-         |  FROM w
-         |)
-         |SELECT stream_id, "timestamp", event_id, value,
-         |       CAST(n AS BIGINT) AS n_history, zscore
-         |FROM z
-         |WHERE n >= 10 AND var > 0.0 AND abs(zscore) >= 2.5
-         |ORDER BY stream_id, "timestamp", event_id""".stripMargin,
-
-    "q_plateau" ->
-      s"""WITH e AS (
-         |  SELECT stream_id, "timestamp", event_id, value FROM ($OracleEvents)
-         |), q AS (
-         |  SELECT *, row_number() OVER (PARTITION BY stream_id
-         |                               ORDER BY "timestamp", event_id) AS rn
-         |  FROM e
-         |), f AS (
-         |  SELECT *, rn - row_number() OVER (PARTITION BY stream_id
-         |                                    ORDER BY "timestamp", event_id) AS isl
-         |  FROM q WHERE value >= 100.0
-         |)
-         |SELECT stream_id,
-         |       min("timestamp") AS t_start,
-         |       max("timestamp") AS t_end,
-         |       CAST(count(*) AS BIGINT) AS n_rows,
-         |       max(value) AS peak
-         |FROM f GROUP BY stream_id, isl
-         |HAVING count(*) >= 2
-         |ORDER BY stream_id, t_start""".stripMargin,
-
-    // the same scan identity: S = running sum of (q − k·quant), g = S −
-    // min(running-min S, 0); all BIGINT — g/quant is the only double
-    "q_cusum" ->
-      s"""WITH e AS (
-         |  SELECT stream_id, "timestamp", event_id, value,
-         |         CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS q
-         |  FROM ($OracleEvents)
-         |), w AS (
-         |  SELECT stream_id, "timestamp", event_id, value,
-         |         CAST(sum(q - 60000) OVER win AS BIGINT) AS s
-         |  FROM e
-         |  WINDOW win AS (PARTITION BY stream_id ORDER BY "timestamp", event_id
-         |                 ROWS UNBOUNDED PRECEDING)
-         |), g AS (
-         |  SELECT stream_id, "timestamp", event_id, value,
-         |         s - least(CAST(min(s) OVER win2 AS BIGINT), 0) AS gg
-         |  FROM w
-         |  WINDOW win2 AS (PARTITION BY stream_id ORDER BY "timestamp", event_id
-         |                  ROWS UNBOUNDED PRECEDING)
-         |)
-         |SELECT stream_id, "timestamp", event_id, value,
-         |       CAST(gg AS DOUBLE) / 1000.0 AS cusum
-         |FROM g WHERE gg >= 500000
-         |ORDER BY stream_id, "timestamp", event_id""".stripMargin,
-
-    // the fixed-point recursion replayed verbatim: state in scaled longs,
-    // each step exact integer muls + one half-up rounding floor-div —
-    // floorDiv(y, C) spelled portably as (y − pmod(y, C)) / C. The CTE
-    // iterates once per series position (depth = 120 by the input bound).
-    "q_hw" ->
-      s"""WITH RECURSIVE e AS (
-         |  SELECT stream_id, "timestamp", event_id, value,
-         |         CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS q,
-         |         row_number() OVER (PARTITION BY stream_id
-         |                            ORDER BY "timestamp", event_id) AS i
-         |  FROM ($OracleEvents) WHERE stream_id < 50
-         |), s AS (SELECT * FROM e WHERE i <= 120),
-         |rec AS (
-         |  SELECT stream_id, i, q AS level, CAST(0 AS BIGINT) AS trend,
-         |         CAST(1000 AS BIGINT) AS dev, CAST(1 AS BIGINT) AS n,
-         |         FALSE AS alarmed, CAST(NULL AS BIGINT) AS a_ts,
-         |         CAST(NULL AS BIGINT) AS a_eid, CAST(NULL AS DOUBLE) AS a_val,
-         |         CAST(NULL AS BIGINT) AS fq, CAST(NULL AS BIGINT) AS aq
-         |  FROM s WHERE i = 1
-         |  UNION ALL
-         |  SELECT stream_id, i, lvl2 AS level,
-         |         ((100 * (lvl2 - lvl) + 900 * tr) + 500
-         |          - (((((100 * (lvl2 - lvl) + 900 * tr) + 500) % 1000) + 1000) % 1000)) // 1000 AS trend,
-         |         ((300 * aerr + 700 * dv) + 500
-         |          - (((((300 * aerr + 700 * dv) + 500) % 1000) + 1000) % 1000)) // 1000 AS dev,
-         |         n + 1 AS n,
-         |         alarmed, a_ts, a_eid, a_val, fq, aq
-         |  FROM (
-         |    SELECT *,
-         |           ((300 * q + 700 * (lvl + tr)) + 500
-         |            - (((((300 * q + 700 * (lvl + tr)) + 500) % 1000) + 1000) % 1000)) // 1000 AS lvl2
-         |    FROM (
-         |      SELECT s.stream_id, s.i, rec.level AS lvl, rec.trend AS tr,
-         |             rec.dev AS dv, rec.n, s.q,
-         |             s."timestamp" AS a_ts, s.event_id AS a_eid, s.value AS a_val,
-         |             rec.level + rec.trend AS fq,
-         |             abs(s.q - (rec.level + rec.trend)) AS aerr,
-         |             abs(s.q - (rec.level + rec.trend)) AS aq,
-         |             (rec.n >= 10 AND abs(s.q - (rec.level + rec.trend)) * 1000
-         |                > 3000 * greatest(rec.dev, 1000)) AS alarmed
-         |      FROM rec JOIN s ON s.stream_id = rec.stream_id AND s.i = rec.i + 1
-         |    )
-         |  )
-         |)
-         |SELECT stream_id, a_ts AS "timestamp", a_eid AS event_id, a_val AS value,
-         |       fq AS forecast_q, aq AS deviation_q
-         |FROM rec WHERE alarmed
-         |ORDER BY stream_id, "timestamp", event_id""".stripMargin,
-
-    "q_asof_join" ->
-      s"""WITH ev AS (
-         |  SELECT * FROM ($oracleEventsWindow)
-         |), clicks AS (
-         |  SELECT stream_id, "timestamp", event_id, value
-         |  FROM ev WHERE event_type = 'click'
-         |), purchases AS (
-         |  SELECT stream_id, "timestamp", value AS purchase_value FROM (
-         |    SELECT stream_id, "timestamp", value,
-         |           row_number() OVER (PARTITION BY stream_id, "timestamp"
-         |                              ORDER BY event_id DESC) AS rn
-         |    FROM ev WHERE event_type = 'purchase') WHERE rn = 1
-         |)
-         |SELECT c.stream_id, c."timestamp", c.event_id, c.value,
-         |       p."timestamp" AS asof_timestamp,
-         |       p.purchase_value AS asof_purchase_value
-         |FROM clicks c ASOF JOIN purchases p
-         |  ON c.stream_id = p.stream_id AND c."timestamp" >= p."timestamp"
-         |ORDER BY c.stream_id, c."timestamp", c.event_id""".stripMargin,
-
-    // the custom physical operator must match the exact same oracle
-    "q_asof_native" ->
-      s"""WITH ev AS (
-         |  SELECT * FROM ($oracleEventsWindow)
-         |), clicks AS (
-         |  SELECT stream_id, "timestamp", event_id, value
-         |  FROM ev WHERE event_type = 'click'
-         |), purchases AS (
-         |  SELECT stream_id, "timestamp", value AS purchase_value FROM (
-         |    SELECT stream_id, "timestamp", value,
-         |           row_number() OVER (PARTITION BY stream_id, "timestamp"
-         |                              ORDER BY event_id DESC) AS rn
-         |    FROM ev WHERE event_type = 'purchase') WHERE rn = 1
-         |)
-         |SELECT c.stream_id, c."timestamp", c.event_id, c.value,
-         |       p."timestamp" AS asof_timestamp,
-         |       p.purchase_value AS asof_purchase_value
-         |FROM clicks c ASOF JOIN purchases p
-         |  ON c.stream_id = p.stream_id AND c."timestamp" >= p."timestamp"
-         |ORDER BY c.stream_id, c."timestamp", c.event_id""".stripMargin,
-
-    "q_sessionize" ->
-      s"""WITH e AS (
-         |  SELECT stream_id, "timestamp", event_id FROM ($oracleEventsWindow)
-         |), d AS (
-         |  SELECT stream_id, "timestamp", event_id,
-         |         lag("timestamp") OVER w AS prev
-         |  FROM e WINDOW w AS (PARTITION BY stream_id ORDER BY "timestamp", event_id)
-         |), s AS (
-         |  SELECT stream_id, "timestamp", event_id,
-         |         CAST(sum(CASE WHEN prev IS NULL OR "timestamp" - prev > 1800
-         |                       THEN 1 ELSE 0 END)
-         |              OVER (PARTITION BY stream_id ORDER BY "timestamp", event_id
-         |                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-         |  FROM d
-         |)
-         |SELECT stream_id, session_id, count(*) AS n_events,
-         |       min("timestamp") AS t_start, max("timestamp") AS t_end,
-         |       max("timestamp") - min("timestamp") AS duration
-         |FROM s GROUP BY 1, 2 ORDER BY stream_id, session_id""".stripMargin
-  )
 }

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's query result → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -33,7 +33,7 @@ object Verify {
     schema.fields.collect { case f if complex(f.dataType) => f.name }.toSeq
   }
 
-  /** Dump every declared query (or the `only` subset) to `outDir`.
+  /** Dump every gate's query result (or the `only` subset) to `outDir`.
     *
     * A failed query must leave a VISIBLE artifact: its result dir contains
     * only `_ERROR.txt` (unreadable as parquet → the driver records an `err`
@@ -41,35 +41,32 @@ object Verify {
     * silent-skip shrank the correctness file 62→41 entries with zero err
     * rows. Returns the error map so callers (and the spec) can assert on it.
     *
-    * Hash-gated queries (those with an `oracleSql` entry) are additionally
-    * schema-checked at dump time: an array/map/struct column would pass
-    * every local stage and die only in the driver's row sort, so it is
-    * rejected HERE with a prescriptive message (round 9's only red rows).
+    * Every gate is hash-compared, so every result is also schema-checked
+    * at dump time: an array/map/struct column would pass every local stage
+    * and die only in the driver's row sort, so it is rejected HERE with a
+    * prescriptive message (round 9's only red rows).
     */
   private[graft] def dump(
       spark: SparkSession,
       sfDir: String,
       outDir: String,
       only: Set[String] = Set.empty,
-      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-        SparkEntry.queries,
-      gated: Set[String] = SparkEntry.oracleSql.keySet): Map[String, String] = {
+      gates: Seq[graft.gates.Gate] = SparkEntry.gates): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    gates
+      .filter(g => only.isEmpty || only(g.name))
+      .foreach { g =>
+      val name = g.name
       try {
-        val df = fn(spark, sfDir)
-        if (gated(name)) {
-          val bad = unsortableCols(df.schema)
-          if (bad.nonEmpty) throw new IllegalStateException(
-            s"gated output has unsortable column(s) ${bad.mkString(", ")}: " +
-              "the driver's comparator row-sorts raw cells and crashes on " +
-              "array/map/struct values — pivot them to scalar columns in " +
-              "the gate lambda (see SparkEntry.pivotSmokeGrid / q_smoke) " +
-              "and mirror the pivot in oracleSql")
-        }
+        val df = g.query(spark, sfDir)
+        val bad = unsortableCols(df.schema)
+        if (bad.nonEmpty) throw new IllegalStateException(
+          s"gated output has unsortable column(s) ${bad.mkString(", ")}: " +
+            "the driver's comparator row-sorts raw cells and crashes on " +
+            "array/map/struct values — pivot them to scalar columns in " +
+            "the gate's query (see SeriesGates.pivotSmokeGrid / q_smoke) " +
+            "and mirror the pivot in its oracle")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
@@ -100,7 +97,7 @@ object Verify {
     val spark = graft.core.Sessions.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val errors = dump(spark, sfDir, outDir, only)
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql(spark, sfDir)
       .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

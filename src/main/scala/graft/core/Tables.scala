@@ -141,7 +141,7 @@ object Tables {
     // width-pinning casts (no-ops today, elided by SimplifyCasts): if a
     // future corpus refresh narrows the integer ids to int32 or value to
     // float32, the engine contract stays (BIGINT ids, DOUBLE value) — the
-    // oracle view applies the same casts (SparkEntry.OracleEvents)
+    // oracle view applies the same casts (SeriesGates.OracleEvents)
     // event_id (unique) as the spread key: measured better than
     // stream-keyed spreading (tier builds +0.9 s under stream keying at
     // sf0.1 — 1500 streams hash unevenly into 32 partitions, and the

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.gates.Gate
 
 /** The round-8 lesson, pinned: a deliberately broken query must surface as
   * a VISIBLE error in every harness artifact — never as a missing row
@@ -11,13 +11,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class HarnessSpec extends SparkSpec {
 
-  private val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ok" -> ((s, dir) => core.Tables.region(s, dir).select("r_regionkey", "r_name")),
-    "q_broken" -> ((s, _) => s.read.parquet("/nonexistent/graft_broken.parquet")))
+  private val harnessGates = Seq(
+    Gate("q_ok", (s, dir) => core.Tables.region(s, dir).select("r_regionkey", "r_name"),
+      "SELECT r_regionkey, r_name FROM region"),
+    Gate("q_broken", (s, _) => s.read.parquet("/nonexistent/graft_broken.parquet"),
+      "SELECT 1"))
+  private val queries = harnessGates.map(g => g.name -> g.query)
 
   test("Verify: broken query leaves _ERROR.txt marker + errors.json entry") {
     val out = Files.createTempDirectory("graft_harness").toString
-    val errors = Verify.dump(spark, sf("sf0.001"), out, queries = queries)
+    val errors = Verify.dump(spark, sf("sf0.001"), out, gates = harnessGates)
 
     assert(errors.keySet === Set("q_broken"))
     // the good query still dumps normally
@@ -37,28 +40,21 @@ class HarnessSpec extends SparkSpec {
     // stage and dies in the driver's pandas row-sort — so the dump itself
     // must refuse the shape, loudly and prescriptively
     import org.apache.spark.sql.functions._
-    val qs: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "q_arr" -> ((s, dir) =>
-        core.Tables.region(s, dir).select(col("r_regionkey"),
-          array(col("r_regionkey"), col("r_regionkey")).as("grid"))),
-      "q_arr_ungated" -> ((s, dir) =>
-        core.Tables.region(s, dir).select(col("r_regionkey"),
-          array(col("r_regionkey")).as("grid"))))
+    val arr = Gate("q_arr", (s, dir) =>
+      core.Tables.region(s, dir).select(col("r_regionkey"),
+        array(col("r_regionkey"), col("r_regionkey")).as("grid")),
+      "SELECT r_regionkey, [r_regionkey, r_regionkey] AS grid FROM region")
     val out = Files.createTempDirectory("graft_harness_arr").toString
-    val errors = Verify.dump(spark, sf("sf0.001"), out, queries = qs,
-      gated = Set("q_arr"))
+    val errors = Verify.dump(spark, sf("sf0.001"), out, gates = Seq(arr))
 
     assert(errors.keySet === Set("q_arr"))
     assert(errors("q_arr").contains("unsortable column(s) grid"))
     assert(errors("q_arr").contains("pivot"))
     assert(Files.exists(Paths.get(s"$out/q_arr/_ERROR.txt")))
-    // rows-only queries may keep arrays — the driver never row-sorts them
-    assert(new java.io.File(s"$out/q_arr_ungated").listFiles
-      .exists(_.getName.endsWith(".parquet")))
   }
 
   test("Bench: broken query lands in the errors map, not the timings") {
-    val (results, errors) = Bench.run(spark, sf("sf0.001"), queries.toSeq.sortBy(_._1))
+    val (results, errors) = Bench.run(spark, sf("sf0.001"), queries.sortBy(_._1))
 
     assert(results.map(_._1) === Seq("q_ok"))
     assert(errors.keySet === Set("q_broken"))
